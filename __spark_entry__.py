@@ -204,15 +204,11 @@ _FORCE_RECHECK = {  # key -> round whose green is void
     # accessor, _bmw_cand split into _blocked_postings/_bmw_filter,
     # and stream_ann_route_pq's index accessor moved to the bucketed
     # catalog table. All nine are tier-1-forced (window: 6 new + 9
-    # forced + the full 32-key r10 cohort + 3 = 50).
-    "rag_topk_retrieval_wand": 14,
-    "rag_topk_retrieval_wand_bm25": 14,
-    "rag_topk_retrieval_wand_multi": 14,
-    "rag_topk_retrieval_bmw": 14,
+    # forced + the full 32-key r10 cohort + 3 = 50). The five WAND/BMW
+    # entries moved to the r16 block below.
     "rag_topk_from_index": 14,
     "rag_manifest_delta": 14,
     "rag_index_delta": 14,
-    "rag_wand_from_index": 14,
     "stream_ann_route_pq": 14,
     # r15 OPTIMIZATION round: operator internals rewritten for
     # performance with results proven oracle-identical in-session
@@ -255,6 +251,22 @@ _FORCE_RECHECK = {  # key -> round whose green is void
     "similarity_ivf": 10,
     "embedding_pq": 11,
     "similarity_ivf_pq": 12,
+    # r16 snapshot: the WAND/BMW candidate-broadcast guard, the on-disk
+    # BM25 meta table and the generational stream_index_delta append
+    # landed after these keys' r15 greens (dedup_embedding_ann: the
+    # trainer-frame reuse, after its r13 green). All ten re-verified
+    # oracle-identical at sf0.01 with tools/verify_oracle.py; forced so
+    # the oracle gate re-proves them on the code that ships.
+    "dedup_embedding_ann": 13,
+    "rag_topk_retrieval_wand": 15,
+    "rag_topk_retrieval_wand_bm25": 15,
+    "rag_topk_retrieval_wand_multi": 15,
+    "rag_topk_retrieval_bmw": 15,
+    "rag_wand_from_index": 15,
+    "rag_bm25_from_index": 15,
+    "rag_bmw_from_index": 15,
+    "rag_bm25_index_delta": 15,
+    "stream_index_delta": 15,
 }
 
 

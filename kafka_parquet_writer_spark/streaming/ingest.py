@@ -7,7 +7,7 @@ kafka/reader/KafkaProtoParquetWriter.java unless noted):
 | Reference behavior | Cite | Here |
 |---|---|---|
 | Kafka source, byte values, manual offsets | :156-166 | `readStream.format("kafka")` (offsets via checkpoint) |
-| proto parse per record | :269-277 | pluggable `decoder` (from_protobuf / wire-format mapInPandas) |
+| proto parse per record | :269-277 | pluggable `decoder` (from_protobuf / wire-format `mapInArrow`: each Arrow batch framed columnar) |
 | rotate by size (1 GiB default) | :282-310 | `maxRecordsPerFile` (records ≈ bytes/avg-row; documented approximation) |
 | rotate by open time (900 s) | :257-302 | `trigger(processingTime=...)` — a micro-batch closes its files |
 | date-dir layout `yyyy/dd` of finalize time | :362-380 | `partitionBy(year,month,...)` Hive-style from event or processing time |
@@ -257,10 +257,16 @@ class IngestMetrics:
     the reference's ``getWrittenRecords()`` getter (:199-211). With a
     ``target_dir``, also tracks the size of every committed parquet
     file — the reference's closed-file-size ``Histogram``
-    (:110-121,146-154) — exposed via ``file_size_histogram()``.
+    (:110-121,146-154) — exposed via ``file_size_histogram()``. Sizes
+    come from the sink's own commit log, so a progress event reads only
+    the log entries of the batches committed since the last one: its
+    cost does not grow with the table, and files the sink never
+    committed are not counted.
     """
 
     def __init__(self, spark: SparkSession, target_dir: str | None = None) -> None:
+        import threading
+
         from pyspark.sql.streaming import StreamingQueryListener
 
         metrics = self
@@ -285,32 +291,62 @@ class IngestMetrics:
         self.batches = 0
         self.target_dir = target_dir
         self.file_sizes: list[int] = []
-        self._seen: set[str] = set()
+        #: next sink-log batch to read (None until the log exists) and
+        #: the number of log entries read so far
+        self._next_batch: int | None = None
+        self._log_entries = 0
+        self._lock = threading.Lock()
         self._listener = _L()
         spark.streams.addListener(self._listener)
 
     def _scan_files(self) -> None:
-        """Record sizes of newly committed data files under target_dir.
-        Also invoked lazily by file_size_histogram(), so readers never
-        race the (async) listener thread for the final batch."""
+        """Record sizes of newly committed data files from the sink's
+        ``_spark_metadata`` log: one file per batch (``<batchId>``), and
+        every compaction interval a ``<batchId>.compact`` holding all
+        entries up to that batch, the batch's own last. Also invoked
+        lazily by file_size_histogram(), so readers never race the
+        (async) listener thread for the final batch."""
         if not self.target_dir:
             return
+        import json
         import os
 
-        for root, dirs, files in os.walk(self.target_dir):
-            # _spark_metadata holds the commit log, not data files
-            dirs[:] = [d for d in dirs if not d.startswith("_")]
-            for name in files:
-                if name.startswith(("_", ".")):
-                    continue
-                path = os.path.join(root, name)
-                if path in self._seen:
-                    continue
-                self._seen.add(path)
-                try:
-                    self.file_sizes.append(os.path.getsize(path))
-                except OSError:
-                    pass
+        log = os.path.join(self.target_dir, "_spark_metadata")
+        with self._lock:
+            if self._next_batch is None:
+                # first read: the newest compaction already holds every
+                # earlier entry (older batch files may be cleaned up)
+                if not os.path.isdir(log):
+                    return
+                self._next_batch = max(
+                    (
+                        int(name[: -len(".compact")])
+                        for name in os.listdir(log)
+                        if name.endswith(".compact")
+                        and name[: -len(".compact")].isdigit()
+                    ),
+                    default=0,
+                )
+            while True:
+                path = os.path.join(log, str(self._next_batch))
+                # skip the version line, and in a compaction the
+                # entries already read from earlier batches
+                for name, skip in ((path, 1), (path + ".compact", 1 + self._log_entries)):
+                    try:
+                        with open(name) as f:
+                            lines = f.read().splitlines()[skip:]
+                        break
+                    except FileNotFoundError:
+                        continue
+                else:
+                    return
+                for line in lines:
+                    if line.strip():
+                        entry = json.loads(line)
+                        self._log_entries += 1
+                        if entry.get("action", "add") == "add" and not entry.get("isDir"):
+                            self.file_sizes.append(entry["size"])
+                self._next_batch += 1
 
     def file_size_histogram(self) -> dict[str, float]:
         """Dropwizard-Snapshot-shaped summary of committed file sizes."""

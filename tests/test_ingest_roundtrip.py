@@ -125,6 +125,98 @@ def test_metrics_file_size_histogram(spark, sf_dir):
         m.remove(spark)
 
 
+def test_metrics_read_the_commit_log_not_the_table(spark, sf_dir, monkeypatch):
+    """The file-size histogram counts only files the sink committed,
+    and a batch never lists the table or stats a data file: with 1000
+    uncommitted files pre-seeded in the target, none is counted or
+    touched (the per-batch cost must not grow with the table)."""
+    from kafka_parquet_writer_spark.streaming.ingest import IngestMetrics
+
+    cfg = _cfg(spark, sf_dir)
+    seeded = set()
+    for i in range(1000):
+        d = os.path.join(cfg.target_dir, f"seed={i % 10}")
+        os.makedirs(d, exist_ok=True)
+        path = os.path.join(d, f"part-seed-{i:04d}.parquet")
+        with open(path, "wb") as f:
+            f.write(b"x" * (i + 1))
+        seeded.add(path)
+
+    touched = []
+
+    def spy(fn):
+        def wrapped(*a, **k):
+            touched.append((fn.__name__, str(a[0]) if a else "."))
+            return fn(*a, **k)
+
+        return wrapped
+
+    m = IngestMetrics(spark, target_dir=cfg.target_dir)
+    try:
+        for name in ("stat", "lstat", "listdir", "scandir", "walk"):
+            monkeypatch.setattr(os, name, spy(getattr(os, name)))
+        ingest_once(spark, cfg)
+        h = m.file_size_histogram()
+        monkeypatch.undo()
+    finally:
+        m.remove(spark)
+    log = os.path.join(cfg.target_dir, "_spark_metadata")
+    assert not [p for _, p in touched if p in seeded]
+    assert not [
+        (fn, p) for fn, p in touched
+        if fn in ("listdir", "scandir", "walk")
+        and p.startswith(cfg.target_dir) and not p.startswith(log)
+    ]
+    files = [
+        p
+        for p in glob.glob(os.path.join(cfg.target_dir, "**", "*.parquet"), recursive=True)
+        if p not in seeded
+    ]
+    assert h["count"] == len(files) > 0
+    assert sorted(m.file_sizes) == sorted(os.path.getsize(p) for p in files)
+
+
+def test_metrics_follow_log_compaction(tmp_path):
+    """Every compaction interval the sink writes ``<batch>.compact``
+    (all entries so far, the batch's own last) instead of ``<batch>``;
+    each committed file is counted once, and a listener that starts
+    late begins at the newest compaction."""
+    import json
+    from types import SimpleNamespace
+
+    from kafka_parquet_writer_spark.streaming.ingest import IngestMetrics
+
+    log = tmp_path / "_spark_metadata"
+    log.mkdir()
+    no_spark = SimpleNamespace(streams=SimpleNamespace(addListener=lambda _: None))
+    entries = []
+
+    def commit(batch, sizes, compact=False):
+        new = [
+            {"path": f"file:///t/part-{len(entries) + i}.parquet",
+             "size": size, "isDir": False, "action": "add"}
+            for i, size in enumerate(sizes)
+        ]
+        entries.extend(new)
+        own = entries if compact else new
+        name = f"{batch}.compact" if compact else str(batch)
+        (log / name).write_text("v1\n" + "".join(json.dumps(e) + "\n" for e in own))
+
+    m = IngestMetrics(no_spark, target_dir=str(tmp_path))
+    commit(0, [10, 11])
+    m._scan_files()
+    commit(1, [12], compact=True)
+    commit(2, [])
+    m._scan_files()
+    commit(3, [13, 14], compact=True)
+    commit(4, [15])
+    assert m.file_size_histogram()["count"] == 6
+    assert sorted(m.file_sizes) == [10, 11, 12, 13, 14, 15]
+    late = IngestMetrics(no_spark, target_dir=str(tmp_path))
+    assert late.file_sizes == []
+    assert late.file_size_histogram()["count"] == 6
+
+
 def test_rotation_max_records_per_file(spark, sf_dir):
     """Size-rotation analogue (reference #4, :282-310): no output file
     exceeds the per-file record cap."""

@@ -926,3 +926,28 @@ def test_rag_blocked_delta_scans_delta_only(spark, sf_dir):
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     spark.catalog.clearCache()
+
+
+def test_wire_decoder_ships_only_the_value_column(spark):
+    """Proto decode plans one MapInArrow whose Python input is the
+    value column alone: a Kafka-shaped frame's key and timestamp never
+    cross into the Python worker."""
+    import datetime
+
+    from kafka_parquet_writer_spark.sources.decoders import (
+        encode_wire_format,
+        wire_format_decoder,
+    )
+
+    df = spark.createDataFrame(
+        [(b"k", encode_wire_format({1: "a", 2: 5}), datetime.datetime(2024, 1, 1))],
+        "key binary, value binary, timestamp timestamp",
+    )
+    decoded = wire_format_decoder({"s": (1, "string"), "n": (2, "long")})(df)
+    plan = formatted_plan(decoded)
+    assert "MapInPandas" not in plan
+    (node,) = [
+        sec for sec in plan.split("\n\n") if sec.lstrip().split("\n")[0].endswith(" MapInArrow")
+    ]
+    (inputs,) = [ln for ln in node.splitlines() if ln.startswith("Input ")]
+    assert inputs.startswith("Input [1]: [value#"), inputs
