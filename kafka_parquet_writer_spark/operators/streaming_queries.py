@@ -17,6 +17,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from kafka_parquet_writer_spark.catalog import (
     ensure_nanos_readable,
@@ -75,8 +76,13 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_STATE_PARTITIONS = 8
 
 
-def _run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
-    """Execute a streaming DataFrame to completion into a memory sink."""
+def _run_to_memory(
+    stream_df: DataFrame, mode: str
+) -> tuple[DataFrame, StreamingQuery]:
+    """Execute a streaming DataFrame to completion into a memory sink.
+
+    Returns the sink table and the finished query (for callers that
+    keep its plan receipts, see _plan_receipt)."""
     name = f"kpws_stream_{next(_counter)}"
     ckpt = tempfile.mkdtemp(prefix="kpws_ckpt_")
     spark = stream_df.sparkSession
@@ -95,7 +101,21 @@ def _run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
     finally:
         # the conf is captured at stream start; restore for batch plans
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return stream_df.sparkSession.table(name)
+    return spark.table(name), q
+
+
+def _plan_receipt(q: StreamingQuery) -> dict:
+    """A finished query's receipts for plan gates: the micro-batch
+    PHYSICAL plan string (explainInternal on the terminated query reads
+    its lastExecution — the plan that actually ran, where
+    BroadcastHashJoin vs SortMergeJoin and StateStore presence are
+    visible; a streaming DataFrame cannot be explain()ed to a physical
+    plan before start) and the final progress's stateOperators list
+    (empty ⇔ the query carried zero streaming state)."""
+    return {
+        "plan": q._jsq.explainInternal(True),
+        "state_operators": (q.lastProgress or {}).get("stateOperators", []),
+    }
 
 
 @query(
@@ -128,7 +148,7 @@ def stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cents(F.col("value"))).alias("sum_cents"),
         )
     )
-    out = _run_to_memory(agg, "complete")
+    out, _ = _run_to_memory(agg, "complete")
     return out.select(
         F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias("win_start"),
         "event_type",
@@ -174,7 +194,7 @@ def stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cents(F.col("value"))).alias("sum_cents"),
         )
     )
-    out = _run_to_memory(agg, "complete")
+    out, _ = _run_to_memory(agg, "complete")
     return out.select(
         F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias("win_start"),
         "event_type",
@@ -230,7 +250,7 @@ def stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = _run_to_memory(counted, "update")
+    out, _ = _run_to_memory(counted, "update")
     return out.select(
         "user_id", "n", pround(F.col("cents_sum") / 100.0, 4).alias("sum_value")
     )
@@ -291,7 +311,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             """
         ),
     ).select("user_id", "click_id", "purchase_id")
-    return _run_to_memory(joined, "append")
+    return _run_to_memory(joined, "append")[0]
 
 
 @query(
@@ -308,7 +328,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup = ev.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    return _run_to_memory(dedup, "append")
+    return _run_to_memory(dedup, "append")[0]
 
 
 @query(
@@ -346,7 +366,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out = _run_to_memory(agg, "complete")
+    out, _ = _run_to_memory(agg, "complete")
     return out.select(
         "user_id",
         F.date_format(F.col("session_window.start"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -420,7 +440,7 @@ def stream_tws_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="None",
         )
-        return _run_to_memory(totals, "update")
+        return _run_to_memory(totals, "update")[0]
     finally:
         if prev:
             spark.conf.set(
@@ -779,7 +799,7 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("quality") >= STREAM_QUALITY_MIN)
         .select("doc_id", "quality")
     )
-    return _run_to_memory(gated, "append")
+    return _run_to_memory(gated, "append")[0]
 
 
 # ---------------------------------------------------------------------------
@@ -829,7 +849,7 @@ def stream_passage_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    return _run_to_memory(passage_frame(src), "append")
+    return _run_to_memory(passage_frame(src), "append")[0]
 
 
 # ---------------------------------------------------------------------------
@@ -1029,7 +1049,7 @@ def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "5 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out = _run_to_memory(agg, "complete")
+    out, _ = _run_to_memory(agg, "complete")
     from pyspark.sql.window import Window as W
 
     counts = out.select(
@@ -1348,7 +1368,7 @@ def stream_session_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = _run_to_memory(sessions, "update")
+    out, _ = _run_to_memory(sessions, "update")
     return out.select(
         "user_id", "sess_seq", "n_events", "dur_secs", "cents_sum",
         "converted",
@@ -1408,7 +1428,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cents(F.col("value"))).alias("cents"),
         )
     )
-    out = _run_to_memory(agg, "complete")
+    out, _ = _run_to_memory(agg, "complete")
     return out.select(
         F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
             "win_start"
@@ -1620,7 +1640,7 @@ def stream_subsequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = _run_to_memory(matches, "update")
+    out, _ = _run_to_memory(matches, "update")
     return out.select("user_id", "event_id", "d2")
 
 
@@ -1840,9 +1860,8 @@ def _bpe_drift_oracle() -> str:
 #: provider class for the disk-backed state store hand-off (the
 #: rocksdbjni jar ships with pyspark 4, so the hand-off is runnable
 #: here, not just nameable — state no longer bounded by executor
-#: heap). Scoped to the drift key on purpose: threading it through
-#: _run_to_memory would void the helper closure of every streaming
-#: key's driver evidence for a knob only this key exposes.
+#: heap). Scoped to the drift key: it is the only key that exposes
+#: the knob, so the shared runner does not take it.
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
@@ -1956,7 +1975,7 @@ def stream_bpe_vocab_drift(
             F.count(F.lit(1)).alias("n")
         )
         with _state_store_provider(spark, state_store):
-            out = _drift_state_guard(_run_to_memory(agg, "complete"))
+            out = _drift_state_guard(_run_to_memory(agg, "complete")[0])
     else:
         # opt-in support pre-filter: pairs below min_support in their
         # epoch never enter state (see _run_support_filtered for the
@@ -2126,7 +2145,7 @@ def stream_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(TH.words_expr("text")).cast("long").alias("tok"),
     )
     agg = w.groupBy("epoch", "lang").agg(F.sum("tok").alias("tok_e"))
-    state = _run_to_memory(agg, "complete")
+    state, _ = _run_to_memory(agg, "complete")
     # finisher: state-table-only algebra (epochs × |langs| rows). The
     # language list is a bounded metadata read — |languages| strings,
     # the same class as the ANN centroid/seed reads — collected to
@@ -2228,47 +2247,6 @@ def _part_batched_dir(spark: SparkSession, sf_dir: str) -> str:
     return stage
 
 
-def _run_to_memory_traced(
-    stream_df: DataFrame, mode: str
-) -> tuple[DataFrame, dict]:
-    """_run_to_memory plus the finished query's receipts for plan
-    gates: the micro-batch PHYSICAL plan string (explainInternal on
-    the terminated query reads its lastExecution — the plan that
-    actually ran, where BroadcastHashJoin vs SortMergeJoin and
-    StateStore presence are visible; a streaming DataFrame cannot be
-    explain()ed to a physical plan before start) and the final
-    progress's stateOperators list (empty ⇔ the query carried zero
-    streaming state). A separate helper on purpose: threading this
-    through _run_to_memory would void the helper closure of every
-    streaming key's driver evidence for a receipt only new keys
-    use."""
-    name = f"kpws_stream_{next(_counter)}"
-    ckpt = tempfile.mkdtemp(prefix="kpws_ckpt_")
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
-    try:
-        q = (
-            stream_df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    progress = q.lastProgress or {}
-    info = {
-        "plan": q._jsq.explainInternal(True),
-        "state_operators": progress.get("stateOperators", []),
-    }
-    return spark.table(name), info
-
-
 #: the last stream_query_router run's plan receipts (tests read this
 #: after invoking the key; bounded: one plan string + one list)
 LAST_ROUTER_TRACE: dict = {}
@@ -2359,9 +2337,9 @@ def stream_query_router(spark: SparkSession, sf_dir: str) -> DataFrame:
         probed.alias("probed"),
         (probed * F.coalesce(F.col("max_df"), F.lit(0))).alias("budget"),
     )
-    table, info = _run_to_memory_traced(routed, "append")
+    table, q = _run_to_memory(routed, "append")
     LAST_ROUTER_TRACE.clear()
-    LAST_ROUTER_TRACE.update(info)
+    LAST_ROUTER_TRACE.update(_plan_receipt(q))
 
     ps = table.groupBy("query_id", "shard_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_terms_in_shard"),
@@ -2563,9 +2541,9 @@ def stream_ann_route(spark: SparkSession, sf_dir: str) -> DataFrame:
             pround(V.cosine_expr(F.col("qv"), F.col("cv")), 6).alias("cos"),
         )
     )
-    table, info = _run_to_memory_traced(scored, "append")
+    table, q = _run_to_memory(scored, "append")
     LAST_ANN_ROUTE_TRACE.clear()
-    LAST_ANN_ROUTE_TRACE.update(info)
+    LAST_ANN_ROUTE_TRACE.update(_plan_receipt(q))
 
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
     return (
@@ -2692,9 +2670,9 @@ def stream_ann_route_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[f"c{m}" for m in range(len(PQ_CODEBOOKS))],
         )
     )
-    table, info = _run_to_memory_traced(matched, "append")
+    table, q = _run_to_memory(matched, "append")
     LAST_ANN_PQ_TRACE.clear()
-    LAST_ANN_PQ_TRACE.update(info)
+    LAST_ANN_PQ_TRACE.update(_plan_receipt(q))
     qemb = (
         spark.read.parquet(emb_path)
         .filter(F.col("vec_id") < IVFPQ_N_QUERIES)

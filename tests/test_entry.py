@@ -43,24 +43,24 @@ def test_smoke_execute_representatives(spark, sf_dir):
         assert E.queries()[name](spark, sf_dir).count() > 0, name
 
 
-def test_driver_window_reaches_unproven_keys():
-    """Simulate the driver's 50-key correctness window against the
-    CORRECTNESS_r*.json evidence actually in the repo: every key whose
-    latest driver check FAILED (tier 0) and every key NEVER checked
-    (tier 1) must land inside the first 50 of _ordered() — otherwise a
-    key can sit unverified forever (source_json_roundtrip was stranded
-    at index 51 in rounds 1-3 by exactly this window-math slip)."""
+def test_queries_put_unreceipted_keys_first(tmp_path, monkeypatch):
+    """queries() orders stalest receipt first: a key with no sf0.01
+    receipt leads, then receipted keys by ascending receipt time."""
+    import json
+
+    keys = list(E.QUERIES)
+    missing = keys[-1]
+    # receipt times run backwards against registration order
+    at = {k: f"t{len(keys) - i:04d}" for i, k in enumerate(keys[:-1])}
+    receipts = {"sf0.01": {k: {"closure_fp": "x", "at": t} for k, t in at.items()},
+                "sf0.001": {missing: {"closure_fp": "x", "at": "0"}}}
+    path = tmp_path / "ORACLE_RECEIPTS.json"
+    path.write_text(json.dumps(receipts))
+    monkeypatch.setattr(E, "RECEIPTS", str(path))
     ordered = list(E.queries())
-    window = set(ordered[:50])
-    evidence = E._driver_evidence()
-    tier0 = {k for k, (_, green) in evidence.items()
-             if not green and k in set(ordered)}
-    tier1 = {k for k in ordered if k not in evidence}
-    stranded = (tier0 | tier1) - window
-    assert not stranded, (
-        f"keys outside the 50-key driver window: {sorted(stranded)}; "
-        f"tier0(failed)={sorted(tier0)}, tier1(never)={len(tier1)} keys"
-    )
+    assert ordered[0] == missing
+    assert sorted(ordered) == sorted(keys)
+    assert [at[k] for k in ordered[1:]] == sorted(at.values())
 
 
 def test_oracle_output_dtypes_clean():
@@ -74,21 +74,3 @@ def test_oracle_output_dtypes_clean():
     from oracle_dtypes import sweep
     violations = sweep()
     assert not violations, violations
-
-
-def test_force_recheck_entries_self_expire():
-    """Every _FORCE_RECHECK entry must (a) name a registered key and
-    (b) void a PAST green — value ≤ the key's latest evidence round.
-    A value above the latest evidence can never self-expire: the key
-    would sit in tier 1 forever, silently burning one of the 50 window
-    slots every round."""
-    evidence = E._driver_evidence()
-    registered = set(E.queries())
-    for key, voided in E._FORCE_RECHECK.items():
-        assert key in registered, f"force entry for unknown key {key!r}"
-        ev = evidence.get(key)
-        if ev is not None:
-            assert voided <= ev[0], (
-                f"{key}: force round {voided} > latest evidence {ev[0]} "
-                "— entry can never expire"
-            )

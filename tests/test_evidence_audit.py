@@ -1,21 +1,17 @@
-"""The staleness audit must be mechanical and unskippable (r7 verdict).
+"""The oracle receipts must be content-addressed and unskippable.
 
-Two consecutive rounds of by-hand closure auditing missed dependents
-(r6: four keys with changed decorated bodies; r7: the two IMI keys whose
-shared ``_make_imi_assigner`` / ``_verify_cell_blas`` helpers were
-rewritten).  ``tools/evidence_audit.py`` computes each key's transitive
-in-repo call closure by static AST walk and diffs it against the git
-tree at the key's evidence-round commit.  This test fails the suite
-whenever a stale key is neither force-listed in
-``__spark_entry__._FORCE_RECHECK`` (at or above its evidence round) nor
-already inside the next 50-key driver window — i.e. whenever a driver
-green would silently stand in for code it never ran.
+``tools/evidence_audit.py`` fingerprints each key's transitive in-repo
+call closure (static AST walk, source text of every interval) and
+``tools/verify_oracle.py`` records the fingerprint of every key that
+passes in ``ORACLE_RECEIPTS.json``. The gate below fails the suite
+whenever a key's current fingerprint has no green sf0.01 receipt, i.e.
+whenever an older green would silently stand in for code it never ran.
 
-No SparkSession needed: the audit is pure AST + git.
+No SparkSession needed: the audit is pure AST + file reads.
 """
 
+import json
 import os
-import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -23,58 +19,104 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
 
-def _git_available() -> bool:
-    try:
-        subprocess.run(
-            ["git", "rev-parse", "HEAD"],
-            cwd=REPO,
-            capture_output=True,
-            check=True,
-        )
-        return True
-    except (OSError, subprocess.CalledProcessError):
-        return False
+def test_every_key_has_a_green_receipt_on_the_current_code():
+    """The tier-1 gate. It is sound only because a key can never look
+    fresh by fingerprinting nothing: closure_fp refuses an empty
+    closure."""
+    import pytest
 
-
-def test_every_stale_key_is_covered_by_the_next_driver_window():
-    if not _git_available():
-        import pytest
-
-        pytest.skip("no git history available")
     import evidence_audit as EA
 
-    rep = EA.coverage_report()
-    assert rep["uncovered"] == {}, (
-        "keys whose helper closure changed after their latest driver "
-        f"evidence, with no re-proof scheduled: {rep['uncovered']} — add "
-        "each to __spark_entry__._FORCE_RECHECK at its evidence round"
+    def outside_the_engine():
+        pass
+
+    with pytest.raises(ValueError, match="empty closure"):
+        EA.closure_fp(outside_the_engine)
+
+    stale = EA.stale_keys(EA.load_receipts())
+    assert stale == {}, (
+        f"keys without a green {EA.GATE_SF} receipt on the current code: "
+        f"{stale} — re-prove them with: python tools/verify_oracle.py "
+        + " ".join(sorted(stale))
     )
 
 
-def test_force_recheck_live_vs_expired_annotation(monkeypatch):
-    """coverage_report must separate live forces (still displacing
-    window slots) from expired ones (satisfied by later evidence) —
-    the raw dict used to be dumped whole and read as pending work
-    (r10 VERDICT item 3). stale_keys is stubbed out: this pins the
-    annotation logic, not the closure walk."""
-    import __spark_entry__ as entry
+def test_editing_a_shared_helper_stales_exactly_its_dependents(monkeypatch):
+    """Edit dedup._make_imi_assigner's source text in memory: exactly the
+    keys whose closure holds that interval go stale (the two IMI keys
+    among them, one through a function-local import), and no other.
+    Lines inserted above every interval only renumber them: nothing goes
+    stale."""
+    import evidence_audit as EA
+    from kafka_parquet_writer_spark.registry import (
+        QUERIES,
+        load_all_operators,
+    )
+
+    load_all_operators()
+    fresh = {
+        EA.GATE_SF: {k: {"closure_fp": EA.closure_fp(fn)} for k, fn in QUERIES.items()}
+    }
+    assert EA.stale_keys(fresh) == {}
+
+    idx = EA._module_index("kafka_parquet_writer_spark.operators.dedup")
+    rel = os.path.relpath(idx.path, EA.REPO)
+    start, end = EA._func_span(idx.defs["_make_imi_assigner"])
+    dependents = {
+        k
+        for k, fn in QUERIES.items()
+        if (start, end) in EA.closure_of(fn).get(rel, set())
+    }
+    real_lines = EA._source_lines
+    real_closure = EA.closure_of
+
+    def edited(path):
+        lines = list(real_lines(path))
+        if path == rel:
+            lines[end - 1] = lines[end - 1].rstrip("\n") + "  # edited\n"
+        return tuple(lines)
+
+    with monkeypatch.context() as m:
+        m.setattr(EA, "_source_lines", edited)
+        stale = EA.stale_keys(fresh)
+    assert set(stale) == dependents
+    assert {"dedup_embedding_ann_imi", "similarity_ann_imi"} <= dependents
+    assert "agg_hash" not in dependents
+
+    def padded(path):
+        pad = ("# pad\n",) * 3 if path == rel else ()
+        return pad + real_lines(path)
+
+    def shifted(fn, _stack=frozenset()):
+        clo = real_closure(fn, _stack=_stack)
+        if _stack:  # composed sub-key: the outermost call shifts once
+            return clo
+        return {
+            p: {(a + 3, b + 3) for a, b in spans} if p == rel else spans
+            for p, spans in clo.items()
+        }
+
+    monkeypatch.setattr(EA, "_source_lines", padded)
+    monkeypatch.setattr(EA, "closure_of", shifted)
+    assert EA.stale_keys(fresh) == {}
+
+
+def test_receipt_merge_records_passes_drops_failures_keeps_the_rest(tmp_path):
     import evidence_audit as EA
 
-    evidence = entry._driver_evidence()
-    greens = sorted(k for k, v in evidence.items() if v[1])
-    assert len(greens) >= 2, "fixture needs two driver-green keys"
-    k_expired, k_live = greens[0], greens[1]
-    forced = {
-        # evidence round > forced round: the green re-proof landed
-        k_expired: evidence[k_expired][0] - 1,
-        # evidence round <= forced round: still awaiting re-proof
-        k_live: evidence[k_live][0],
-    }
-    monkeypatch.setattr(entry, "_FORCE_RECHECK", forced)
-    monkeypatch.setattr(EA, "stale_keys", lambda: {})
-    rep = EA.coverage_report()
-    assert rep["force_expired"] == {k_expired: forced[k_expired]}
-    assert rep["force_recheck"] == {k_live: forced[k_live]}
+    path = str(tmp_path / "ORACLE_RECEIPTS.json")
+    rec = lambda fp: {"closure_fp": fp, "rows": 1, "cpus": 4, "at": "t"}  # noqa: E731
+    EA.record(path, "sf0.01", {"a": rec("fa"), "b": rec("fb")}, [])
+    EA.record(path, "sf0.001", {"a": rec("small")}, [])
+    EA.record(path, "sf0.01", {"c": rec("fc")}, ["a"])
+    with open(path) as f:
+        got = json.load(f)
+    # green run wrote c; failure removed a; b was not run and is kept
+    assert got["sf0.01"] == {"b": rec("fb"), "c": rec("fc")}
+    # another SF's section is untouched
+    assert got["sf0.001"] == {"a": rec("small")}
+    # written via a temp file that does not linger
+    assert os.listdir(tmp_path) == ["ORACLE_RECEIPTS.json"]
 
 
 def test_audit_closure_reaches_shared_helpers_and_local_imports():

@@ -163,52 +163,6 @@ def test_batch_subseq_divisor_derives_from_length():
     assert "L & (L - 1) == 0" in ssrc
 
 
-def test_parse_intervals_ignores_header_lookalike_content():
-    """Round-9 ADVICE: a DELETED source line whose content begins with
-    '-- a/…' renders in a unified diff as '--- a/…' — prefix-identical
-    to a file header. The parser now tracks hunk line budgets (and
-    anchors blocks on 'diff --git'), so such content can neither
-    corrupt the old/cur file tracking nor misattribute a following
-    '+++ /dev/null' deletion."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools",
-        ),
-    )
-    import evidence_audit as EA
-
-    diff = "\n".join(
-        [
-            "diff --git a/pkg/tricky.py b/pkg/tricky.py",
-            "--- a/pkg/tricky.py",
-            "+++ b/pkg/tricky.py",
-            "@@ -5,2 +5,1 @@",
-            "--- a/decoy.py  # deleted content line, NOT a header",
-            "-+++ b/decoy2.py  # ditto",
-            "+kept = 1",
-            "diff --git a/pkg/gone.py b/pkg/gone.py",
-            "deleted file mode 100644",
-            "--- a/pkg/gone.py",
-            "+++ /dev/null",
-            "@@ -1,3 +0,0 @@",
-            "-a",
-            "--- b  # another deleted line starting with '--'",
-            "-c",
-        ]
-    )
-    got = EA._parse_intervals(diff)
-    # the decoy content did not become a file: only the two real paths
-    assert set(got) == {"pkg/tricky.py", "pkg/gone.py"}
-    assert got["pkg/tricky.py"] == [(5, 5)]
-    # the deletion is attributed to the deleted file's old path
-    assert got["pkg/gone.py"] == [(0, 0)]
-
-
 # ------------------------------------- stream_bpe_vocab_drift (new key)
 
 SF_SMALL = "/root/testdata/sf0.001"

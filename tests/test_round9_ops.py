@@ -7,7 +7,8 @@ projection pruning removed it and an unpinned fixture silently returned
 always-one-row fp CTE, so its WHERE is always evaluated.
 
 2 (low) — evidence_audit's diff parser attributed a deleted file's
-hunks to the PREVIOUS file ('+++ /dev/null' never reset cur).
+hunks to the PREVIOUS file. (The git-diff side of evidence_audit has
+since been replaced by content fingerprints; its tests went with it.)
 
 3 (low) — bench_scale's _carry_forward kept unknown lanes forever with
 no provenance; carried lanes now get a carried_receipts stamp (sf at
@@ -85,43 +86,6 @@ def test_trained_oracle_still_green_on_pinned_fixture():
     assert len(rows) == TRAINED_KEY_M
     # the sentinel branch contributed nothing on a pinned fixture
     assert all(r[1] is not None for r in rows)
-
-
-# ---------------------------------------------- 2: deletion attribution
-
-
-def test_parse_intervals_attributes_deletions_to_the_deleted_file():
-    import evidence_audit as EA
-
-    diff = "\n".join(
-        [
-            "diff --git a/pkg/kept.py b/pkg/kept.py",
-            "--- a/pkg/kept.py",
-            "+++ b/pkg/kept.py",
-            "@@ -10,2 +10,3 @@ def f():",
-            "+x",
-            "diff --git a/pkg/gone.py b/pkg/gone.py",
-            "deleted file mode 100644",
-            "--- a/pkg/gone.py",
-            "+++ /dev/null",
-            "@@ -1,50 +0,0 @@",
-            "-y",
-            "diff --git a/pkg/born.py b/pkg/born.py",
-            "new file mode 100644",
-            "--- /dev/null",
-            "+++ b/pkg/born.py",
-            "@@ -0,0 +1,5 @@",
-            "+z",
-        ]
-    )
-    got = EA._parse_intervals(diff)
-    # the modification and the addition land on their own new-side paths
-    assert got["pkg/kept.py"] == [(10, 12)]
-    assert got["pkg/born.py"] == [(1, 5)]
-    # the deletion's degenerate hunk belongs to the OLD path — before the
-    # fix it was appended to pkg/kept.py (the previous '+++ b/' target)
-    assert got.get("pkg/gone.py") == [(0, 0)]
-    assert len(got["pkg/kept.py"]) == 1
 
 
 # ------------------------------------------- 3: carry-forward provenance

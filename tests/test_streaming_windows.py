@@ -208,5 +208,5 @@ def test_staged_dir_stages_directory_tables(spark, tmp_path):
         _run_to_memory,
     )
 
-    out = _run_to_memory(n, "complete")
+    out, _ = _run_to_memory(n, "complete")
     assert out.collect()[0][0] == 100

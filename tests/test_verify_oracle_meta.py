@@ -82,3 +82,20 @@ def test_values_close_tolerances():
     assert values_close(1.0, 1.0 + 1e-12)
     assert not values_close(1.0, 1.01)
     assert values_close("x", "x") and not values_close("x", "y")
+
+
+def test_unknown_key_is_rejected_before_any_spark_work(monkeypatch, capsys):
+    """A mistyped key in a re-verification used to match nothing, check
+    nothing and print ALL OK. It must exit non-zero, naming the key,
+    before a SparkSession is started."""
+    import kafka_parquet_writer_spark
+    import verify_oracle
+
+    def no_spark(*a, **k):
+        raise AssertionError("started Spark for an unknown key")
+
+    monkeypatch.setattr(kafka_parquet_writer_spark, "get_spark", no_spark)
+    monkeypatch.setattr(sys, "argv", ["verify_oracle.py", "agg_hash", "agg_hsah"])
+    assert verify_oracle.main() == 2
+    err = capsys.readouterr().err
+    assert "agg_hsah" in err and "'agg_hash'" not in err

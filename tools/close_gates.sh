@@ -4,9 +4,11 @@
 # Encodes the three determinism sweeps that previously lived only as
 # documented knobs on tools/verify_oracle.py:
 #
-#   1. evidence audit        — force-recheck list consistent with the
-#                              round's code changes (seconds, run first)
-#   2. oracle sweep @ sf0.01 — the driver's t2 gate, all keys
+#   1. receipt check         — every key's current code-closure
+#                              fingerprint has a green sf0.01 receipt in
+#                              ORACLE_RECEIPTS.json (seconds, run first)
+#   2. oracle sweep @ sf0.01 — the t2 correctness gate, all keys; refreshes
+#                              the sf0.01 receipts
 #   3. oracle sweep @ sf0.001— small-data edge sweep
 #   4. oracle sweep, CPUS=7  — partition-count invariance (odd core /
 #                              shuffle-partition count; catches ties
@@ -34,7 +36,7 @@ step() {
   fi
 }
 
-step evidence_audit python tools/evidence_audit.py
+step receipts python tools/evidence_audit.py
 step oracle_sf001 python tools/verify_oracle.py
 step oracle_sf0001 env SPARK_GRAFT_ORACLE_SF_DIR=/root/testdata/sf0.001 \
   python tools/verify_oracle.py

@@ -1,7 +1,7 @@
 """Per-batch duration breakdown for streaming keys.
 
-Monkeypatches _run_to_memory / _run_to_memory_traced to capture the
-finished query's recentProgress, then invokes each named key once
+Wraps the streaming runner (_run_to_memory) to capture the finished
+query's recentProgress, then invokes each named key once
 (warm session) and prints per-batch durationMs components
 (triggerExecution, queryPlanning, addBatch, walCommit,
 commitOffsets, getBatch) plus batch count.
@@ -30,48 +30,14 @@ def main() -> None:
 
     captured: list = []
 
-    def wrap(orig, traced):
-        def runner(stream_df, mode):
-            import tempfile
+    orig = SQ._run_to_memory
 
-            name = f"kpws_diag_{next(SQ._counter)}"
-            ckpt = tempfile.mkdtemp(prefix="kpws_ckpt_")
-            sp = stream_df.sparkSession
-            prev = sp.conf.get("spark.sql.shuffle.partitions")
-            sp.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(SQ.STREAM_STATE_PARTITIONS),
-            )
-            try:
-                q = (
-                    stream_df.writeStream.outputMode(mode)
-                    .format("memory")
-                    .queryName(name)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-            finally:
-                sp.conf.set("spark.sql.shuffle.partitions", prev)
-            captured.append([json.loads(p.json) for p in q.recentProgress])
-            tbl = sp.table(name)
-            if traced:
-                info = {
-                    "plan": q._jsq.explainInternal(True),
-                    "state_operators": (q.lastProgress or {}).get(
-                        "stateOperators", []
-                    ),
-                }
-                return tbl, info
-            return tbl
+    def runner(stream_df, mode):
+        tbl, q = orig(stream_df, mode)
+        captured.append([json.loads(p.json) for p in q.recentProgress])
+        return tbl, q
 
-        return runner
-
-    orig_plain = SQ._run_to_memory
-    orig_traced = SQ._run_to_memory_traced
-    SQ._run_to_memory = wrap(orig_plain, traced=False)
-    SQ._run_to_memory_traced = wrap(orig_traced, traced=True)
+    SQ._run_to_memory = runner
 
     import time
 

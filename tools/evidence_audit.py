@@ -1,15 +1,11 @@
-"""Mechanical staleness audit over each declared key's helper closure.
+"""Content-addressed oracle receipts over each declared key's helper closure.
 
-Two consecutive rounds of by-hand auditing missed post-evidence code
-changes to *shared helpers* (r6: 4 keys whose decorated bodies changed;
-r7: ``dedup_embedding_ann_imi`` / ``similarity_ann_imi``, whose bodies
-were untouched but whose ``_make_imi_assigner`` / ``_verify_cell_blas``
-helpers were rewritten).  A driver green is only evidence about the code
-that produced it; the audit must therefore cover the full *call closure*
-of every operator, not just its decorated body — and it must be a tool,
-not a reviewer's memory.
-
-What this does, per registered key:
+A green oracle check is evidence only about the code that produced it,
+and an operator's behavior depends on more than its decorated body:
+shared helpers, module constants and composed sub-keys all count (the
+``_make_imi_assigner`` rewrite once changed two keys whose bodies were
+untouched). So the evidence is keyed by the *content* of the key's
+whole call closure.
 
 1. **Closure** — starting from the function registered in
    ``kafka_parquet_writer_spark.registry.QUERIES`` (decorators included:
@@ -27,139 +23,47 @@ What this does, per registered key:
      into the referenced key's own closure.
 
    The result is a set of (file, start_line, end_line) intervals in the
-   CURRENT working tree.
+   current working tree.
 
-2. **Diff** — the key's latest driver evidence round N maps to the
-   ``round N: verdict/...`` commit (the driver measures the tree it then
-   commits those artifacts onto).  ``git diff -U0 <commit> -- <package>``
-   against the working tree yields the new-side changed line intervals.
+2. **Fingerprint** — ``closure_fp`` is a sha256 over the sorted
+   ``(relpath, exact source text)`` of those intervals. Line numbers do
+   not enter it, so a line shift elsewhere in a file leaves it unchanged;
+   any edit inside the closure changes it.
 
-3. **Verdict** — a key is STALE iff any closure interval intersects any
-   changed interval: its green was measured on code that no longer
-   ships.  Output is ``{key: evidence_round}`` — exactly the shape a
-   ``__spark_entry__._FORCE_RECHECK`` entry needs.
+3. **Receipt** — ``tools/verify_oracle.py`` records every key that passes
+   in ``ORACLE_RECEIPTS.json`` (one section per SF directory name,
+   ``key → {closure_fp, rows, cpus, at}``); a key that fails loses its
+   entry, keys not run keep theirs.
 
-``tests/test_evidence_audit.py`` runs this at every pytest invocation
-and fails unless every stale key is covered — force-listed at (or above)
-its evidence round, or already inside the next 50-key driver window — so
-the class of miss that cost r6 and r7 cannot ship silently again.
+4. **Verdict** — a key is STALE iff its current fingerprint has no green
+   receipt in the ``sf0.01`` section. ``tests/test_evidence_audit.py``
+   fails the suite on any stale key, so an edit to shared code cannot
+   ship on an older green.
 
-Usage: ``python tools/evidence_audit.py`` prints the stale map plus the
-coverage check as JSON.
+Usage: ``python tools/evidence_audit.py`` prints the stale keys and exits
+non-zero if there are any; ``python tools/verify_oracle.py KEY ...``
+re-proves them and refreshes their receipts.
 """
 
 from __future__ import annotations
 
 import ast
+import hashlib
 import importlib
 import inspect
 import json
 import os
-import re
-import subprocess
 import sys
 from functools import lru_cache
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "kafka_parquet_writer_spark"
+RECEIPTS = os.path.join(REPO, "ORACLE_RECEIPTS.json")
+#: the SF whose receipts gate the test suite
+GATE_SF = "sf0.01"
 
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
-
-
-# --------------------------------------------------------------- git side
-
-
-@lru_cache(maxsize=None)
-def round_commit(rnd: int) -> str | None:
-    """Hash of the driver's ``round N: verdict/...`` close commit."""
-    out = subprocess.run(
-        ["git", "log", "--format=%H %s"],
-        cwd=REPO,
-        capture_output=True,
-        text=True,
-        check=True,
-    ).stdout
-    for line in out.splitlines():
-        sha, _, subj = line.partition(" ")
-        if re.match(rf"^round {rnd}: verdict", subj):
-            return sha
-    return None
-
-
-@lru_cache(maxsize=None)
-def changed_intervals(commit: str) -> dict[str, list[tuple[int, int]]]:
-    """New-side changed line intervals, working tree vs ``commit``,
-    restricted to the engine package (closures never leave it)."""
-    out = subprocess.run(
-        ["git", "diff", "-U0", commit, "--", PKG],
-        cwd=REPO,
-        capture_output=True,
-        text=True,
-        check=True,
-    ).stdout
-    return _parse_intervals(out)
-
-
-def _parse_intervals(out: str) -> dict[str, list[tuple[int, int]]]:
-    ranges: dict[str, list[tuple[int, int]]] = {}
-    cur: str | None = None
-    old: str | None = None
-    # Remaining content lines of the current hunk. A DELETED source
-    # line whose content begins with '-- a/…' renders in the diff as
-    # '--- a/…' (the deletion '-' plus the content) — backdrop-identical
-    # to a file header (round-9 ADVICE). Headers can only occur when no
-    # hunk content is pending, so track the hunk's -/+ line budget and
-    # treat prefixed lines inside it as content, never headers.
-    pend_old = pend_new = 0
-    for line in out.splitlines():
-        if line.startswith("diff --git "):
-            # a bare 'diff --git' can never be hunk content (content
-            # lines always carry a +/-/space prefix) — it is the one
-            # unambiguous block anchor, so it also clears any pending
-            # budget from a (theoretically) truncated hunk.
-            pend_old = pend_new = 0
-            continue
-        if pend_old > 0 or pend_new > 0:
-            if line.startswith("-"):
-                pend_old -= 1
-            elif line.startswith("+"):
-                pend_new -= 1
-            elif line.startswith(" "):
-                pend_old -= 1
-                pend_new -= 1
-            # '\ No newline at end of file' consumes no budget
-            continue
-        if line.startswith("--- a/"):
-            old = line[6:]
-        elif line.startswith("--- "):
-            old = None
-        elif line.startswith("+++ b/"):
-            cur = line[6:]
-        elif line.startswith("+++ "):
-            # whole-file deletion: '+++ /dev/null'. Without this branch
-            # `cur` kept pointing at the PREVIOUS file and the deletion's
-            # degenerate hunks were attributed to it (round-8 ADVICE).
-            # Attribute the hunks to the OLD-side path instead, so a key
-            # whose closure cited a now-deleted helper module still flags
-            # stale (the closure walker resolves paths from the CURRENT
-            # tree, so a deleted file simply never matches — but a rename
-            # detected as delete+add keeps the new side via '+++ b/').
-            cur = old
-        elif line.startswith("@@") and cur is not None:
-            m = re.match(r"@@ -\d+(?:,\d+)? \+(\d+)(?:,(\d+))? @@", line)
-            if not m:
-                continue
-            start = int(m.group(1))
-            count = int(m.group(2)) if m.group(2) is not None else 1
-            mo = re.match(r"@@ -\d+(?:,(\d+))?", line)
-            oldcount = int(mo.group(1)) if mo and mo.group(1) is not None else 1
-            pend_old, pend_new = oldcount, count
-            # a pure deletion (count 0) still touches the seam between
-            # `start` and `start+1` in the new file — count it as one
-            # line so a helper whose interior lines were deleted flags
-            ranges.setdefault(cur, []).append((start, start + max(count, 1) - 1))
-    return ranges
 
 
 # --------------------------------------------------------------- AST side
@@ -386,85 +290,88 @@ def closure_of(fn, _stack: frozenset = frozenset()) -> dict[str, set[tuple[int, 
     return intervals
 
 
-# --------------------------------------------------------------- verdicts
+# ------------------------------------------------------------ fingerprint
 
 
-def _overlap(a: tuple[int, int], b: tuple[int, int]) -> bool:
-    return a[0] <= b[1] and b[0] <= a[1]
+@lru_cache(maxsize=None)
+def _source_lines(rel: str) -> tuple[str, ...]:
+    with open(os.path.join(REPO, rel), encoding="utf-8") as f:
+        return tuple(f.read().splitlines(keepends=True))
 
 
-def stale_keys() -> dict[str, int]:
-    """{key: evidence_round} for every key whose closure changed after
-    its latest driver evidence."""
-    import __spark_entry__ as entry
+def closure_fp(fn) -> str:
+    """sha256 over the sorted (relpath, source text) of fn's closure."""
+    clo = closure_of(fn)
+    if not clo:
+        raise ValueError(
+            f"{fn.__module__}.{fn.__qualname__}: empty closure, nothing to "
+            "fingerprint"
+        )
+    pieces = sorted(
+        (rel, "".join(_source_lines(rel)[start - 1 : end]))
+        for rel, spans in clo.items()
+        for start, end in spans
+    )
+    h = hashlib.sha256()
+    for rel, text in pieces:
+        h.update(f"{rel}\0{text}\0".encode())
+    return h.hexdigest()
+
+
+# --------------------------------------------------------------- receipts
+
+
+def load_receipts(path: str = RECEIPTS) -> dict:
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return {}
+
+
+def record(path: str, sf: str, passed: dict[str, dict], failed) -> None:
+    """Merge one sweep into the receipt file: every passed key gets its
+    entry, every failed key loses its entry, keys not run keep theirs.
+    Written to a temp file, then renamed over the old one."""
+    receipts = load_receipts(path)
+    section = receipts.setdefault(sf, {})
+    for key in failed:
+        section.pop(key, None)
+    section.update(passed)
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(receipts, f, indent=1, sort_keys=True)
+        f.write("\n")
+    os.replace(tmp, path)
+
+
+def stale_keys(receipts: dict) -> dict[str, str]:
+    """{key: why} for every registered key whose current closure_fp has
+    no green GATE_SF receipt."""
     from kafka_parquet_writer_spark.registry import QUERIES, load_all_operators
 
     load_all_operators()
-    evidence = entry._driver_evidence()
-    out: dict[str, int] = {}
+    green = receipts.get(GATE_SF, {})
+    out: dict[str, str] = {}
     for key, fn in QUERIES.items():
-        ev = evidence.get(key)
-        if ev is None:
-            continue  # never checked: tier-1 already, window handles it
-        rnd = ev[0]
-        commit = round_commit(rnd)
-        if commit is None:
-            continue
-        diff = changed_intervals(commit)
-        clo = closure_of(fn)
-        hit = any(
-            _overlap(ci, si)
-            for rel, spans in clo.items()
-            for ci in diff.get(rel, [])
-            for si in spans
-        )
-        if hit:
-            out[key] = rnd
+        rec = green.get(key)
+        if rec is None:
+            out[key] = "no receipt"
+        elif rec["closure_fp"] != closure_fp(fn):
+            out[key] = "closure changed since its receipt"
     return out
 
 
-def coverage_report() -> dict:
-    """Stale keys plus whether each is covered by the next driver run.
-
-    ``force_recheck`` lists only LIVE forces (no evidence newer than
-    the voided round — these still displace window slots);
-    ``force_expired`` lists entries already satisfied by later
-    evidence, which are inert and should be pruned from
-    ``__spark_entry__._FORCE_RECHECK`` — the raw dict used to be
-    dumped whole, and a reader (including the r10 judge) could not
-    tell pending work from leftovers without opening the evidence
-    files."""
-    import __spark_entry__ as entry
-
-    stale = stale_keys()
-    window = list(entry.queries())[:50]
-    uncovered = {
-        k: rnd
-        for k, rnd in stale.items()
-        if entry._FORCE_RECHECK.get(k, -1) < rnd and k not in window
-    }
-    evidence = entry._driver_evidence()
-    live: dict[str, int] = {}
-    expired: dict[str, int] = {}
-    for k, rnd in entry._FORCE_RECHECK.items():
-        ev = evidence.get(k)
-        (expired if ev is not None and ev[0] > rnd else live)[k] = rnd
-    return {
-        "stale": stale,
-        "force_recheck": live,
-        "force_expired": expired,
-        "window_head": window,
-        "uncovered": uncovered,
-    }
-
-
 if __name__ == "__main__":
-    rep = coverage_report()
-    print(json.dumps(rep, indent=2))
-    if rep["uncovered"]:
+    stale = stale_keys(load_receipts())
+    for key, why in sorted(stale.items()):
+        print(f"STALE {key}: {why}")
+    if stale:
         print(
-            f"UNCOVERED STALE KEYS: {sorted(rep['uncovered'])} — add them "
-            "to __spark_entry__._FORCE_RECHECK at their evidence round",
+            f"{len(stale)} keys without a green {GATE_SF} receipt on the "
+            "current code; re-prove them with: python tools/verify_oracle.py "
+            + " ".join(sorted(stale)),
             file=sys.stderr,
         )
         sys.exit(1)
+    print(f"all keys have a green {GATE_SF} receipt on the current code")

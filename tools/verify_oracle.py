@@ -7,6 +7,11 @@ tolerance so near-misses are visible).
 
 Usage: python tools/verify_oracle.py [query ...]
 
+An unknown query name is an error (exit 2), not an empty sweep. Every
+key that passes is recorded in ORACLE_RECEIPTS.json under the SF
+directory's name, with the fingerprint of its code closure (see
+tools/evidence_audit.py); a key that fails loses its receipt.
+
 Set SPARK_GRAFT_ORACLE_SF_DIR to cross-check at a different scale
 (e.g. sf0.1 — 10× the driver's gate, or sf0.001 — the small-data
 edge sweep; all three fixtures sweep clean as of r11). Caveat at
@@ -118,13 +123,25 @@ def compare(s_cols, s_rows, d_cols, d_rows) -> list:
 
 
 def main() -> int:
-    import duckdb
-
-    from kafka_parquet_writer_spark import get_spark
     from kafka_parquet_writer_spark.registry import QUERIES, ORACLES, load_all_operators
 
     load_all_operators()
+    only = set(sys.argv[1:])
+    unknown = sorted(only - set(QUERIES))
+    if unknown:
+        print(f"unknown query keys: {unknown}", file=sys.stderr)
+        return 2
+
+    import duckdb
+
+    from evidence_audit import RECEIPTS, closure_fp, record
+    from kafka_parquet_writer_spark import get_spark
+
+    names = [k for k in QUERIES if not only or k in only]
+    # fingerprint the code as imported, before anything runs
+    fps = {name: closure_fp(QUERIES[name]) for name in names}
     spark = get_spark("verify_oracle")
+    cpus = spark.sparkContext.defaultParallelism
 
     con = duckdb.connect()
     for t in TABLES:
@@ -132,11 +149,10 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
         )
 
-    only = set(sys.argv[1:])
     failures = []
-    for name, fn in QUERIES.items():
-        if only and name not in only:
-            continue
+    ran: dict[str, dict] = {}  # receipt per key that ran; kept if it passes
+    for name in names:
+        fn = QUERIES[name]
         t0 = time.time()
         try:
             sdf = fn(spark, SF_DIR)
@@ -146,6 +162,12 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {e}")
             continue
+        ran[name] = {
+            "closure_fp": fps[name],
+            "rows": len(s_rows),
+            "cpus": cpus,
+            "at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        }
         if name not in ORACLES:
             print(f"rows  {name}: {len(s_rows)} rows (no oracle) "
                   f"[{time.time()-t0:.1f}s]")
@@ -175,7 +197,12 @@ def main() -> int:
             print(f"OK    {name}: {len(s_rows)} rows match "
                   f"[{time.time()-t0:.1f}s]")
 
-    print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL OK")
+    sf = os.path.basename(os.path.normpath(SF_DIR))
+    passed = {k: r for k, r in ran.items() if k not in failures}
+    record(RECEIPTS, sf, passed, failures)
+    print(f"\nreceipts [{sf}]: {len(passed)} recorded, {len(failures)} "
+          f"removed -> {os.path.basename(RECEIPTS)}")
+    print(f"{len(failures)} failures: {failures}" if failures else "ALL OK")
     return 1 if failures else 0
 
 
