@@ -351,7 +351,11 @@ def main() -> None:
     # and report it as a timing entry + rows/s on stderr.
     import tempfile
 
-    from kafka_parquet_writer_spark.catalog import normalize_nanos, table_path
+    from kafka_parquet_writer_spark.catalog import (
+        normalize_nanos,
+        table_path,
+        table_schema,
+    )
     from kafka_parquet_writer_spark.operators.streaming_queries import _staged_dir
     from kafka_parquet_writer_spark.streaming.ingest import (
         IngestConfig,
@@ -385,7 +389,7 @@ def main() -> None:
                     checkpoint_dir=os.path.join(base, f"ckpt_{tag}_{attempt}"),
                     source_format="file",
                     source_path=src,
-                    source_schema=spark.read.parquet(ev_path).schema,
+                    source_schema=table_schema(spark, ev_path),
                     decoder=normalize_nanos,  # total: long-nanos or NTZ ts
                     trigger_seconds=None,
                     **cfg_kw,

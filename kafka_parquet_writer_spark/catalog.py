@@ -2,15 +2,23 @@
 
 Mirrors the reference's "table" notion — a directory of Parquet files
 (`KafkaProtoParquetWriter.java:81-82,362-380`) — as Spark-readable paths.
-Reads are plain ``spark.read.parquet`` so Catalyst gets predicate
-pushdown + column pruning on every downstream query for free.
+Reads are ``spark.read.schema(...).parquet`` so Catalyst gets predicate
+pushdown + column pruning on every downstream query for free. The schema
+comes from ``table_schema``: Spark's own inferred schema, memoized per
+(real path, stat fingerprint, schema-conversion confs), so a warm read
+plans without the footer-merging inference job a bare
+``spark.read.parquet`` launches on every call.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -34,6 +42,68 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+#: SQL confs that change how a Parquet footer converts to a Spark schema;
+#: their current values are part of the schema memo key
+SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+_SCHEMA_MEMO_CAP = 64
+_schema_memo: OrderedDict[tuple, StructType] = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def _stat_key(st: os.stat_result) -> tuple:
+    return (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+
+
+def _fingerprint(path: str) -> tuple:
+    """Stat fingerprint of a table: the file's stat key, or for a
+    directory the sorted (relative name, stat key) of every file under
+    it (partition subdirectories included; symlinks followed)."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return _stat_key(st)
+    entries = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            entries.append((os.path.relpath(full, path), _stat_key(os.stat(full))))
+    return tuple(sorted(entries))
+
+
+def table_schema(spark: SparkSession, path: str) -> StructType:
+    """Spark's inferred schema of the Parquet table at ``path``, inferred
+    once per (real path, stat fingerprint, SCHEMA_CONFS values).
+
+    A rewrite at the same path changes the fingerprint, and a conf flip
+    changes the key, so either re-infers. The memo is a locked LRU of at
+    most ``_SCHEMA_MEMO_CAP`` Python ``StructType``s; it holds no JVM
+    handle, so it stays valid across SparkContext restarts. Callers must
+    not mutate the returned schema."""
+    key = (
+        os.path.realpath(path),
+        _fingerprint(path),
+        tuple(spark.conf.get(c) for c in SCHEMA_CONFS),
+    )
+    with _schema_lock:
+        schema = _schema_memo.get(key)
+        if schema is not None:
+            _schema_memo.move_to_end(key)
+            return schema
+    # infer outside the lock: a racing caller at worst infers twice
+    schema = spark.read.parquet(path).schema
+    with _schema_lock:
+        _schema_memo[key] = schema
+        _schema_memo.move_to_end(key)
+        while len(_schema_memo) > _SCHEMA_MEMO_CAP:
+            _schema_memo.popitem(last=False)
+    return schema
 
 
 def ensure_nanos_readable(spark: SparkSession) -> None:
@@ -80,7 +150,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_nanos_readable(spark)
-    return normalize_nanos(spark.read.parquet(table_path(sf_dir, name)))
+    path = table_path(sf_dir, name)
+    return normalize_nanos(spark.read.schema(table_schema(spark, path)).parquet(path))
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

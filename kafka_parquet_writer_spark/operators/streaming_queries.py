@@ -24,6 +24,7 @@ from kafka_parquet_writer_spark.catalog import (
     load_table,
     normalize_nanos,
     table_path,
+    table_schema,
 )
 from kafka_parquet_writer_spark.functions.portable import cents, pround, sql_cents
 from kafka_parquet_writer_spark.registry import query
@@ -59,7 +60,7 @@ def _staged_dir(path: str) -> str:
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = table_path(sf_dir, "events")
     ensure_nanos_readable(spark)
-    schema = spark.read.parquet(path).schema
+    schema = table_schema(spark, path)
     return normalize_nanos(
         spark.readStream.schema(schema).parquet(_staged_dir(path))
     )
@@ -82,12 +83,17 @@ def _run_to_memory(
     """Execute a streaming DataFrame to completion into a memory sink.
 
     Returns the sink table and the finished query (for callers that
-    keep its plan receipts, see _plan_receipt)."""
+    keep its plan receipts, see _plan_receipt). The checkpoint is
+    removed once the query has terminated: an availableNow run is never
+    resumed, and its plan and progress stay readable from the query."""
+    import shutil
+
     name = f"kpws_stream_{next(_counter)}"
     ckpt = tempfile.mkdtemp(prefix="kpws_ckpt_")
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
+    q = None
     try:
         q = (
             stream_df.writeStream.outputMode(mode)
@@ -101,6 +107,8 @@ def _run_to_memory(
     finally:
         # the conf is captured at stream start; restore for batch plans
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if q is None or not q.isActive:
+            shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name), q
 
 
@@ -634,7 +642,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     ensure_nanos_readable(spark)
-    schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    schema = table_schema(spark, table_path(sf_dir, "documents"))
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -792,7 +800,7 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_parquet_writer_spark.operators.text import quality_frame
 
     path = table_path(sf_dir, "documents")
-    schema = spark.read.parquet(path).schema
+    schema = table_schema(spark, path)
     docs = spark.readStream.schema(schema).parquet(_staged_dir(path))
     gated = (
         quality_frame(docs)
@@ -843,7 +851,7 @@ def stream_passage_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_parquet_writer_spark.operators.rag_prep import passage_frame
 
     stage = _documents_batched_dir(spark, sf_dir)
-    schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    schema = table_schema(spark, table_path(sf_dir, "documents"))
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -932,7 +940,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     src = _events_batched_dir(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(src, "000.parquet")).schema
+    schema = table_schema(spark, os.path.join(src, "000.parquet"))
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1157,7 +1165,7 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = tempfile.mkdtemp(prefix="kpws_late_src_")
     ckpt = tempfile.mkdtemp(prefix="kpws_late_ckpt_")
     out_dir = tempfile.mkdtemp(prefix="kpws_late_out_")
-    schema = spark.read.parquet(on_time_f).schema
+    schema = table_schema(spark, on_time_f)
 
     def run_once() -> None:
         ev = spark.readStream.schema(schema).parquet(src)
@@ -1947,7 +1955,7 @@ def stream_bpe_vocab_drift(
     )
     span = (hi - lo + B) // B
     stage = _documents_batched_dir(spark, sf_dir)
-    schema = spark.read.parquet(docs_path).schema
+    schema = table_schema(spark, docs_path)
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -2133,7 +2141,7 @@ def stream_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     span = (hi - lo + B) // B
     stage = _documents_batched_dir(spark, sf_dir)
-    schema = spark.read.parquet(docs_path).schema
+    schema = table_schema(spark, docs_path)
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -2311,7 +2319,7 @@ def stream_query_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stage = _part_batched_dir(spark, sf_dir)
-    schema = spark.read.parquet(table_path(sf_dir, "part")).schema
+    schema = table_schema(spark, table_path(sf_dir, "part"))
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -2521,7 +2529,7 @@ def stream_ann_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()
 
     stage = _embedding_queries_batched_dir(spark, sf_dir)
-    schema = spark.read.parquet(emb_path).schema
+    schema = table_schema(spark, emb_path)
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -2639,7 +2647,7 @@ def stream_ann_route_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream side: vec_id-ranged query micro-batches (the staged dir
     # covers vec_id < IVF_N_QUERIES == IVFPQ_N_QUERIES)
     stage = _embedding_queries_batched_dir(spark, sf_dir)
-    schema = spark.read.parquet(emb_path).schema
+    schema = table_schema(spark, emb_path)
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -2813,7 +2821,7 @@ def stream_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     SC, L = RAG_IDF_SCALE, RAG_IMPACT_L
     src = _documents_batched_dir(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(src, "000.parquet")).schema
+    schema = table_schema(spark, os.path.join(src, "000.parquet"))
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -3004,7 +3012,7 @@ def stream_ann_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     code_fn, code_schema = _pq_code_mapper()
     src = _embeddings_batched_dir(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(src, "000.parquet")).schema
+    schema = table_schema(spark, os.path.join(src, "000.parquet"))
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

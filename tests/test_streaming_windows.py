@@ -210,3 +210,26 @@ def test_staged_dir_stages_directory_tables(spark, tmp_path):
 
     out, _ = _run_to_memory(n, "complete")
     assert out.collect()[0][0] == 100
+
+
+def test_memory_sink_runs_leave_no_checkpoint_dir(spark, sf_dir):
+    """`_run_to_memory` removes its checkpoint once the availableNow
+    query has terminated; the sink table stays readable."""
+    import os
+
+    from kafka_parquet_writer_spark.operators.streaming_queries import stream_dedup
+
+    def ckpts():
+        tmp = tempfile.gettempdir()
+        return {n for n in os.listdir(tmp) if n.startswith("kpws_ckpt_")}
+
+    before = ckpts()
+    expected = (
+        load_table(spark, sf_dir, "events")
+        .select("user_id", "event_type")
+        .distinct()
+        .count()
+    )
+    for _ in range(2):
+        assert stream_dedup(spark, sf_dir).count() == expected
+    assert ckpts() - before == set()

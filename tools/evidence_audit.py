@@ -40,9 +40,11 @@ whole call closure.
    fails the suite on any stale key, so an edit to shared code cannot
    ship on an older green.
 
-Usage: ``python tools/evidence_audit.py`` prints the stale keys and exits
-non-zero if there are any; ``python tools/verify_oracle.py KEY ...``
-re-proves them and refreshes their receipts.
+Usage: ``python tools/evidence_audit.py`` prints an ``N stale of M``
+count line, then the stale keys, and exits non-zero if there are any;
+``python tools/verify_oracle.py KEY ...`` re-proves them and refreshes
+their receipts (with more than half the keys stale, the hint names the
+full sweep instead of listing them).
 """
 
 from __future__ import annotations
@@ -363,14 +365,21 @@ def stale_keys(receipts: dict) -> dict[str, str]:
 
 
 if __name__ == "__main__":
+    from kafka_parquet_writer_spark.registry import QUERIES
+
     stale = stale_keys(load_receipts())
+    if stale:
+        print(f"{len(stale)} stale of {len(QUERIES)}")
     for key, why in sorted(stale.items()):
         print(f"STALE {key}: {why}")
     if stale:
+        if 2 * len(stale) > len(QUERIES):
+            how = "run the full sweep: python tools/verify_oracle.py"
+        else:
+            how = "python tools/verify_oracle.py " + " ".join(sorted(stale))
         print(
             f"{len(stale)} keys without a green {GATE_SF} receipt on the "
-            "current code; re-prove them with: python tools/verify_oracle.py "
-            + " ".join(sorted(stale)),
+            f"current code; re-prove them with: {how}",
             file=sys.stderr,
         )
         sys.exit(1)
