@@ -1330,11 +1330,11 @@ def bpe_drift_lane() -> None:
         finally:
             # drop the cached stage split (keyed by sf_dir) AND the
             # blow-up; both are per-k temp dirs
-            staged = SQ._dedup_stage_cache.pop(
-                f"{d}|{SQ.DEDUP_STREAM_BATCHES}", None
+            staged = SQ._ranged_stages.pop(
+                ("documents", d, SQ.DEDUP_STREAM_BATCHES), None
             )
             if staged:
-                shutil.rmtree(staged, ignore_errors=True)
+                shutil.rmtree(staged[0], ignore_errors=True)
             shutil.rmtree(d, ignore_errors=True)
     out["wall_affine"] = {m: fit_affine(t) for m, t in walls.items()}
     # the vocabulary-bound claim reads off DISTINCT PAIRS (the state's
@@ -1487,11 +1487,11 @@ def rag_prep_lane() -> None:
                 file=sys.stderr,
             )
         finally:
-            staged = SQ._dedup_stage_cache.pop(
-                f"{d}|{SQ.DEDUP_STREAM_BATCHES}", None
+            staged = SQ._ranged_stages.pop(
+                ("documents", d, SQ.DEDUP_STREAM_BATCHES), None
             )
             if staged:
-                shutil.rmtree(staged, ignore_errors=True)
+                shutil.rmtree(staged[0], ignore_errors=True)
             shutil.rmtree(d, ignore_errors=True)
     out["manifest_wall_affine"] = {
         m: fit_affine(t) for m, t in walls_m.items()
@@ -2373,11 +2373,11 @@ def bpe_drift_rocksdb_lane() -> None:
             "equals_default_provider": rocks_rows == default_rows,
         }
     finally:
-        staged = SQ._dedup_stage_cache.pop(
-            f"{d}|{SQ.DEDUP_STREAM_BATCHES}", None
+        staged = SQ._ranged_stages.pop(
+            ("documents", d, SQ.DEDUP_STREAM_BATCHES), None
         )
         if staged:
-            shutil.rmtree(staged, ignore_errors=True)
+            shutil.rmtree(staged[0], ignore_errors=True)
         shutil.rmtree(d, ignore_errors=True)
     path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_SCALE.json"

@@ -2,18 +2,28 @@
 (SURVEY.md §2C) and — where the semantics are SQL-expressible — verified
 against the DuckDB oracle like any batch query.
 
-Each query here: reads the events table as a *stream* (file source,
+Each query here: reads a table as a *stream* (file source,
 availableNow trigger), runs the streaming operator (windowed agg /
-stateful dedup / session windows), sinks to an in-memory table, and
-returns that table's DataFrame. So the driver's correctness gate checks
-actual streaming execution, not a batch re-formulation.
+stateful dedup / session windows / foreachBatch fold), sinks to an
+in-memory table or at-rest state, and returns a DataFrame over it. So
+the oracle gate checks actual streaming execution, not a batch
+re-formulation.
+
+Two helpers carry the plumbing. ``_ranged_stream`` stages a table once
+as n column-ranged files and streams them one per trigger (ordered
+micro-batches). ``_run_stream`` runs every query: it alone sets and
+restores the session confs a query captures at start, and removes the
+checkpoint it creates.
 """
 
 from __future__ import annotations
 
+import glob
 import itertools
+import os
+import shutil
 import tempfile
-from contextlib import contextmanager
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,13 +50,10 @@ def _staged_dir(path: str) -> str:
     arrives as a DIRECTORY: the file-stream source does not recurse
     into subdirectories, so symlinking the directory itself would
     silently stream ZERO rows — stage each part file instead."""
-    import glob as _glob
-    import os
-
     if path not in _stage_cache:
         d = tempfile.mkdtemp(prefix="kpws_src_")
         if os.path.isdir(path):
-            parts = sorted(_glob.glob(os.path.join(path, "*.parquet")))
+            parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
             if not parts:
                 raise FileNotFoundError(f"no parquet files under {path}")
             for i, p in enumerate(parts):
@@ -66,6 +73,74 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: staged range splits: (name, sf_dir, n) → (stage dir, lo, span)
+_ranged_stages: dict[tuple[str, str, int], tuple[str, int, int]] = {}
+
+
+def _write_file(df: DataFrame, dst: str) -> None:
+    """Write ``df`` as the single parquet file ``dst``. Spark writes a
+    directory; its one part file is moved out and the directory
+    dropped. The directory's '_' prefix keeps a file source listing
+    ``dst``'s parent meanwhile from admitting it."""
+    tmp = os.path.join(os.path.dirname(dst), "_" + os.path.basename(dst))
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    [part] = glob.glob(os.path.join(tmp, "part-*.parquet"))
+    shutil.move(part, dst)
+    shutil.rmtree(tmp)
+
+
+def _ranged_stream(
+    spark: SparkSession, sf_dir: str, name: str, df: DataFrame, col: str, n: int
+) -> tuple[DataFrame, int, int]:
+    """``df`` as a stream of ``n`` micro-batches ranged on ``col``.
+
+    Returns (stream, lo, span): batch i holds the rows with
+    lo + i·span <= col < lo + (i+1)·span. The split is staged once per
+    (name, sf_dir, n) as n single parquet files with strictly
+    increasing mtimes, so the file source admits them oldest-first —
+    micro-batches arrive in ``col`` order, the precondition for
+    first-wins dedup and epoch-keyed state to be reproducible. ``name``
+    must identify ``df``'s rows within ``sf_dir``. The stream reads one
+    file per trigger with the staged file's memoized schema, so a warm
+    call runs no Spark job."""
+    key = (name, sf_dir, n)
+    if key not in _ranged_stages:
+        lo, hi = df.agg(F.min(col), F.max(col)).first()
+        span = (hi - lo + n) // n
+        stage = tempfile.mkdtemp(prefix=f"kpws_{name}_src_")
+        c = F.col(col)
+        for i in range(n):
+            dst = os.path.join(stage, f"{i:03d}.parquet")
+            rows = df.filter((c >= lo + i * span) & (c < lo + (i + 1) * span))
+            _write_file(rows, dst)
+            t = 1_600_000_000 + i * 10
+            os.utime(dst, (t, t))
+        _ranged_stages[key] = (stage, lo, span)
+    stage, lo, span = _ranged_stages[key]
+    schema = table_schema(spark, os.path.join(stage, "000.parquet"))
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+    )
+    return stream, lo, span
+
+
+#: micro-batches for the documents streams (doc_id-ranged files)
+DEDUP_STREAM_BATCHES = 4
+
+
+def _documents_stream(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, int, int]:
+    """The documents table as DEDUP_STREAM_BATCHES doc_id-ordered
+    micro-batches: (stream, lo, span) of _ranged_stream."""
+    docs = load_table(spark, sf_dir, "documents")
+    return _ranged_stream(
+        spark, sf_dir, "documents", docs, "doc_id", DEDUP_STREAM_BATCHES
+    )
+
+
 #: state partitions for the declared streaming queries. Stateful
 #: operators commit one store (stream-stream joins: four) per partition
 #: per batch — a file create+rename each — so partition count must track
@@ -76,40 +151,83 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: baked into the checkpoint).
 STREAM_STATE_PARTITIONS = 8
 
+#: the disk-backed state store, ``_run_stream(provider="rocksdb")``:
+#: required by transformWithState, and the hand-off
+#: stream_bpe_vocab_drift's state guard names (the rocksdbjni jar ships
+#: with pyspark 4, so state is no longer bounded by executor heap)
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state."
+    "RocksDBStateStoreProvider"
+)
 
-def _run_to_memory(
-    stream_df: DataFrame, mode: str
-) -> tuple[DataFrame, StreamingQuery]:
-    """Execute a streaming DataFrame to completion into a memory sink.
 
-    Returns the sink table and the finished query (for callers that
-    keep its plan receipts, see _plan_receipt). The checkpoint is
-    removed once the query has terminated: an availableNow run is never
-    resumed, and its plan and progress stay readable from the query."""
-    import shutil
+def _run_stream(
+    stream_df: DataFrame,
+    sink: str | Callable[[DataFrame, int], None],
+    *,
+    mode: str | None = None,
+    ckpt: str | None = None,
+    provider: str | None = None,
+) -> StreamingQuery:
+    """Run a streaming DataFrame to completion (availableNow) and return
+    the finished query.
 
-    name = f"kpws_stream_{next(_counter)}"
-    ckpt = tempfile.mkdtemp(prefix="kpws_ckpt_")
+    ``sink`` is ``"memory"`` (a counter-named memory table,
+    ``spark.table(q.name)``) or a ``foreachBatch`` function. A query
+    captures the session's SQL confs when it STARTS, so the two it
+    needs — shuffle partitions = STREAM_STATE_PARTITIONS and, with
+    ``provider="rocksdb"``, the state-store provider — are set here and
+    restored in ``finally``; a key that was unset is unset again. The
+    provider is validated before any conf changes. The checkpoint this
+    call creates is removed once the query has terminated: an
+    availableNow run is never resumed, and its plan and progress stay
+    readable from the query. A caller that passes ``ckpt`` (to resume
+    across runs) owns it and removes it."""
+    if provider not in (None, "rocksdb"):
+        raise ValueError(f"unknown state_store {provider!r}")
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
+    confs = {"spark.sql.shuffle.partitions": str(STREAM_STATE_PARTITIONS)}
+    if provider:
+        confs["spark.sql.streaming.stateStore.providerClass"] = ROCKSDB_PROVIDER
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    own_ckpt = ckpt is None
+    if own_ckpt:
+        ckpt = tempfile.mkdtemp(prefix="kpws_ckpt_")
     q = None
     try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        w = stream_df.writeStream
+        if mode:
+            w = w.outputMode(mode)
+        if sink == "memory":
+            w = w.format("memory").queryName(f"kpws_stream_{next(_counter)}")
+        else:
+            w = w.foreachBatch(sink)
         q = (
-            stream_df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
+            w.option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
     finally:
-        # the conf is captured at stream start; restore for batch plans
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if q is None or not q.isActive:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        if own_ckpt and (q is None or not q.isActive):
             shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name), q
+    return q
+
+
+def _run_to_memory(
+    stream_df: DataFrame, mode: str, provider: str | None = None
+) -> tuple[DataFrame, StreamingQuery]:
+    """_run_stream into a memory sink: the sink table and the finished
+    query (for callers that keep its plan receipts, see _plan_receipt)."""
+    q = _run_stream(stream_df, "memory", mode=mode, provider=provider)
+    return stream_df.sparkSession.table(q.name), q
 
 
 def _plan_receipt(q: StreamingQuery) -> dict:
@@ -433,71 +551,17 @@ def stream_tws_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
 
     ev = _events_stream(spark, sf_dir).select("user_id", "event_type")
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
+    totals = ev.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=Totals(),
+        outputStructType="user_id long, n long, n_types long",
+        outputMode="Update",
+        timeMode="None",
     )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",  # required by transformWithState
-    )
-    try:
-        totals = ev.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=Totals(),
-            outputStructType="user_id long, n long, n_types long",
-            outputMode="Update",
-            timeMode="None",
-        )
-        return _run_to_memory(totals, "update")[0]
-    finally:
-        if prev:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
+    # transformWithState requires the RocksDB state store
+    return _run_to_memory(totals, "update", provider="rocksdb")[0]
 
 
 # --- incremental streaming near-dup dedup ----------------------------------
-
-#: micro-batches for the incremental dedup stream (doc_id-ranged files)
-DEDUP_STREAM_BATCHES = 4
-
-_dedup_stage_cache: dict[str, str] = {}
-
-
-def _documents_batched_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Split the documents table into DEDUP_STREAM_BATCHES doc_id-ranged
-    parquet files, one per future micro-batch, with strictly increasing
-    mtimes so the file source admits them oldest-first — i.e. micro-
-    batches arrive in doc_id order, the precondition for first-wins
-    dedup to be reproducible."""
-    import glob
-    import os
-    import shutil
-
-    key = f"{sf_dir}|{DEDUP_STREAM_BATCHES}"
-    if key in _dedup_stage_cache:
-        return _dedup_stage_cache[key]
-    ensure_nanos_readable(spark)
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
-    lo, hi = docs.agg(
-        F.min("doc_id"), F.max("doc_id")
-    ).first()
-    span = (hi - lo + DEDUP_STREAM_BATCHES) // DEDUP_STREAM_BATCHES
-    stage = tempfile.mkdtemp(prefix="kpws_dedup_src_")
-    base_t = 1_600_000_000
-    for i in range(DEDUP_STREAM_BATCHES):
-        part_dir = os.path.join(stage, f"_tmp{i}")
-        docs.filter(
-            (F.col("doc_id") >= lo + i * span)
-            & (F.col("doc_id") < lo + (i + 1) * span)
-        ).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        [part] = glob.glob(os.path.join(part_dir, "part-*.parquet"))
-        dst = os.path.join(stage, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(part_dir)
-        os.utime(dst, (base_t + i * 10, base_t + i * 10))
-    _dedup_stage_cache[key] = stage
-    return stage
 
 
 def _minhash_bucket_pairs(docs_df: DataFrame) -> DataFrame:
@@ -591,13 +655,10 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes micro-batch replay idempotent — the foreach_sink.py crash
     lesson applied.
     """
-    import os
-
-    stage = _documents_batched_dir(spark, sf_dir)
+    stream, _, _ = _documents_stream(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="kpws_dedup_run_")
     state_base = os.path.join(work, "state")
     out_base = os.path.join(work, "kept")
-    ckpt = os.path.join(work, "ckpt")
 
     def merge(bdf: DataFrame, bid: int) -> None:
         sp = bdf.sparkSession
@@ -641,25 +702,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state_base, f"v{bid}")
         )
 
-    ensure_nanos_readable(spark)
-    schema = table_schema(spark, table_path(sf_dir, "documents"))
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
-        q = (
-            src.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_stream(stream, merge)
     return spark.read.parquet(
         *[
             os.path.join(out_base, f"b{i}")
@@ -697,24 +740,20 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap count over rows that matched the broadcast — identical to
     the batch plan, applied per micro-batch.
     """
-    import os
-
     from kafka_parquet_writer_spark.functions import texthash as TH
     from kafka_parquet_writer_spark.operators.llm_prep import (
         DECON_BENCH_MOD,
         DECON_MIN_SHARED,
     )
 
-    stage = _documents_batched_dir(spark, sf_dir)
+    stream, _, _ = _documents_stream(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="kpws_decon_run_")
     out_base = os.path.join(work, "flagged")
-    ckpt = os.path.join(work, "ckpt")
     bench_path = os.path.join(work, "bench_shingles")
 
     # the fixed benchmark index, built once before the stream starts —
     # the artifact a production pipeline ships alongside the eval suite
-    ensure_nanos_readable(spark)
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     (
         docs.filter(F.col("doc_id") % DECON_BENCH_MOD == 0)
         .select(F.explode(TH.word_shingles_expr("text", 3)).alias("shingle"))
@@ -740,24 +779,7 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(out_base, f"b{bid}")
         )
 
-    schema = docs.schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
-        q = (
-            src.writeStream.foreachBatch(scrub)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_stream(stream, scrub)
     return spark.read.parquet(
         *[
             os.path.join(out_base, f"b{i}")
@@ -850,13 +872,7 @@ def stream_passage_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from kafka_parquet_writer_spark.operators.rag_prep import passage_frame
 
-    stage = _documents_batched_dir(spark, sf_dir)
-    schema = table_schema(spark, table_path(sf_dir, "documents"))
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    src, _, _ = _documents_stream(spark, sf_dir)
     return _run_to_memory(passage_frame(src), "append")[0]
 
 
@@ -868,40 +884,6 @@ def stream_passage_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 CDC_STREAM_BATCHES = 4
 #: event_type treated as a DELETE tombstone; everything else upserts
 CDC_DELETE_TYPE = "error"
-
-_cdc_stage_cache: dict[str, str] = {}
-
-
-def _events_batched_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Split events into CDC_STREAM_BATCHES event_id-ranged parquet
-    files with strictly increasing mtimes (oldest-first admission) —
-    the staged CDC feed. Files are written from the normalized table so
-    the streaming schema is plain TIMESTAMP, not raw long-nanos."""
-    import glob
-    import os
-    import shutil
-
-    key = f"{sf_dir}|{CDC_STREAM_BATCHES}"
-    if key in _cdc_stage_cache:
-        return _cdc_stage_cache[key]
-    ev = load_table(spark, sf_dir, "events")
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    span = (hi - lo + CDC_STREAM_BATCHES) // CDC_STREAM_BATCHES
-    stage = tempfile.mkdtemp(prefix="kpws_cdc_src_")
-    base_t = 1_600_000_000
-    for i in range(CDC_STREAM_BATCHES):
-        part_dir = os.path.join(stage, f"_tmp{i}")
-        ev.filter(
-            (F.col("event_id") >= lo + i * span)
-            & (F.col("event_id") < lo + (i + 1) * span)
-        ).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        [part] = glob.glob(os.path.join(part_dir, "part-*.parquet"))
-        dst = os.path.join(stage, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(part_dir)
-        os.utime(dst, (base_t + i * 10, base_t + i * 10))
-    _cdc_stage_cache[key] = stage
-    return stage
 
 
 @query(
@@ -937,14 +919,15 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys rewrite); the fold logic (latest-by-version, counter
     accumulation, tombstone semantics) is exactly what's proven here.
     """
-    import os
-
-    src = _events_batched_dir(spark, sf_dir)
-    schema = table_schema(spark, os.path.join(src, "000.parquet"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    # the feed is staged from the normalized table, so its streaming
+    # schema is plain TIMESTAMP, not raw long-nanos
+    stream, _, _ = _ranged_stream(
+        spark,
+        sf_dir,
+        "events",
+        load_table(spark, sf_dir, "events"),
+        "event_id",
+        CDC_STREAM_BATCHES,
     )
     state_base = tempfile.mkdtemp(prefix="kpws_cdc_state_")
     holder: dict[str, str | None] = {"state": None}
@@ -987,21 +970,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         latest.write.mode("overwrite").parquet(out)
         holder["state"] = out
 
-    ckpt = tempfile.mkdtemp(prefix="kpws_cdc_ckpt_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
-    try:
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_stream(stream, apply_batch)
     return (
         spark.read.parquet(holder["state"])
         .filter(F.col("event_type") != CDC_DELETE_TYPE)
@@ -1085,36 +1054,6 @@ LATE_SPLIT_TS = "2024-01-16 00:00:00"
 #: watermark delay
 LATE_WM_MIN = 10
 
-_late_stage_cache: dict[str, tuple[str, str]] = {}
-
-
-def _late_staged_files(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """(on_time_file, late_file): the NEWER half of events and the
-    OLDER half, as standalone parquet files ready to be staged."""
-    import glob
-    import os
-    import shutil
-
-    if sf_dir in _late_stage_cache:
-        return _late_stage_cache[sf_dir]
-    ev = load_table(spark, sf_dir, "events")
-    hold = tempfile.mkdtemp(prefix="kpws_late_files_")
-    out = []
-    preds = [
-        ("on_time", F.col("ts") >= F.lit(LATE_SPLIT_TS).cast("timestamp")),
-        ("late", F.col("ts") < F.lit(LATE_SPLIT_TS).cast("timestamp")),
-    ]
-    for name, pred in preds:
-        part_dir = os.path.join(hold, f"_tmp_{name}")
-        ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        [part] = glob.glob(os.path.join(part_dir, "part-*.parquet"))
-        dst = os.path.join(hold, f"{name}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(part_dir)
-        out.append(dst)
-    _late_stage_cache[sf_dir] = (out[0], out[1])
-    return _late_stage_cache[sf_dir]
-
 
 @query(
     "stream_late_data_drop",
@@ -1158,54 +1097,42 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup, which is why watermarks bound state size at 100 TB -
     closed windows cost nothing, late floods touch no state.
     """
-    import os
-    import shutil
-
-    on_time_f, late_f = _late_staged_files(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
+    split = F.lit(LATE_SPLIT_TS).cast("timestamp")
     src = tempfile.mkdtemp(prefix="kpws_late_src_")
     ckpt = tempfile.mkdtemp(prefix="kpws_late_ckpt_")
     out_dir = tempfile.mkdtemp(prefix="kpws_late_out_")
-    schema = table_schema(spark, on_time_f)
+    agg = (
+        spark.readStream.schema(ev.schema)
+        .parquet(src)
+        .withWatermark("ts", f"{LATE_WM_MIN} minutes")
+        .groupBy(F.window("ts", "5 minutes"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    flat = agg.select(
+        F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
+            "win_start"
+        ),
+        "n",
+    )
 
-    def run_once() -> None:
-        ev = spark.readStream.schema(schema).parquet(src)
-        agg = (
-            ev.withWatermark("ts", f"{LATE_WM_MIN} minutes")
-            .groupBy(F.window("ts", "5 minutes"))
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        flat = agg.select(
-            F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "win_start"
-            ),
-            "n",
-        )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-        )
-        try:
-            q = (
-                flat.writeStream.outputMode("append")
-                .foreachBatch(
-                    lambda df, bid: df.write.mode("append").parquet(out_dir)
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    def append_out(df: DataFrame, bid: int) -> None:
+        df.write.mode("append").parquet(out_dir)
 
-    # run 1: only the on-time half exists; its no-data final batch
-    # emits every window the advanced watermark closes
-    shutil.copy(on_time_f, os.path.join(src, "000.parquet"))
-    run_once()
-    # run 2: the older half arrives after a restart; the checkpointed
-    # watermark must drop all of it
-    shutil.copy(late_f, os.path.join(src, "001.parquet"))
-    run_once()
+    try:
+        # run 1: only the on-time half exists; its no-data final batch
+        # emits every window the advanced watermark closes
+        on_time = ev.filter(F.col("ts") >= split)
+        _write_file(on_time, os.path.join(src, "000.parquet"))
+        _run_stream(flat, append_out, mode="append", ckpt=ckpt)
+        # run 2: the older half arrives after a restart; the checkpointed
+        # watermark must drop all of it
+        late = ev.filter(F.col("ts") < split)
+        _write_file(late, os.path.join(src, "001.parquet"))
+        _run_stream(flat, append_out, mode="append", ckpt=ckpt)
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out_dir)
 
 
@@ -1738,25 +1665,10 @@ def _run_support_filtered(
     error.
     """
     acc = tempfile.mkdtemp(prefix="kpws_drift_acc_")
-    ckpt = tempfile.mkdtemp(prefix="kpws_ckpt_")
-    spark = pairs.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
+    _run_stream(
+        pairs, lambda bdf, bid: _fold_support_batch(bdf, bid, acc, min_support)
     )
-    try:
-        q = (
-            pairs.writeStream.foreachBatch(
-                lambda bdf, bid: _fold_support_batch(bdf, bid, acc, min_support)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return _read_support_accumulator(spark, acc)
+    return _read_support_accumulator(pairs.sparkSession, acc)
 
 
 #: the support accumulator's fixed on-disk schema — read with it
@@ -1777,8 +1689,6 @@ def _fold_support_batch(
     append to a shared dir double-counted (epoch, pair) rows on
     retry — r12 ADVICE). The dir name uses '-' not '=' so the final
     read never mistakes it for a Hive partition column."""
-    import os
-
     (
         batch_df.groupBy("epoch", "a", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -1865,43 +1775,6 @@ def _bpe_drift_oracle() -> str:
     """
 
 
-#: provider class for the disk-backed state store hand-off (the
-#: rocksdbjni jar ships with pyspark 4, so the hand-off is runnable
-#: here, not just nameable — state no longer bounded by executor
-#: heap). Scoped to the drift key: it is the only key that exposes
-#: the knob, so the shared runner does not take it.
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-
-
-@contextmanager
-def _state_store_provider(spark: SparkSession, state_store: str | None):
-    """Bracket a stream start with the chosen state-store provider.
-
-    The provider conf is captured when the streaming query STARTS, so
-    wrapping the _run_to_memory call is equivalent to setting it
-    inside — and set/restore must survive exceptions (validated
-    BEFORE any conf mutation: raising between set and restore would
-    leak the override into every later batch plan)."""
-    if state_store not in (None, "rocksdb"):
-        raise ValueError(f"unknown state_store {state_store!r}")
-    if state_store is None:
-        yield
-        return
-    prev = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, ROCKSDB_PROVIDER)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prev)
-
-
 @query("stream_bpe_vocab_drift", oracle=_bpe_drift_oracle())
 def stream_bpe_vocab_drift(
     spark: SparkSession,
@@ -1945,22 +1818,8 @@ def stream_bpe_vocab_drift(
     """
     from kafka_parquet_writer_spark.functions import texthash as TH
 
-    B, half = BPE_DRIFT_EPOCHS, BPE_DRIFT_EPOCHS // 2
-    docs_path = table_path(sf_dir, "documents")
-    ensure_nanos_readable(spark)
-    lo, hi = (
-        spark.read.parquet(docs_path)
-        .agg(F.min("doc_id"), F.max("doc_id"))
-        .first()
-    )
-    span = (hi - lo + B) // B
-    stage = _documents_batched_dir(spark, sf_dir)
-    schema = table_schema(spark, docs_path)
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    half = BPE_DRIFT_EPOCHS // 2
+    src, lo, span = _documents_stream(spark, sf_dir)
     w = src.select(
         F.expr(f"(doc_id - {lo}) div {span}").alias("epoch"),
         TH.words_expr("text").alias("ws"),
@@ -1982,8 +1841,9 @@ def stream_bpe_vocab_drift(
         agg = pairs.groupBy("epoch", "a", "b").agg(
             F.count(F.lit(1)).alias("n")
         )
-        with _state_store_provider(spark, state_store):
-            out = _drift_state_guard(_run_to_memory(agg, "complete")[0])
+        out = _drift_state_guard(
+            _run_to_memory(agg, "complete", provider=state_store)[0]
+        )
     else:
         # opt-in support pre-filter: pairs below min_support in their
         # epoch never enter state (see _run_support_filtered for the
@@ -2132,21 +1992,7 @@ def stream_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     B = MIX_REBALANCE_EPOCHS
-    docs_path = table_path(sf_dir, "documents")
-    ensure_nanos_readable(spark)
-    lo, hi = (
-        spark.read.parquet(docs_path)
-        .agg(F.min("doc_id"), F.max("doc_id"))
-        .first()
-    )
-    span = (hi - lo + B) // B
-    stage = _documents_batched_dir(spark, sf_dir)
-    schema = table_schema(spark, docs_path)
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    src, lo, span = _documents_stream(spark, sf_dir)
     w = src.filter(F.col("lang").isNotNull()).select(
         F.expr(f"(doc_id - {lo}) div {span}").alias("epoch"),
         "lang",
@@ -2218,43 +2064,6 @@ def stream_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the per-query rollup needs nothing across batches)
 QUERY_STREAM_BATCHES = 4
 
-_query_stage_cache: dict[str, str] = {}
-
-
-def _part_batched_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Split the part table (the retrieval surface's query workload)
-    into QUERY_STREAM_BATCHES p_partkey-ranged parquet files with
-    strictly increasing mtimes, one per future micro-batch — the
-    documents splitter's pattern applied to the QUERY side: queries
-    arrive over time, the corpus-derived manifest is the static
-    side."""
-    import glob
-    import os
-    import shutil
-
-    key = f"{sf_dir}|part|{QUERY_STREAM_BATCHES}"
-    if key in _query_stage_cache:
-        return _query_stage_cache[key]
-    part = spark.read.parquet(table_path(sf_dir, "part"))
-    lo, hi = part.agg(F.min("p_partkey"), F.max("p_partkey")).first()
-    span = (hi - lo + QUERY_STREAM_BATCHES) // QUERY_STREAM_BATCHES
-    stage = tempfile.mkdtemp(prefix="kpws_query_src_")
-    base_t = 1_600_000_000
-    for i in range(QUERY_STREAM_BATCHES):
-        part_dir = os.path.join(stage, f"_tmp{i}")
-        part.filter(
-            (F.col("p_partkey") >= lo + i * span)
-            & (F.col("p_partkey") < lo + (i + 1) * span)
-        ).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        [pfile] = glob.glob(os.path.join(part_dir, "part-*.parquet"))
-        dst = os.path.join(stage, f"{i:03d}.parquet")
-        shutil.move(pfile, dst)
-        shutil.rmtree(part_dir)
-        os.utime(dst, (base_t + i * 10, base_t + i * 10))
-    _query_stage_cache[key] = stage
-    return stage
-
-
 #: the last stream_query_router run's plan receipts (tests read this
 #: after invoking the key; bounded: one plan string + one list)
 LAST_ROUTER_TRACE: dict = {}
@@ -2318,12 +2127,13 @@ def stream_query_router(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
 
-    stage = _part_batched_dir(spark, sf_dir)
-    schema = table_schema(spark, table_path(sf_dir, "part"))
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+    src, _, _ = _ranged_stream(
+        spark,
+        sf_dir,
+        "part",
+        load_table(spark, sf_dir, "part"),
+        "p_partkey",
+        QUERY_STREAM_BATCHES,
     )
     qt = src.select(
         F.col("p_partkey").cast("long").alias("query_id"),
@@ -2372,47 +2182,6 @@ def stream_query_router(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the IVF query set, so every query lives inside one micro-batch)
 ANN_STREAM_BATCHES = 4
 
-_ann_stage_cache: dict[str, str] = {}
-
-
-def _embedding_queries_batched_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the IVF query set (vec_id < IVF_N_QUERIES of the
-    embeddings table) into ANN_STREAM_BATCHES vec_id-ranged parquet
-    files with strictly increasing mtimes — the query-side staging
-    pattern (documents/part splitters) applied to the embedding
-    surface."""
-    import glob
-    import os
-    import shutil
-
-    from kafka_parquet_writer_spark.operators.similarity import (
-        IVF_N_QUERIES,
-    )
-
-    key = f"{sf_dir}|annq|{ANN_STREAM_BATCHES}"
-    if key in _ann_stage_cache:
-        return _ann_stage_cache[key]
-    q = spark.read.parquet(table_path(sf_dir, "embeddings")).filter(
-        F.col("vec_id") < IVF_N_QUERIES
-    )
-    span = (IVF_N_QUERIES + ANN_STREAM_BATCHES - 1) // ANN_STREAM_BATCHES
-    stage = tempfile.mkdtemp(prefix="kpws_annq_src_")
-    base_t = 1_600_000_000
-    for i in range(ANN_STREAM_BATCHES):
-        part_dir = os.path.join(stage, f"_tmp{i}")
-        q.filter(
-            (F.col("vec_id") >= i * span)
-            & (F.col("vec_id") < (i + 1) * span)
-        ).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        [pfile] = glob.glob(os.path.join(part_dir, "part-*.parquet"))
-        dst = os.path.join(stage, f"{i:03d}.parquet")
-        shutil.move(pfile, dst)
-        shutil.rmtree(part_dir)
-        os.utime(dst, (base_t + i * 10, base_t + i * 10))
-    _ann_stage_cache[key] = stage
-    return stage
-
-
 def _stream_ann_oracle() -> str:
     from kafka_parquet_writer_spark.operators.similarity import _ivf_oracle
 
@@ -2422,6 +2191,20 @@ def _stream_ann_oracle() -> str:
 #: the last stream_ann_route run's plan receipts (same shape as
 #: LAST_ROUTER_TRACE; tests read this after invoking the key)
 LAST_ANN_ROUTE_TRACE: dict = {}
+
+
+def _ann_queries_stream(
+    spark: SparkSession, sf_dir: str, emb: DataFrame
+) -> DataFrame:
+    """The IVF query set (vec_id < IVF_N_QUERIES of the embeddings
+    table ``emb``) as ANN_STREAM_BATCHES vec_id-ranged micro-batches,
+    so every query lives inside one micro-batch."""
+    from kafka_parquet_writer_spark.operators.similarity import IVF_N_QUERIES
+
+    queries = emb.filter(F.col("vec_id") < IVF_N_QUERIES)
+    return _ranged_stream(
+        spark, sf_dir, "ann_queries", queries, "vec_id", ANN_STREAM_BATCHES
+    )[0]
 
 
 def _ivf_cell_udfs(probe: int):
@@ -2516,25 +2299,19 @@ def stream_ann_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nearest_cell, probe_cells = _ivf_cell_udfs(IVF_PROBE)
 
-    emb_path = table_path(sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     # static side: the cell-assigned corpus — materialized ONCE.
     # Micro-batch execution re-plans and re-executes the static side
     # every trigger; without the localCheckpoint each of the
     # ANN_STREAM_BATCHES triggers re-scans the corpus and re-runs
     # cell assignment before rebuilding the broadcast.
-    corpus = spark.read.parquet(emb_path).select(
+    corpus = emb.select(
         F.col("vec_id").alias("n_id"),
         F.col("embedding").alias("cv"),
         nearest_cell(F.col("embedding")).alias("cell"),
     ).localCheckpoint()
 
-    stage = _embedding_queries_batched_dir(spark, sf_dir)
-    schema = table_schema(spark, emb_path)
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    src = _ann_queries_stream(spark, sf_dir, emb)
     probes = src.select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qv"),
@@ -2641,18 +2418,12 @@ def stream_ann_route_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ensure_ann_index,
     )
 
-    emb_path = table_path(sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     corpus = spark.table(_ensure_ann_index(spark, sf_dir))
 
-    # stream side: vec_id-ranged query micro-batches (the staged dir
+    # stream side: vec_id-ranged query micro-batches (the staged split
     # covers vec_id < IVF_N_QUERIES == IVFPQ_N_QUERIES)
-    stage = _embedding_queries_batched_dir(spark, sf_dir)
-    schema = table_schema(spark, emb_path)
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    src = _ann_queries_stream(spark, sf_dir, emb)
     # probe assignment via the closure-held-centroid pandas UDF — the
     # raw route's r15 form: the r13 expression trees re-paid ~500
     # centroid literals of Catalyst analysis per micro-batch
@@ -2682,8 +2453,7 @@ def stream_ann_route_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     LAST_ANN_PQ_TRACE.clear()
     LAST_ANN_PQ_TRACE.update(_plan_receipt(q))
     qemb = (
-        spark.read.parquet(emb_path)
-        .filter(F.col("vec_id") < IVFPQ_N_QUERIES)
+        emb.filter(F.col("vec_id") < IVFPQ_N_QUERIES)
         .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"))
     )
     table = table.join(F.broadcast(qemb), "q_id")
@@ -2727,7 +2497,7 @@ def stream_ann_route_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("srnk") <= IVFPQ_RERANK)
         .drop("srnk")
     )
-    store = spark.read.parquet(emb_path).select(
+    store = emb.select(
         F.col("vec_id").alias("n_id"), F.col("embedding").alias("cv")
     )
     rer = (
@@ -2809,8 +2579,6 @@ def stream_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage ever re-reads base text, the property that lets a 100 TB
     index be maintained by a stream instead of rebuilt by a nightly
     job."""
-    import os
-
     from pyspark.sql.window import Window as W
 
     from kafka_parquet_writer_spark.functions import texthash as TH
@@ -2820,13 +2588,7 @@ def stream_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     SC, L = RAG_IDF_SCALE, RAG_IMPACT_L
-    src = _documents_batched_dir(spark, sf_dir)
-    schema = table_schema(spark, os.path.join(src, "000.parquet"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream, _, _ = _documents_stream(spark, sf_dir)
     state_base = tempfile.mkdtemp(prefix="kpws_stridx_")
     holder: dict = {"gens": [], "tf_dirs": []}
 
@@ -2886,21 +2648,7 @@ def stream_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(gen_dir)
         holder["gens"].append(gen_dir)
 
-    ckpt = tempfile.mkdtemp(prefix="kpws_stridx_ckpt_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
-    try:
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q = _run_stream(stream, apply_batch)
     progress = q.lastProgress or {}
     LAST_STREAM_INDEX_TRACE.clear()
     LAST_STREAM_INDEX_TRACE.update(
@@ -2921,39 +2669,6 @@ def stream_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("gen") == F.col("mg"))
         .select("token", "doc_id", "impact", "pos")
     )
-
-
-def _embeddings_batched_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the FULL embeddings table into ANN_STREAM_BATCHES
-    vec_id-ranged parquet files with strictly increasing mtimes — the
-    corpus-side staging twin of _embedding_queries_batched_dir (which
-    stages only the query subset): micro-batches of newly-arrived
-    vectors for the streaming index maintainer."""
-    import glob
-    import os
-    import shutil
-
-    key = f"{sf_dir}|annall|{ANN_STREAM_BATCHES}"
-    if key in _ann_stage_cache:
-        return _ann_stage_cache[key]
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    span = (hi - lo + ANN_STREAM_BATCHES) // ANN_STREAM_BATCHES
-    stage = tempfile.mkdtemp(prefix="kpws_annall_src_")
-    base_t = 1_600_000_000
-    for i in range(ANN_STREAM_BATCHES):
-        part_dir = os.path.join(stage, f"_tmp{i}")
-        emb.filter(
-            (F.col("vec_id") >= lo + i * span)
-            & (F.col("vec_id") < lo + (i + 1) * span)
-        ).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        [pfile] = glob.glob(os.path.join(part_dir, "part-*.parquet"))
-        dst = os.path.join(stage, f"{i:03d}.parquet")
-        shutil.move(pfile, dst)
-        shutil.rmtree(part_dir)
-        os.utime(dst, (base_t + i * 10, base_t + i * 10))
-    _ann_stage_cache[key] = stage
-    return stage
 
 
 #: the last stream_ann_index_delta run's receipts (zero streaming
@@ -3004,19 +2719,18 @@ def stream_ann_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside — the r14 serving lesson applied to the build side), and
     the DuckDB oracle over the final artifact is the proof that the
     vectorized path reproduces the expression path's codes exactly."""
-    import os
-
     from kafka_parquet_writer_spark.operators.similarity import (
         _pq_code_mapper,
     )
 
     code_fn, code_schema = _pq_code_mapper()
-    src = _embeddings_batched_dir(spark, sf_dir)
-    schema = table_schema(spark, os.path.join(src, "000.parquet"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream, _, _ = _ranged_stream(
+        spark,
+        sf_dir,
+        "embeddings",
+        load_table(spark, sf_dir, "embeddings"),
+        "vec_id",
+        ANN_STREAM_BATCHES,
     )
     state_base = tempfile.mkdtemp(prefix="kpws_annidx_")
     holder: dict = {"dirs": []}
@@ -3028,14 +2742,7 @@ def stream_ann_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(out)
         holder["dirs"].append(out)
 
-    ckpt = tempfile.mkdtemp(prefix="kpws_annidx_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = _run_stream(stream, apply_batch)
     progress = q.lastProgress or {}
     LAST_STREAM_ANN_IDX_TRACE.clear()
     LAST_STREAM_ANN_IDX_TRACE.update(

@@ -76,9 +76,10 @@ def test_drift_rocksdb_state_store_is_provider_invariant(spark, tmp_path):
     provider. Results must be identical to the default in-memory
     provider, and the session conf must be restored afterwards."""
     from kafka_parquet_writer_spark.operators.streaming_queries import (
-        _PROVIDER_CONF,
         stream_bpe_vocab_drift,
     )
+
+    provider_conf = "spark.sql.streaming.stateStore.providerClass"
 
     docs = [
         (i, "hh hh hh " + " ".join(f"e{i}w{j}" for j in range(6)))
@@ -97,7 +98,7 @@ def test_drift_rocksdb_state_store_is_provider_invariant(spark, tmp_path):
         ).collect()
     }
     assert rocks == default and len(default) > 0
-    assert spark.conf.get(_PROVIDER_CONF, None) is None  # restored
+    assert spark.conf.get(provider_conf, None) is None  # restored
 
     import pytest as _pytest
 

@@ -3,6 +3,7 @@ batch equivalents computed by Spark itself."""
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_parquet_writer_spark.catalog import load_table
@@ -212,24 +213,120 @@ def test_staged_dir_stages_directory_tables(spark, tmp_path):
     assert out.collect()[0][0] == 100
 
 
-def test_memory_sink_runs_leave_no_checkpoint_dir(spark, sf_dir):
-    """`_run_to_memory` removes its checkpoint once the availableNow
-    query has terminated; the sink table stays readable."""
+def _ckpt_dirs():
     import os
 
-    from kafka_parquet_writer_spark.operators.streaming_queries import stream_dedup
+    tmp = tempfile.gettempdir()
+    return {n for n in os.listdir(tmp) if n.startswith("kpws_") and "ckpt" in n}
 
-    def ckpts():
-        tmp = tempfile.gettempdir()
-        return {n for n in os.listdir(tmp) if n.startswith("kpws_ckpt_")}
 
-    before = ckpts()
-    expected = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id", "event_type")
-        .distinct()
-        .count()
-    )
-    for _ in range(2):
-        assert stream_dedup(spark, sf_dir).count() == expected
-    assert ckpts() - before == set()
+@pytest.fixture
+def private_tmp(tmp_path, monkeypatch):
+    """Point this process's mkdtemp at a private dir, so checkpoint
+    dirs of other processes sharing the system temp dir are not
+    counted."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "stream_dedup",  # memory sink
+        "stream_cdc_apply",  # foreachBatch sink
+        "stream_late_data_drop",  # caller-owned checkpoint across two runs
+    ],
+)
+def test_memory_sink_runs_leave_no_checkpoint_dir(spark, sf_dir, key, private_tmp):
+    """Every stream run removes its checkpoint once the availableNow
+    query has terminated, and a caller that passes its own checkpoint
+    removes it too; the result stays readable."""
+    from kafka_parquet_writer_spark.registry import QUERIES, load_all_operators
+
+    load_all_operators()
+    before = _ckpt_dirs()
+    counts = [QUERIES[key](spark, sf_dir).count() for _ in range(2)]
+    assert _ckpt_dirs() - before == set()
+    assert counts[0] == counts[1] > 0
+    if key == "stream_dedup":
+        expected = (
+            load_table(spark, sf_dir, "events")
+            .select("user_id", "event_type")
+            .distinct()
+            .count()
+        )
+        assert counts[0] == expected
+
+
+def test_run_stream_restores_confs_and_checkpoint_when_a_batch_raises(
+    spark, tmp_path, private_tmp
+):
+    """A foreachBatch function that raises fails the query; the runner
+    still restores the shuffle-partition conf, leaves the state-store
+    provider unset when it was unset before, and removes the
+    checkpoint it created."""
+    from kafka_parquet_writer_spark.operators.streaming_queries import _run_stream
+
+    provider_conf = "spark.sql.streaming.stateStore.providerClass"
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+
+    def boom(df, bid):
+        raise RuntimeError("batch failed")
+
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    assert spark.conf.get(provider_conf, None) is None
+    before = _ckpt_dirs()
+    try:
+        with pytest.raises(Exception, match="batch failed"):
+            _run_stream(stream, boom, provider="rocksdb")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        assert spark.conf.get(provider_conf, None) is None
+        assert _ckpt_dirs() - before == set()
+        with pytest.raises(ValueError, match="unknown state_store"):
+            _run_stream(stream, boom, provider="bogus")
+        assert _ckpt_dirs() - before == set()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+
+
+def test_ranged_stream_stages_once_in_range_order(spark, tmp_path):
+    """The split is staged once: a second call for the same stage runs
+    no Spark job. The staged files hold consecutive ranges of the
+    column, with mtimes increasing in range order."""
+    import glob
+    import os
+    import shutil
+
+    from kafka_parquet_writer_spark.operators import streaming_queries as SQ
+
+    sf = str(tmp_path)
+    df = spark.range(0, 100).withColumnRenamed("id", "doc_id")
+    sc = spark.sparkContext
+    try:
+        _, lo, span = SQ._ranged_stream(spark, sf, "docs", df, "doc_id", 4)
+        assert (lo, span) == (0, 25)
+        sc.setJobGroup("ranged_warm", "warm ranged stream")
+        try:
+            stream, lo2, span2 = SQ._ranged_stream(
+                spark, sf, "docs", df, "doc_id", 4
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("ranged_warm") == []
+        assert (lo2, span2) == (lo, span) and stream.isStreaming
+        stage = SQ._ranged_stages[("docs", sf, 4)][0]
+        files = sorted(glob.glob(os.path.join(stage, "*.parquet")))
+        assert len(files) == 4
+        mtimes = [os.stat(f).st_mtime_ns for f in files]
+        assert mtimes == sorted(set(mtimes))
+        for i, f in enumerate(files):
+            lo_i, hi_i = spark.read.parquet(f).agg(
+                F.min("doc_id"), F.max("doc_id")
+            ).first()
+            assert (lo_i, hi_i) == (i * span, (i + 1) * span - 1)
+    finally:
+        staged = SQ._ranged_stages.pop(("docs", sf, 4), None)
+        if staged:
+            shutil.rmtree(staged[0], ignore_errors=True)

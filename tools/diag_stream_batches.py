@@ -1,7 +1,8 @@
 """Per-batch duration breakdown for streaming keys.
 
-Wraps the streaming runner (_run_to_memory) to capture the finished
-query's recentProgress, then invokes each named key once
+Wraps the streaming runner (_run_stream, which runs every memory-sink
+and foreachBatch stream) to capture the finished query's
+recentProgress, then invokes each named key once
 (warm session) and prints per-batch durationMs components
 (triggerExecution, queryPlanning, addBatch, walCommit,
 commitOffsets, getBatch) plus batch count.
@@ -30,14 +31,14 @@ def main() -> None:
 
     captured: list = []
 
-    orig = SQ._run_to_memory
+    orig = SQ._run_stream
 
-    def runner(stream_df, mode):
-        tbl, q = orig(stream_df, mode)
+    def runner(stream_df, sink, **kw):
+        q = orig(stream_df, sink, **kw)
         captured.append([json.loads(p.json) for p in q.recentProgress])
-        return tbl, q
+        return q
 
-    SQ._run_to_memory = runner
+    SQ._run_stream = runner
 
     import time
 
