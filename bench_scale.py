@@ -135,7 +135,7 @@ def _docs_times_k(spark, k: int, tag_words: bool):
 
 def docs_blowup_dir(spark, k: int, tag_words: bool, prefix: str) -> str:
     """Documents-only ×k staging dir: documents blown up, every other
-    table symlinked (the bpedrift/ragprep lane convention)."""
+    table symlinked (the bpedrift lane convention)."""
     from kafka_parquet_writer_spark.catalog import TABLES, table_path
 
     out = tempfile.mkdtemp(prefix=prefix)
@@ -1364,167 +1364,6 @@ def bpe_drift_lane() -> None:
     print(json.dumps({"bpe_drift_experiment": out}))
 
 
-def rag_prep_lane() -> None:
-    """Opt-in lane (`python bench_scale.py ragprep`): scale receipts
-    for the two round-11 claims that shipped as arguments, not yet
-    measurements:
-
-      rag_shard_manifest — "only the vocabulary crosses the wire":
-        per-doc array_distinct runs BEFORE the explode and the token
-        aggregate is map-side combined, so exchange volume tracks
-        VOCABULARY, not corpus. shared_vocab ×k (doc_ids re-keyed,
-        fixture vocabulary kept) grows tokens ∝ k while the vocab —
-        and the 16-row manifest — stay flat: wall growth is the cheap
-        scan/explode only. decorrelated ×k (per-copy word tags) grows
-        the vocab ∝ k: the honest worst case, the exchange must grow.
-
-      stream_mixture_rebalance — "state is epochs × |langs| rows,
-        tiny by construction": languages don't multiply under EITHER
-        blow-up mode (copies keep the fixture's lang column), so
-        state must read FLAT at ×8 in both, while wall is the
-        streaming fixed cost + per-copy scan work (the
-        STREAMING_SCALE affine convention).
-
-    Per (mode, k): min-of-3 interleaved end-to-end walls of both
-    keys, plus batch-computed receipts (vocab, postings-in rows,
-    tokens, state rows). Merged into BENCH_SCALE.json as
-    "rag_prep_experiment"."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from kafka_parquet_writer_spark import get_spark
-    from kafka_parquet_writer_spark.catalog import load_table
-    from kafka_parquet_writer_spark.functions import texthash as TH
-    from kafka_parquet_writer_spark.operators import rag_prep as RP
-    from kafka_parquet_writer_spark.operators import streaming_queries as SQ
-
-    spark = get_spark("rag_prep_lane")
-    B = SQ.MIX_REBALANCE_EPOCHS
-    # warm up codegen + the python worker pool + streaming machinery
-    # outside any timed point (the bpedrift lane's lesson: a cold x1
-    # point poisons the affine fit)
-    RP.rag_shard_manifest(spark, SF_DIR).count()
-    SQ.stream_mixture_rebalance(spark, SF_DIR).count()
-
-    def build_docs(k: int, tag_words: bool) -> str:
-        return docs_blowup_dir(
-            spark, k, tag_words, prefix=f"kpws_ragprep_x{k}_"
-        )
-
-    out: dict = {"epochs": B, "shards": RP.RAG_INDEX_SHARDS, "points": []}
-    points = [
-        (mode, k)
-        for mode in ("decorrelated", "shared_vocab")
-        for k in (1, 2, 4, 8)
-    ]
-    dirs = {
-        (mode, k): build_docs(k, tag_words=(mode == "decorrelated"))
-        for mode, k in points
-    }
-    best_m: dict[tuple, float] = {}
-    best_r: dict[tuple, float] = {}
-    for _pass in range(3):
-        for p in points:
-            t0 = time.time()
-            RP.rag_shard_manifest(spark, dirs[p]).count()
-            dt_m = time.time() - t0
-            t0 = time.time()
-            SQ.stream_mixture_rebalance(spark, dirs[p]).count()
-            dt_r = time.time() - t0
-            best_m[p] = min(best_m.get(p, dt_m), dt_m)
-            best_r[p] = min(best_r.get(p, dt_r), dt_r)
-            print(
-                f"{p[0]} x{p[1]}: manifest {dt_m:.3f}s, "
-                f"rebalance {dt_r:.3f}s (pass {_pass + 1})",
-                file=sys.stderr,
-            )
-    walls_m: dict[str, dict[int, float]] = {}
-    walls_r: dict[str, dict[int, float]] = {}
-    for mode, k in points:
-        d = dirs[(mode, k)]
-        try:
-            docs = load_table(spark, d, "documents")
-            dt = docs.select(
-                F.explode(
-                    F.array_distinct(TH.words_expr("text"))
-                ).alias("token")
-            )
-            vocab = dt.select("token").distinct().count()
-            postings_in = dt.count()
-            tokens = docs.agg(
-                F.sum(F.size(TH.words_expr("text")))
-            ).first()[0]
-            lo, hi = docs.agg(
-                F.min("doc_id"), F.max("doc_id")
-            ).first()
-            span = (hi - lo + B) // B
-            state_rows = (
-                docs.filter(F.col("lang").isNotNull())
-                .select(
-                    F.expr(f"(doc_id - {lo}) div {span}").alias("epoch"),
-                    "lang",
-                )
-                .distinct()
-                .count()
-            )
-            rec = {
-                "mode": mode,
-                "k": k,
-                "manifest_wall_sec": round(best_m[(mode, k)], 3),
-                "rebalance_wall_sec": round(best_r[(mode, k)], 3),
-                "vocab": int(vocab),
-                "postings_in": int(postings_in),
-                "tokens": int(tokens),
-                "state_rows": int(state_rows),
-            }
-            walls_m.setdefault(mode, {})[k] = rec["manifest_wall_sec"]
-            walls_r.setdefault(mode, {})[k] = rec["rebalance_wall_sec"]
-            out["points"].append(rec)
-            print(
-                f"{mode} x{k}: vocab={vocab}, postings_in={postings_in}, "
-                f"tokens={tokens}, state={state_rows}",
-                file=sys.stderr,
-            )
-        finally:
-            staged = SQ._ranged_stages.pop(
-                ("documents", d, SQ.DEDUP_STREAM_BATCHES), None
-            )
-            if staged:
-                shutil.rmtree(staged[0], ignore_errors=True)
-            shutil.rmtree(d, ignore_errors=True)
-    out["manifest_wall_affine"] = {
-        m: fit_affine(t) for m, t in walls_m.items()
-    }
-    out["rebalance_wall_affine"] = {
-        m: fit_affine(t) for m, t in walls_r.items()
-    }
-    # the claims read off the growth ratios: shared_vocab must show
-    # vocab ~1.0 while tokens ~8.0 (manifest exchange bounded by
-    # vocabulary); state_rows must show ~1.0 under BOTH modes
-    # (epochs × |langs| is corpus-size-independent)
-    for field in ("vocab", "postings_in", "tokens", "state_rows"):
-        by_mode: dict[str, dict[int, int]] = {}
-        for rec in out["points"]:
-            by_mode.setdefault(rec["mode"], {})[rec["k"]] = rec[field]
-        out[f"{field}_growth_x8_over_x1"] = {
-            m: round(t[8] / t[1], 3) for m, t in by_mode.items()
-        }
-
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_SCALE.json"
-    )
-    try:
-        with open(path) as f:
-            blob = json.load(f)
-    except (OSError, ValueError):
-        blob = {}
-    blob["rag_prep_experiment"] = out
-    with open(path, "w") as f:
-        f.write(json.dumps(blob) + "\n")
-    print(json.dumps({"rag_prep_experiment": out}))
-
-
 # Every lane name this file can itself write (opt-in sub-commands
 # included). _carry_forward preserves unknown lanes too — deleting
 # receipts is worse than keeping a renamed one — but stamps them and
@@ -1539,9 +1378,9 @@ KNOWN_LANES = frozenset({
     "batch_size_experiment", "bucket_verify_experiment",
     "stream_verify_experiment", "verify_ab_experiment",
     "jaccard_repin", "subseq_prune_experiment",
-    "bpe_drift_experiment", "rag_prep_experiment",
-    "ann_x32_receipt", "containment_affine_receipt",
-    "rag_retrieval_experiment", "wand_prune_receipt",
+    "bpe_drift_experiment", "ann_x32_receipt",
+    "containment_affine_receipt", "wand_prune_receipt",
+    "bmw_prune_receipt", "index_serve_receipt",
     "bpe_drift_rocksdb_point",
 })
 
@@ -1845,105 +1684,6 @@ def affine_receipt_lane() -> None:
     print(json.dumps(out))
 
 
-def rag_retrieval_lane() -> None:
-    """Opt-in lane (`python bench_scale.py ragretrieval`): scale
-    receipt for rag_topk_retrieval's claim — "cost ∝ postings of the
-    queried terms, not corpus size" (the broadcast query vocabulary
-    filters the exploded token stream BEFORE any exchange).
-
-    decorrelated ×k (per-copy word tags): copies share NO vocabulary
-    with the part-name query workload, so MATCHED postings stay flat
-    while the corpus grows ×k — wall growth is the cheap scan/explode
-    only, and the exchanges (all keyed by match-sized sets) must not
-    grow. shared_vocab ×k (doc_ids re-keyed, fixture vocabulary
-    kept): matched postings grow ∝ k — the honest worst case, cost
-    must grow ~linearly. Per (mode, k): min-of-3 walls plus the
-    matched-postings count receipt. Merged into BENCH_SCALE.json as
-    "rag_retrieval_experiment"."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from kafka_parquet_writer_spark import get_spark
-    from kafka_parquet_writer_spark.catalog import load_table
-    from kafka_parquet_writer_spark.functions import texthash as TH
-    from kafka_parquet_writer_spark.operators import rag_prep as RP
-
-    spark = get_spark("rag_retrieval_lane")
-    RP.rag_topk_retrieval(spark, SF_DIR).count()  # warm
-
-    points = [
-        (mode, k)
-        for mode in ("decorrelated", "shared_vocab")
-        for k in (1, 2, 4, 8)
-    ]
-    dirs = {
-        (mode, k): docs_blowup_dir(
-            spark, k, tag_words=(mode == "decorrelated"),
-            prefix=f"kpws_ragret_x{k}_",
-        )
-        for mode, k in points
-    }
-    best: dict[tuple, float] = {}
-    for _pass in range(3):
-        for p in points:
-            spark.catalog.clearCache()
-            t0 = time.time()
-            RP.rag_topk_retrieval(spark, dirs[p]).count()
-            dt = time.time() - t0
-            best[p] = min(best.get(p, dt), dt)
-            print(
-                f"{p[0]} x{p[1]}: {dt:.3f}s (pass {_pass + 1})",
-                file=sys.stderr,
-            )
-
-    out: dict = {"points": [], "topk": RP.RAG_TOPK}
-    walls: dict[str, dict[int, float]] = {}
-    for mode, k in points:
-        d = dirs[(mode, k)]
-        terms = (
-            load_table(spark, SF_DIR, "part")
-            .select(
-                F.explode(
-                    F.array_distinct(TH.words_expr("p_name"))
-                ).alias("term")
-            )
-            .distinct()
-        )
-        matched = (
-            load_table(spark, d, "documents")
-            .select(F.explode(TH.words_expr("text")).alias("token"))
-            .join(F.broadcast(terms), F.col("token") == F.col("term"))
-            .count()
-        )
-        rec = {
-            "mode": mode,
-            "k": k,
-            "wall_sec": round(best[(mode, k)], 3),
-            "matched_postings": int(matched),
-        }
-        walls.setdefault(mode, {})[k] = rec["wall_sec"]
-        out["points"].append(rec)
-        print(
-            f"{mode} x{k}: matched_postings={matched}", file=sys.stderr
-        )
-        shutil.rmtree(d, ignore_errors=True)
-    out["wall_affine"] = {m: fit_affine(t) for m, t in walls.items()}
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_SCALE.json"
-    )
-    try:
-        with open(path) as f:
-            blob = json.load(f)
-    except (OSError, ValueError):
-        blob = {}
-    blob["rag_retrieval_experiment"] = out
-    with open(path, "w") as f:
-        f.write(json.dumps(blob) + "\n")
-    print(json.dumps({"rag_retrieval_experiment": out}))
-
-
-
 def wand_prune_lane() -> None:
     """Opt-in lane (`python bench_scale.py wandprune`): receipt for
     rag_topk_retrieval_wand's claim — MaxScore/WAND pruning shrinks
@@ -1963,7 +1703,6 @@ def wand_prune_lane() -> None:
     import shutil
 
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from kafka_parquet_writer_spark import get_spark
     from kafka_parquet_writer_spark.operators import rag_prep as RP
@@ -2034,21 +1773,8 @@ def wand_prune_lane() -> None:
             .first()[0]
         )
         # static-L candidates: distinct (q, d) over truncated lists
-        L = RP.RAG_IMPACT_L
-        il = (
-            p["imp"]
-            .withColumn(
-                "pos",
-                F.row_number().over(
-                    Window.partitionBy("token").orderBy(
-                        F.col("impact").desc(), F.col("doc_id")
-                    )
-                ),
-            )
-            .filter(F.col("pos") <= L)
-        )
         static_cand = (
-            il.join(
+            RP._rank_impact_l(p["imp"]).join(
                 F.broadcast(p["qt"]), F.col("token") == F.col("term")
             )
             .select("query_id", "doc_id")
@@ -2267,15 +1993,15 @@ def index_serve_lane() -> None:
         d = skewed_dir(k)
         spark.catalog.clearCache()
         t0 = time.time()
-        RP._ensure_postings_index(spark, d)
-        RP._ensure_impact_index(spark, d)
+        RP._index_table(spark, d, "postings")
+        RP._index_table(spark, d, "impact_l")
         build = time.time() - t0
         # r15: the BM25 pair beside the tf-idf pair — the serving
         # claim must hold for the production-default scorer too (its
         # build additionally folds dl/avgdl; its serve plan reads
         # neither)
         t0 = time.time()
-        RP._ensure_bm25_index(spark, d)
+        RP._index_table(spark, d, "bm25_impact_l")
         bm25_build = time.time() - t0
         serve = scan = bserve = bscan = None
         for _pass in range(2):
@@ -2406,12 +2132,8 @@ if __name__ == "__main__":
         subseq_prune_lane()
     elif len(sys.argv) > 1 and sys.argv[1] == "bpedrift":
         bpe_drift_lane()
-    elif len(sys.argv) > 1 and sys.argv[1] == "ragprep":
-        rag_prep_lane()
     elif len(sys.argv) > 1 and sys.argv[1] == "affine":
         affine_receipt_lane()
-    elif len(sys.argv) > 1 and sys.argv[1] == "ragretrieval":
-        rag_retrieval_lane()
     elif len(sys.argv) > 1 and sys.argv[1] == "wandprune":
         wand_prune_lane()
     elif len(sys.argv) > 1 and sys.argv[1] == "bpedriftrocks":

@@ -22,12 +22,11 @@ is exposed as library functions with the same shape.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from kafka_parquet_writer_spark.artifacts import cache_frame
 from kafka_parquet_writer_spark.catalog import load_table
 from kafka_parquet_writer_spark.functions import texthash as TH
 from kafka_parquet_writer_spark.functions.portable import pround
@@ -711,13 +710,6 @@ ANN_TRAINED_ROUNDS = 0
 #: would ship without driver evidence).
 TRAINED_KEY_M = 128
 TRAINED_KEY_ROUNDS = 4
-
-#: per-sf_dir one-deep registry for dedup_embedding_ann_trained's
-#: cached (vec_id, u) frame — shared by the Lloyd rounds AND the
-#: final stats assignment; the next invocation for the same fixture
-#: unpersists its predecessor (the _INDEX_DELTA_CACHED pattern), so a
-#: long session holds at most one copy per fixture
-_TRAINED_CACHED: dict[str, list[DataFrame]] = {}
 
 
 def train_centroid_bank(
@@ -1764,10 +1756,10 @@ def dedup_embedding_ann_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed = _dedup_centroids(max(TRAINED_KEY_M, ANN_DEDUP_BANK))[
         :TRAINED_KEY_M
     ]
-    for prev in _TRAINED_CACHED.pop(sf_dir, []):
-        prev.unpersist()
-    u_only = emb.select("vec_id", "u").cache()
-    _TRAINED_CACHED[sf_dir] = [u_only]
+    # one cached (vec_id, u) frame shared by the Lloyd rounds AND the
+    # final stats assignment; the next invocation for the same fixture
+    # unpersists its predecessor, so a long session holds one copy
+    u_only = cache_frame(("dedup_trained", sf_dir), emb.select("vec_id", "u"))
     bank = train_centroid_bank(
         u_only, seed, TRAINED_KEY_ROUNDS, pre_cached=True
     )
@@ -1840,7 +1832,7 @@ _LAST_CC_ROUNDS = 0
 #: graph has contracted, while a driver union-find over the same edges
 #: is microseconds. At 100 TB the early rounds still run distributed;
 #: only the contracted tail crosses to the driver. 0 disables.
-CC_DRIVER_EDGES = int(os.environ.get("KPWS_CC_DRIVER_EDGES", "65536"))
+CC_DRIVER_EDGES = 65536
 
 
 def _cc_driver_finish(e: DataFrame) -> DataFrame:
@@ -1905,8 +1897,8 @@ def connected_components(
     id, so labels read directly off the edge list.
 
     TWO-PHASE (r15): once the surviving edge set is at most
-    ``driver_finish_edges`` (default ``CC_DRIVER_EDGES``, env
-    ``KPWS_CC_DRIVER_EDGES``), the remaining rounds collapse into one
+    ``driver_finish_edges`` (default ``CC_DRIVER_EDGES``), the
+    remaining rounds collapse into one
     driver-side union-find over the collected iterate — the GraphFrames
     pattern. Identical min-label output (union-by-min-root makes every
     tree root the component minimum); what it removes is the ~5 tiny

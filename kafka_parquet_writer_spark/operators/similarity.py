@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from kafka_parquet_writer_spark.artifacts import ensure_artifact
 from kafka_parquet_writer_spark.catalog import load_table
 from kafka_parquet_writer_spark.functions import vector as V
 from kafka_parquet_writer_spark.functions.portable import pround, sql_pround
@@ -1234,7 +1235,7 @@ def ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized ANN-index BUILD — the vector-side analogue of
     rag_index_build, value-oracled: every corpus vector's IVF cell
     and 4×4-bit PQ codes, the table stream_ann_route_pq serves from
-    (persisted cell-bucketed by _ensure_ann_index; this key returns
+    (persisted cell-bucketed as the ann_pq artifact; this key returns
     the frame so DuckDB verifies assignment and coding end to end).
     At production widths the row is ~2 bytes of code + ids — the
     memory-residency argument for broadcasting ~100× more corpus than
@@ -1263,69 +1264,32 @@ def ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ensure_ann_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once accessor for the CELL-BUCKETED PQ index table —
-    replaces r14's unbucketed mkdtemp parquet (the gap its own
-    docstring promised away: "materialized cell-bucketed index").
-    Bucketing by cell makes the serving join's probe side co-locate
-    per cell and lets a cell-pruned read touch one bucket file per
-    probed cell at 100 TB. Content-fingerprint tagged (_index_tag on
-    the embeddings source), so regenerated fixtures rebuild instead
-    of serving stale codes; registered in the shared index database
-    whose location is atexit-cleaned."""
-    from kafka_parquet_writer_spark.operators.rag_prep import (
-        _INDEX_DB,
-        _ensure_index_db,
-        _index_tag,
-    )
-    from kafka_parquet_writer_spark.sources.bucketed import write_bucketed
+def _ann_table(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """The CELL-BUCKETED PQ index artifact (artifacts.ensure_artifact,
+    tagged by the embeddings table's content): "ann_pq" codes every
+    vector, "ann_pq_base" only the BASE vectors (vec_id % ANN_CDC_MOD
+    != ANN_CDC_RESIDUE) — the deployed-index state when the delta
+    arrives. Bucketing by cell makes the serving join's probe side
+    co-locate per cell and lets a cell-pruned read touch one bucket
+    file per probed cell at 100 TB."""
 
-    tag = _index_tag(sf_dir, table="embeddings")
-    tbl = f"{_INDEX_DB}.ann_pq_{tag}"
-    if spark.catalog.tableExists(tbl):
-        return tbl
-    _ensure_index_db(spark)
-    fn, schema = _pq_code_mapper()
-    write_bucketed(
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .mapInPandas(fn, schema),
-        tbl,
-        bucket_cols="cell",
+    def build() -> DataFrame:
+        fn, schema = _pq_code_mapper()
+        emb = load_table(spark, sf_dir, "embeddings")
+        if name == "ann_pq_base":
+            emb = emb.filter(F.col("vec_id") % ANN_CDC_MOD != ANN_CDC_RESIDUE)
+        return emb.select("vec_id", "embedding").mapInPandas(fn, schema)
+
+    return ensure_artifact(
+        spark,
+        name,
+        sf_dir,
+        build,
+        bucket_by="cell",
+        sort_by=["cell", "n_id"],
         n_buckets=ANN_INDEX_BUCKETS,
-        sort_cols=["cell", "n_id"],
+        table="embeddings",
     )
-    return tbl
-
-
-def _ensure_ann_base_index(spark: SparkSession, sf_dir: str) -> str:
-    """The deployed-index state when the delta arrives: the PQ index
-    over the BASE vectors only (vec_id % ANN_CDC_MOD != RESIDUE),
-    cell-bucketed like the full index."""
-    from kafka_parquet_writer_spark.operators.rag_prep import (
-        _INDEX_DB,
-        _ensure_index_db,
-        _index_tag,
-    )
-    from kafka_parquet_writer_spark.sources.bucketed import write_bucketed
-
-    tag = _index_tag(sf_dir, table="embeddings")
-    tbl = f"{_INDEX_DB}.ann_pq_base_{tag}"
-    if spark.catalog.tableExists(tbl):
-        return tbl
-    _ensure_index_db(spark)
-    fn, schema = _pq_code_mapper()
-    base = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") % ANN_CDC_MOD != ANN_CDC_RESIDUE
-    )
-    write_bucketed(
-        base.select("vec_id", "embedding").mapInPandas(fn, schema),
-        tbl,
-        bucket_cols="cell",
-        n_buckets=ANN_INDEX_BUCKETS,
-        sort_cols=["cell", "n_id"],
-    )
-    return tbl
 
 
 @query("ann_index_delta", oracle=_ann_index_oracle())
@@ -1360,7 +1324,7 @@ def ann_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_index_build: the expression-tree form re-paid ~2.5 s of py4j +
     Catalyst literal-tree cost per invocation."""
     fn, schema = _pq_code_mapper()
-    base = spark.table(_ensure_ann_base_index(spark, sf_dir))
+    base = spark.table(_ann_table(spark, sf_dir, "ann_pq_base"))
     delta = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % ANN_CDC_MOD == ANN_CDC_RESIDUE)

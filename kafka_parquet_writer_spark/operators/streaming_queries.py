@@ -2347,7 +2347,7 @@ def _stream_ann_pq_oracle() -> str:
 
 
 #: r15: the PQ index moved from a per-session mkdtemp parquet dir to
-#: the CELL-BUCKETED catalog table of similarity._ensure_ann_index
+#: the CELL-BUCKETED catalog table of similarity._ann_table
 #: (r14 VERDICT item 2 — the docstring promised "cell-bucketed index"
 #: while the shipped artifact was an unbucketed temp dir, with no
 #: maintenance path and no cleanup). The build is now value-oracled
@@ -2372,7 +2372,7 @@ def stream_ann_route_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization + asymmetric-distance shortlist + exact re-rank)
     with the query side arriving as vec_id-ranged micro-batches. The
     static side is the MATERIALIZED PQ index (similarity's
-    _ensure_ann_index — CELL-BUCKETED, value-oracled at build by
+    ann_pq artifact — CELL-BUCKETED, value-oracled at build by
     ann_index_build, maintained by ann_index_delta): per
     vector only (cell, c0..c3) — 2 bytes of code at production widths
     instead of the raw embedding, the memory-residency argument that
@@ -2414,12 +2414,10 @@ def stream_ann_route_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         PQ_CODEBOOKS,
     )
 
-    from kafka_parquet_writer_spark.operators.similarity import (
-        _ensure_ann_index,
-    )
+    from kafka_parquet_writer_spark.operators.similarity import _ann_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    corpus = spark.table(_ensure_ann_index(spark, sf_dir))
+    corpus = spark.table(_ann_table(spark, sf_dir, "ann_pq"))
 
     # stream side: vec_id-ranged query micro-batches (the staged split
     # covers vec_id < IVF_N_QUERIES == IVFPQ_N_QUERIES)
@@ -2572,7 +2570,7 @@ def stream_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings from cumulative tf state + an AFFECTED-sized generation
     append — nothing per batch scales with the index anymore (in
     production both the tf state and the generations are
-    token-bucketed like _ensure_impact_index, so the per-batch semi
+    token-bucketed like the impact_l artifact, so the per-batch semi
     join and the serve-time resolve prune to affected buckets; a
     background compactor folds old generations exactly like any LSM).
     The corpus is tokenized exactly once, one batch at a time — no

@@ -1,0 +1,57 @@
+"""Build-once index artifacts (artifacts.ensure_artifact): every
+artifact the operators materialize is built on its first call, served
+by a catalog lookup afterwards, and rebuilt under a new name once its
+source table is rewritten."""
+
+import itertools
+import os
+import shutil
+
+import pytest
+
+from kafka_parquet_writer_spark.catalog import table_path
+from kafka_parquet_writer_spark.operators import rag_prep as RP
+from kafka_parquet_writer_spark.operators import similarity as S
+
+SF = "/root/testdata/sf0.001"
+
+#: (accessor, artifact name, source table) for every artifact
+ARTIFACTS = [
+    (RP._index_table, n, "documents") for n in RP._INDEX_ARTIFACTS
+] + [(S._ann_table, n, "embeddings") for n in ("ann_pq", "ann_pq_base")]
+
+_groups = itertools.count()
+
+
+def _jobs_during(spark, fn):
+    """``(fn(), number of Spark jobs it launched from this thread)``."""
+    sc = spark.sparkContext
+    group = f"artifact_{next(_groups)}"
+    sc.setJobGroup(group, "artifact job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "accessor,name,table", ARTIFACTS, ids=[a[1] for a in ARTIFACTS]
+)
+def test_artifact_builds_once_per_source_content(
+    spark, tmp_path, accessor, name, table
+):
+    d = str(tmp_path)
+    src = table_path(d, table)
+    shutil.copy(table_path(SF, table), src)
+    t1 = accessor(spark, d, name)
+    assert spark.catalog.tableExists(t1)
+    # a second call is a catalog lookup: same table, zero Spark jobs
+    t2, jobs = _jobs_during(spark, lambda: accessor(spark, d, name))
+    assert (t2, jobs) == (t1, 0)
+    # rewriting the source changes its content tag: a new table is built
+    os.remove(src)
+    shutil.copy(table_path(SF, table), src)
+    t3 = accessor(spark, d, name)
+    assert t3 != t1
+    assert spark.catalog.tableExists(t3)

@@ -680,7 +680,7 @@ def test_rag_topk_from_index_never_scans_corpus(spark, sf_dir):
     """THE materialized-index gate (r13 VERDICT item 2): the serving
     plan must read ONLY the persisted impact-L table plus the query
     workload — the raw corpus appears nowhere at query time. Build
-    cost is paid inside _ensure_impact_index before this plan exists;
+    cost is paid building the impact_l artifact before this plan exists;
     query-time cost is queries × terms × L, corpus-independent."""
     spark.catalog.clearCache()
     df = E.queries()["rag_topk_from_index"](spark, sf_dir)

@@ -143,26 +143,14 @@ def test_index_build_matches_truncation_contract(spark):
     assert bad.count() == 0
 
 
-def test_ensure_impact_index_builds_once(spark):
-    """Second call must reuse the catalog table, not rebuild."""
-    from kafka_parquet_writer_spark.operators.rag_prep import (
-        _ensure_impact_index,
-    )
-
-    t1 = _ensure_impact_index(spark, SF)
-    assert spark.catalog.tableExists(t1)
-    t2 = _ensure_impact_index(spark, SF)
-    assert t1 == t2
-
-
 def test_index_table_is_bucketed_on_token(spark):
     from kafka_parquet_writer_spark.operators.rag_prep import (
         RAG_INDEX_SHARDS,
-        _ensure_impact_index,
+        _index_table,
     )
     from kafka_parquet_writer_spark.sources.bucketed import bucket_spec
 
-    tbl = _ensure_impact_index(spark, SF)
+    tbl = _index_table(spark, SF, "impact_l")
     spec = bucket_spec(spark, tbl)
     assert spec == (["token"], RAG_INDEX_SHARDS)
 
@@ -199,16 +187,14 @@ def test_stream_ann_route_pq_incremental_equals_batch_zero_state(spark):
 # ------------------------------------------ incremental manifest (CDC)
 
 
-def test_manifest_state_builds_once_and_is_bucketed(spark):
+def test_manifest_state_is_bucketed_on_token(spark):
     from kafka_parquet_writer_spark.operators.rag_prep import (
         RAG_INDEX_SHARDS,
-        _ensure_manifest_state,
+        _index_table,
     )
     from kafka_parquet_writer_spark.sources.bucketed import bucket_spec
 
-    t1 = _ensure_manifest_state(spark, SF)
-    assert spark.catalog.tableExists(t1)
-    assert _ensure_manifest_state(spark, SF) == t1
+    t1 = _index_table(spark, SF, "manifest_state")
     assert bucket_spec(spark, t1) == (["token"], RAG_INDEX_SHARDS)
 
 
@@ -254,11 +240,11 @@ def test_index_delta_passthrough_and_rebuild(spark):
     docs.write.mode("overwrite").parquet(f"{d}/documents.parquet")
 
     inc = R.rag_index_delta(spark, d)
-    full = R._impact_index_frame(spark, d)
+    full = R.rag_index_build(spark, d)
     assert inc.exceptAll(full).count() == 0
     assert full.exceptAll(inc).count() == 0
     # the stay list passed through from the base index verbatim
-    base_idx = spark.table(R._ensure_index_state(spark, d)[1])
+    base_idx = spark.table(R._index_table(spark, d, "base_impact_l"))
     stay_inc = {tuple(r) for r in inc.filter(F.col("token") == "stay").collect()}
     stay_base = {
         tuple(r) for r in base_idx.filter(F.col("token") == "stay").collect()

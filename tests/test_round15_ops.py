@@ -25,11 +25,12 @@ def test_bm25_from_index_matches_corpus_scanning_wand(spark):
 def test_bm25_index_tables_bucketed_by_token(spark):
     from kafka_parquet_writer_spark.operators.rag_prep import (
         RAG_INDEX_SHARDS,
-        _ensure_bm25_index,
+        _index_table,
     )
     from kafka_parquet_writer_spark.sources.bucketed import bucket_spec
 
-    post_tbl, il_tbl = _ensure_bm25_index(spark, SF)
+    post_tbl = _index_table(spark, SF, "bm25_postings")
+    il_tbl = _index_table(spark, SF, "bm25_impact_l")
     assert bucket_spec(spark, post_tbl) == (["token"], RAG_INDEX_SHARDS)
     assert bucket_spec(spark, il_tbl) == (["token"], RAG_INDEX_SHARDS)
 
@@ -52,11 +53,9 @@ def test_blocked_postings_table_carries_blockmax(spark):
     impact within the block — the skip-list invariant at rest."""
     from pyspark.sql import functions as F
 
-    from kafka_parquet_writer_spark.operators.rag_prep import (
-        _ensure_block_postings_index,
-    )
+    from kafka_parquet_writer_spark.operators.rag_prep import _index_table
 
-    tbl = _ensure_block_postings_index(spark, SF)
+    tbl = _index_table(spark, SF, "postings_blk64")
     t = spark.table(tbl)
     bad = (
         t.groupBy("token", "blk")
@@ -82,12 +81,10 @@ def test_bm25_delta_equals_full_build(spark):
     import __spark_entry__ as E
     from pyspark.sql import functions as F
 
-    from kafka_parquet_writer_spark.operators.rag_prep import (
-        _ensure_bm25_index,
-    )
+    from kafka_parquet_writer_spark.operators.rag_prep import _index_table
 
     inc = E.queries()["rag_bm25_index_delta"](spark, SF)
-    _, il_tbl = _ensure_bm25_index(spark, SF)
+    il_tbl = _index_table(spark, SF, "bm25_impact_l")
     full = spark.table(il_tbl).select("token", "doc_id", "impact", "pos")
     inc = inc.select("token", "doc_id", "impact", F.col("pos"))
     assert inc.exceptAll(full).count() == 0
@@ -100,11 +97,11 @@ def test_bm25_delta_equals_full_build(spark):
 def test_ann_index_bucketed_by_cell(spark):
     from kafka_parquet_writer_spark.operators.similarity import (
         ANN_INDEX_BUCKETS,
-        _ensure_ann_index,
+        _ann_table,
     )
     from kafka_parquet_writer_spark.sources.bucketed import bucket_spec
 
-    tbl = _ensure_ann_index(spark, SF)
+    tbl = _ann_table(spark, SF, "ann_pq")
     assert bucket_spec(spark, tbl) == (["cell"], ANN_INDEX_BUCKETS)
 
 
@@ -152,36 +149,36 @@ def test_wand_cache_registry_keyed_per_plan_identity(spark):
     qt/imp pair (Catalyst never shares subplans — evicting imp while
     A is still lazy re-creates the 4x corpus re-scan). Re-invoking
     the SAME identity must still evict its predecessor (bounded)."""
+    from kafka_parquet_writer_spark.artifacts import cached_frames
     from kafka_parquet_writer_spark.operators.rag_prep import (
-        _WAND_CACHED,
         _derived_multi_qt,
         _wand_plan,
     )
 
-    k_default = f"{SF}|tfidf|default|corpus"
-    k_injected = f"{SF}|tfidf|injected|corpus"
+    k_default = ("wand", SF, "tfidf", "default", "corpus")
+    k_injected = ("wand", SF, "tfidf", "injected", "corpus")
     _wand_plan(spark, SF)
-    assert k_default in _WAND_CACHED
-    entry_a = _WAND_CACHED[k_default]
+    assert cached_frames(k_default)
+    entry_a = cached_frames(k_default)
     # a DIFFERENT identity registers under its own key and leaves
     # the first entry untouched (same list object, still registered)
     _wand_plan(spark, SF, qt=_derived_multi_qt(spark, SF))
-    assert k_injected in _WAND_CACHED
-    assert _WAND_CACHED[k_default] is entry_a
+    assert cached_frames(k_injected)
+    assert cached_frames(k_default) is entry_a
     # the SAME identity replaces (evicts) its own predecessor only
-    entry_b = _WAND_CACHED[k_injected]
+    entry_b = cached_frames(k_injected)
     _wand_plan(spark, SF, qt=_derived_multi_qt(spark, SF))
-    assert _WAND_CACHED[k_injected] is not entry_b
-    assert _WAND_CACHED[k_default] is entry_a
+    assert cached_frames(k_injected) is not entry_b
+    assert cached_frames(k_default) is entry_a
 
 
 def test_wand_plan_rejects_il_without_imp(spark):
     from kafka_parquet_writer_spark.operators.rag_prep import (
-        _ensure_impact_index,
+        _index_table,
         _wand_plan,
     )
 
-    il = spark.table(_ensure_impact_index(spark, SF))
+    il = spark.table(_index_table(spark, SF, "impact_l"))
     with pytest.raises(ValueError, match="il injection"):
         _wand_plan(spark, SF, il=il)
 
@@ -194,12 +191,10 @@ def test_blocked_delta_equals_build_table(spark):
     including the derived block geometry (pos, blk, bmax)."""
     import __spark_entry__ as E
 
-    from kafka_parquet_writer_spark.operators.rag_prep import (
-        _ensure_block_postings_index,
-    )
+    from kafka_parquet_writer_spark.operators.rag_prep import _index_table
 
     inc = E.queries()["rag_blocked_delta"](spark, SF)
-    full = spark.table(_ensure_block_postings_index(spark, SF)).select(
+    full = spark.table(_index_table(spark, SF, "postings_blk64")).select(
         "token", "doc_id", "impact", "pos", "blk", "bmax"
     )
     inc = inc.select("token", "doc_id", "impact", "pos", "blk", "bmax")

@@ -70,8 +70,9 @@ def test_bm25_meta_table_is_on_disk_and_consistent(spark):
     go stale: r15 VERDICT item 2)."""
     import kafka_parquet_writer_spark.operators.rag_prep as RP
 
-    st_tbl, il_tbl = RP._ensure_bm25_state(spark, SF)
-    meta_tbl = f"{RP._INDEX_DB}.bm25_meta_{RP._index_tag(SF)}"
+    st_tbl = RP._index_table(spark, SF, "bm25_tfdl_state")
+    il_tbl = RP._index_table(spark, SF, "bm25_base_il")
+    meta_tbl = RP._index_table(spark, SF, "bm25_meta")
     assert spark.catalog.tableExists(meta_tbl)
     from pyspark.sql import functions as F
 
@@ -91,7 +92,7 @@ def test_bm25_meta_table_is_on_disk_and_consistent(spark):
     spark.sql(f"DROP TABLE {st_tbl}")
     spark.sql(f"DROP TABLE {il_tbl}")
     spark.sql(f"DROP TABLE {meta_tbl}")
-    st2, _ = RP._ensure_bm25_state(spark, SF)
+    RP._index_table(spark, SF, "bm25_base_il")
     row2 = spark.table(meta_tbl).first()
     assert (row2["total_dl"], row2["n_docs"]) == (int(tot), int(n))
 
@@ -148,14 +149,15 @@ def test_trained_key_cache_registry_bounded(spark):
     """dedup_embedding_ann_trained shares ONE cached (vec_id, u)
     frame between the Lloyd rounds and the final stats pass; invoking
     the key twice leaves exactly one registered cache entry (the
-    predecessor is unpersisted — the _INDEX_DELTA_CACHED pattern)."""
+    predecessor is unpersisted — artifacts.cache_frame)."""
     import __spark_entry__ as E
-    from kafka_parquet_writer_spark.operators import dedup as D
+    from kafka_parquet_writer_spark.artifacts import cached_frames
 
+    key = ("dedup_trained", SF)
     E.queries()["dedup_embedding_ann_trained"](spark, SF).collect()
-    assert len(D._TRAINED_CACHED.get(SF, [])) == 1
-    first = D._TRAINED_CACHED[SF][0]
+    assert len(cached_frames(key)) == 1
+    first = cached_frames(key)[0]
     E.queries()["dedup_embedding_ann_trained"](spark, SF).collect()
-    assert len(D._TRAINED_CACHED.get(SF, [])) == 1
-    assert D._TRAINED_CACHED[SF][0] is not first
+    assert len(cached_frames(key)) == 1
+    assert cached_frames(key)[0] is not first
     assert not first.is_cached

@@ -7,7 +7,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_parquet_writer_spark.catalog import load_table
-from kafka_parquet_writer_spark.operators.streaming_queries import _events_stream
+from kafka_parquet_writer_spark.operators.streaming_queries import (
+    _events_stream,
+    _run_to_memory,
+)
 from kafka_parquet_writer_spark.streaming.windows import (
     dedup_within_watermark,
     sessionize,
@@ -15,29 +18,13 @@ from kafka_parquet_writer_spark.streaming.windows import (
     tumbling_agg,
 )
 
-_n = iter(range(10_000))
-
-
-def _run(stream_df, mode):
-    name = f"test_stream_{next(_n)}"
-    q = (
-        stream_df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="wck_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(name)
-
 
 def test_tumbling_matches_batch(spark, sf_dir):
     stream = _events_stream(spark, sf_dir)
-    out = _run(
+    out = _run_to_memory(
         tumbling_agg(stream, "ts", "5 minutes", ["event_type"], [F.count("*").alias("n")]),
         "complete",
-    )
+    )[0]
     batch = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.window("ts", "5 minutes"), "event_type")
@@ -51,10 +38,10 @@ def test_sliding_window_multiplicity(spark, sf_dir):
     """Each event falls in duration/slide windows: total count across
     sliding windows = rows × (duration/slide)."""
     stream = _events_stream(spark, sf_dir)
-    out = _run(
+    out = _run_to_memory(
         sliding_agg(stream, "ts", "10 minutes", "5 minutes", [], [F.count("*").alias("n")]),
         "complete",
-    )
+    )[0]
     rows = load_table(spark, sf_dir, "events").count()
     assert out.agg(F.sum("n")).first()[0] == rows * 2
 
@@ -63,10 +50,10 @@ def test_sessionize_matches_lag_formulation(spark, sf_dir):
     from pyspark.sql.window import Window as W
 
     stream = _events_stream(spark, sf_dir)
-    out = _run(
+    out = _run_to_memory(
         sessionize(stream, "ts", "30 minutes", ["user_id"], [F.count("*").alias("n")]),
         "complete",
-    )
+    )[0]
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts")
     gap_us = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
@@ -87,10 +74,10 @@ def test_sessionize_matches_lag_formulation(spark, sf_dir):
 
 def test_streaming_dedup_within_watermark(spark, sf_dir):
     stream = _events_stream(spark, sf_dir)
-    out = _run(
+    out = _run_to_memory(
         dedup_within_watermark(stream, ["user_id", "event_type"], "ts", "1 hour"),
         "append",
-    )
+    )[0]
     distinct = (
         load_table(spark, sf_dir, "events")
         .select("user_id", "event_type")
