@@ -18,19 +18,31 @@ Re-expresses the capabilities of sahabpardaz/kafka-parquet-writer
 
 Everything is DataFrame/SQL-first so Catalyst handles pushdown, pruning,
 join selection, and AQE re-planning.
+
+The public names below load on first access (PEP 562): the Python
+worker daemon, ``daemon.py``, runs inside this package and must clear
+the pyspark archives off ``sys.path`` before anything imports pyspark.
 """
 
-from kafka_parquet_writer_spark.session import get_spark
-from kafka_parquet_writer_spark.catalog import TABLES, load_table, register_views
-from kafka_parquet_writer_spark.registry import QUERIES, ORACLES
+import importlib
 
-__all__ = [
-    "get_spark",
-    "TABLES",
-    "load_table",
-    "register_views",
-    "QUERIES",
-    "ORACLES",
-]
+#: public name → the module that defines it
+_EXPORTS = {
+    "get_spark": "session",
+    "TABLES": "catalog",
+    "load_table": "catalog",
+    "register_views": "catalog",
+    "QUERIES": "registry",
+    "ORACLES": "registry",
+}
+
+__all__ = list(_EXPORTS)
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    module = importlib.import_module(f"{__name__}.{_EXPORTS[name]}")
+    return getattr(module, name)

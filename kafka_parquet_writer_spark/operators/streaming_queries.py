@@ -18,6 +18,7 @@ checkpoint it creates.
 
 from __future__ import annotations
 
+import atexit
 import glob
 import itertools
 import os
@@ -49,9 +50,11 @@ def _staged_dir(path: str) -> str:
     dir. A multi-file table (e.g. bench_scale's blown-up fixtures)
     arrives as a DIRECTORY: the file-stream source does not recurse
     into subdirectories, so symlinking the directory itself would
-    silently stream ZERO rows — stage each part file instead."""
+    silently stream ZERO rows — stage each part file instead. The dir
+    lives as long as the process."""
     if path not in _stage_cache:
         d = tempfile.mkdtemp(prefix="kpws_src_")
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
         if os.path.isdir(path):
             parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
             if not parts:
@@ -102,12 +105,13 @@ def _ranged_stream(
     first-wins dedup and epoch-keyed state to be reproducible. ``name``
     must identify ``df``'s rows within ``sf_dir``. The stream reads one
     file per trigger with the staged file's memoized schema, so a warm
-    call runs no Spark job."""
+    call runs no Spark job. The stage lives as long as the process."""
     key = (name, sf_dir, n)
     if key not in _ranged_stages:
         lo, hi = df.agg(F.min(col), F.max(col)).first()
         span = (hi - lo + n) // n
         stage = tempfile.mkdtemp(prefix=f"kpws_{name}_src_")
+        atexit.register(shutil.rmtree, stage, ignore_errors=True)
         c = F.col(col)
         for i in range(n):
             dst = os.path.join(stage, f"{i:03d}.parquet")

@@ -1,6 +1,8 @@
 """The catalog's schema memo (`catalog.table_schema`): a warm read plans
 without any Spark job, and the memo key follows the table's content
-(stat fingerprint), the schema-conversion confs, and its size cap."""
+(stat fingerprint), the schema-conversion confs, and its size cap. A
+read of many explicit files, as a file-stream batch makes, lists them
+without a Spark job too."""
 
 import itertools
 import os
@@ -11,7 +13,7 @@ import textwrap
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql.types import BinaryType, StringType
+from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
 from kafka_parquet_writer_spark import catalog
 from kafka_parquet_writer_spark.catalog import load_table, table_path, table_schema
@@ -50,6 +52,20 @@ def test_warm_load_table_launches_no_spark_job(spark, sf_dir):
     ev, jobs = _jobs_during(spark, lambda: load_table(spark, sf_dir, "events"))
     assert jobs == 0
     assert dict(ev.dtypes)["ts"] == "timestamp"
+
+
+def test_reading_40_explicit_paths_launches_no_listing_job(spark, tmp_path):
+    """Past ``parallelPartitionDiscovery.threshold`` (32 by default) the
+    file index lists paths with a Spark job of one task per path; a
+    local session lists them in the driver."""
+    paths = []
+    for i in range(40):
+        paths.append(str(tmp_path / f"part-{i:02d}.parquet"))
+        _write_file(paths[-1], x=pa.array([i]))
+    schema = StructType([StructField("x", LongType())])
+    df, jobs = _jobs_during(spark, lambda: spark.read.schema(schema).parquet(*paths))
+    assert jobs == 0
+    assert df.count() == 40
 
 
 def test_rewrite_at_same_path_reads_new_schema_file_form(spark):

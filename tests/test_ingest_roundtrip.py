@@ -26,6 +26,8 @@ from kafka_parquet_writer_spark.streaming.ingest import (
     IngestConfig,
     build_pipeline,
     ingest_once,
+    partition_columns,
+    shard_id,
 )
 
 
@@ -98,6 +100,101 @@ def test_partitioned_directory_layout(spark, sf_dir):
         | (F.dayofmonth("ts_event") != F.col("day").cast("int"))
     ).count()
     assert mismatch == 0
+
+
+#: 30 consecutive output directories per pattern, 3 rows in each
+_DIR_SEQUENCES = {
+    "yyyy/MM/dd": ("29 DAY", "1 DAY"),
+    "yyyy/MM/dd/HH": ("29 HOUR", "1 HOUR"),
+    "yyyy/MM": ("29 MONTH", "1 MONTH"),
+}
+
+
+@pytest.mark.parametrize("n", [2, 3, 4])
+@pytest.mark.parametrize("pattern", list(_DIR_SEQUENCES))
+def test_shard_id_spreads_consecutive_dirs_round_robin(spark, pattern, n):
+    """Each directory goes to one write task, and 30 consecutive
+    directories (crossing a day, month or year boundary) give every
+    task ⌊30/n⌋ or ⌈30/n⌉ of them."""
+    span, step = _DIR_SEQUENCES[pattern]
+    df = spark.sql(
+        f"""SELECT t, k FROM range(3) AS r(k) CROSS JOIN (
+              SELECT explode(sequence(TIMESTAMP'2024-01-17 05:00:00',
+                                      TIMESTAMP'2024-01-17 05:00:00' + INTERVAL {span},
+                                      INTERVAL {step})) AS t)"""
+    )
+    sid = shard_id(pattern, F.col("t"), [F.col("t"), F.col("k")], n, 1)
+    dirs = partition_columns(pattern, F.col("t"))
+    rows = (
+        df.repartitionById(n, sid)
+        .select(F.spark_partition_id().alias("p"), *[e.alias(name) for name, e in dirs])
+        .distinct()
+        .collect()
+    )
+    tasks_of = {}
+    for r in rows:
+        tasks_of.setdefault(tuple(r[name] for name, _ in dirs), set()).add(r.p)
+    assert len(tasks_of) == 30
+    assert all(len(ps) == 1 for ps in tasks_of.values())
+    per_task = [sum(p in ps for ps in tasks_of.values()) for p in range(n)]
+    assert set(per_task) <= {30 // n, -(-30 // n)}, per_task
+
+
+def test_shard_id_processing_time_spreads_rows_over_all_tasks(spark):
+    """Processing time: one directory per batch, so the row salt alone
+    picks the task; every task gets a near-equal share."""
+    n = 4
+    df = spark.range(1000).withColumn("v", F.col("id") * 7)
+    sid = shard_id("yyyy/MM/dd", None, [F.col("id"), F.col("v")], n, 1)
+    counts = {
+        r.p: r["count"]
+        for r in df.repartitionById(n, sid)
+        .groupBy(F.spark_partition_id().alias("p"))
+        .count()
+        .collect()
+    }
+    assert sorted(counts) == list(range(n))
+    assert min(counts.values()) >= 0.8 * 1000 / n, counts
+
+
+@pytest.mark.parametrize("files_per_dir", [1, 2])
+def test_drain_writes_files_per_dir_into_every_date_dir(spark, tmp_path, files_per_dir):
+    """files per batch = dirs × files_per_dir on a real ``ingest_once``
+    drain: 30 dates × 40 rows plus 40 rows with no time, one batch;
+    every date directory, the default-partition one too, holds exactly
+    ``files_per_dir`` files and all rows come back."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, StructField, StructType, TimestampType
+
+    src = tmp_path / "src"
+    src.mkdir()
+    t0 = dt.datetime(2024, 1, 17, 5, tzinfo=dt.timezone.utc)
+    ts = [t0 + dt.timedelta(days=i // 40, minutes=i % 40) for i in range(1200)]
+    ts += [None] * 40
+    pq.write_table(
+        pa.table({"ts": pa.array(ts, pa.timestamp("us", "UTC")), "v": list(range(1240))}),
+        src / "part-0.parquet",
+    )
+    cfg = IngestConfig(
+        target_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        source_path=str(src),
+        source_schema=StructType(
+            [StructField("ts", TimestampType()), StructField("v", LongType())]
+        ),
+        trigger_seconds=None,
+        partition_time_column="ts",
+        files_per_dir=files_per_dir,
+    )
+    ingest_once(spark, cfg)
+    day_dirs = glob.glob(os.path.join(cfg.target_dir, "year=*/month=*/day=*"))
+    assert len(day_dirs) == 31
+    for d in day_dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == files_per_dir, d
+    assert spark.read.parquet(cfg.target_dir).count() == 1240
 
 
 def test_metrics_file_size_histogram(spark, sf_dir):

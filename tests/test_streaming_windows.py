@@ -317,3 +317,44 @@ def test_ranged_stream_stages_once_in_range_order(spark, tmp_path):
         staged = SQ._ranged_stages.pop(("docs", sf, 4), None)
         if staged:
             shutil.rmtree(staged[0], ignore_errors=True)
+
+
+def test_stage_dirs_are_removed_at_process_exit(sf_dir, tmp_path):
+    """``_staged_dir`` and ``_ranged_stream`` keep their stage dirs for
+    the whole process and remove them when it exits: a child process
+    with a private TMPDIR runs ``stream_dedup`` and stages a ranged
+    split, and leaves no ``kpws_*src_`` dir behind."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        f"""
+        import os, sys
+        sys.path.insert(0, {repo!r})
+        from kafka_parquet_writer_spark import QUERIES, get_spark
+        from kafka_parquet_writer_spark.operators import streaming_queries as SQ
+
+        spark = get_spark("stage-leak", cpus=1, shuffle_partitions=1)
+        assert QUERIES["stream_dedup"](spark, sys.argv[1]).count() > 0
+        SQ._ranged_stream(spark, sys.argv[1], "probe", spark.range(10), "id", 2)
+        staged = [n for n in os.listdir(sys.argv[2]) if n.startswith("kpws_") and "src_" in n]
+        spark.stop()
+        print("STAGED", len(staged))
+        """
+    )
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = dict(os.environ, TMPDIR=str(tmp), SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script, sf_dir, str(tmp)],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=env,
+    )
+    assert "STAGED 2" in out.stdout, out.stderr[-3000:]
+    left = [n for n in os.listdir(tmp) if n.startswith("kpws_") and "src_" in n]
+    assert left == []
