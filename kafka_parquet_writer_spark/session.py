@@ -12,7 +12,7 @@ here is chosen to also be correct at 1000-executor / 100 TB scale:
   DuckDB oracle and are deployment-independent.
 - Arrow enabled so any pandas-UDF path is vectorized batch transfer.
 
-Two defaults cut the fixed cost of every micro-batch:
+Three defaults cut the fixed cost of every micro-batch:
 
 - ``spark.python.daemon.module`` is this package's ``daemon`` module:
   Python workers import the installed pyspark instead of
@@ -28,6 +28,19 @@ Two defaults cut the fixed cost of every micro-batch:
   1.1 s outside ``addBatch``, and 70 ms with serial listing. ``get_spark``
   only builds ``local[...]`` sessions, where that job buys no I/O
   parallelism.
+- ``file:`` paths go through ``jvm/ForkFreeLocal.java``. Without
+  Hadoop's native library (this pyspark ships none) the stock local
+  filesystem starts a ``chmod`` process for every file and directory it
+  creates and a ``readlink`` for both sides of every FileContext
+  rename, which commits each offset-log, commit-log, state-store and
+  sink-metadata file: a 300-row ``ingest_once`` drain plus one
+  ``stream_dedup`` started 88 ``chmod`` and 216 ``readlink``. Through
+  py4j, stock → shim: ``create``+``close`` 8.9 → 1.1 ms, ``mkdirs``
+  4.2 → 0.5 ms, ``setPermission`` 7.0 → 0.3 ms, ``getFileLinkStatus``
+  3.8 → 0.3 ms. The shim keeps checksum files, permission bits and
+  rename results. It goes on the driver class path only when the Spark
+  that pyspark launches has the ``hadoop-client-api`` the jar was built
+  against, and a JVM already running without it gets none of its confs.
 """
 
 from __future__ import annotations
@@ -35,10 +48,42 @@ from __future__ import annotations
 import os
 import tempfile
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 #: the directory holding this package, for the Python workers' path
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: the hadoop-client-api version the fork-free filesystem jar was built
+#: against (``jvm/build.py`` names the jar after it)
+_FS_JAR_HADOOP = "3.4.2"
+_FS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)),
+    "jvm",
+    f"forkfree-localfs-hadoop-{_FS_JAR_HADOOP}.jar",
+)
+_FS_CLASS = "kpws.fs.ForkFreeLocal$"
+_CLASS_PATH = "spark.driver.extraClassPath"
+
+
+def _fork_free_fs_conf() -> dict[str, str]:
+    """The confs that put ``file:`` on the fork-free filesystem, or none
+    of them: when the jar is missing, the Spark pyspark launches has
+    another ``hadoop-client-api``, or a JVM is already up without it."""
+    api = os.path.join(_find_spark_home(), "jars", f"hadoop-client-api-{_FS_JAR_HADOOP}.jar")
+    if not (os.path.isfile(_FS_JAR) and os.path.isfile(api)):
+        return {}
+    jvm = SparkContext._jvm
+    if jvm is not None and not jvm.org.apache.spark.util.Utils.classIsLoadable(
+        _FS_CLASS + "Local"
+    ):
+        return {}
+    return {
+        _CLASS_PATH: _FS_JAR,
+        "spark.hadoop.fs.file.impl": _FS_CLASS + "Local",
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": _FS_CLASS + "LocalFs",
+    }
 
 
 def get_spark(
@@ -93,7 +138,10 @@ def get_spark(
         # truncation — matches DuckDB's TIMESTAMP_NS→TIMESTAMP behavior)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
+    conf = _fork_free_fs_conf()
     for k, v in (extra_conf or {}).items():
+        conf[k] = os.pathsep.join((conf[k], v)) if k == _CLASS_PATH and k in conf else v
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

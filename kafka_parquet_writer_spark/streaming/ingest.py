@@ -167,7 +167,8 @@ def shard_id(
     epoch, ``MM`` → ``year*12+month``, ``yyyy`` → year; a coarser token
     missing from the pattern is pinned, so the ordinal is a function of
     the directory alone), times ``files_per_dir``, plus a row-hash salt
-    in [0, files_per_dir), mod n. Each (directory, salt) goes to exactly
+    in [0, files_per_dir) (0 without a hash when ``files_per_dir`` is
+    1), mod n. Each (directory, salt) goes to exactly
     one task, and consecutive directories go round-robin over the tasks.
     Processing time (``time_col`` None): the date is constant within a
     batch, so the salt alone, in [0, n), spreads the rows.
@@ -191,7 +192,12 @@ def shard_id(
     # a null time (Hive's default-partition dir) takes ordinal 0, so its
     # rows still spread by salt instead of all landing on task 0
     ordinal = F.coalesce(ordinal.cast("long"), F.lit(0))
-    salt = F.pmod(F.xxhash64(*src_cols), F.lit(files_per_dir))
+    # one file per directory: the salt is 0, so no row hash to compute
+    salt = (
+        F.lit(0)
+        if files_per_dir == 1
+        else F.pmod(F.xxhash64(*src_cols), F.lit(files_per_dir))
+    )
     return F.pmod(ordinal * files_per_dir + salt, F.lit(n)).cast("int")
 
 

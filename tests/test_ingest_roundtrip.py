@@ -158,6 +158,34 @@ def test_shard_id_processing_time_spreads_rows_over_all_tasks(spark):
 
 
 @pytest.mark.parametrize("files_per_dir", [1, 2])
+def test_shard_exchange_hashes_rows_only_to_salt_files_per_dir(
+    spark, tmp_path, files_per_dir
+):
+    """The salt is 0 with one file per directory, so the shard exchange
+    of the pipeline computes no row hash then."""
+    from pyspark.sql.types import LongType, StructField, StructType, TimestampType
+
+    (tmp_path / "src").mkdir()
+    cfg = IngestConfig(
+        target_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        source_path=str(tmp_path / "src"),
+        source_schema=StructType(
+            [StructField("ts", TimestampType()), StructField("v", LongType())]
+        ),
+        trigger_seconds=None,
+        partition_time_column="ts",
+        files_per_dir=files_per_dir,
+        num_shards=2,
+    )
+    plan = build_pipeline(spark, cfg)._jdf.queryExecution().analyzed()
+    [exchange] = [
+        line for line in plan.toString().splitlines() if "RepartitionByExpression" in line
+    ]
+    assert ("xxhash64" in exchange) == (files_per_dir > 1), exchange
+
+
+@pytest.mark.parametrize("files_per_dir", [1, 2])
 def test_drain_writes_files_per_dir_into_every_date_dir(spark, tmp_path, files_per_dir):
     """files per batch = dirs × files_per_dir on a real ``ingest_once``
     drain: 30 dates × 40 rows plus 40 rows with no time, one batch;
