@@ -373,671 +373,6 @@ def fit_exponent(points: dict[int, float]) -> float:
     return round(num / den, 3)
 
 
-def build_random_embeddings(spark, n: int) -> str:
-    """Synthetic isotropic embeddings table with n rows for the IMI
-    ceiling lane. NOT a blow-up of the fixture: the fixture rotation
-    trick decorrelates only 64 copies (copies i and i+64 would be
-    bit-identical ⇒ every vector gains ~n/640k exact duplicates and
-    the verify measures duplicate explosion, not scaling). 64 uniform
-    [-0.5, 0.5) draws per row, JVM-side, normalized by the operator's
-    own _unit_vectors pass; random-pair cosine concentrates at
-    ±1/√64, so the 0.4 threshold keeps output sparse."""
-    from pyspark.sql import functions as F
-
-    from kafka_parquet_writer_spark.catalog import table_path
-
-    out = tempfile.mkdtemp(prefix=f"kpws_imiscale_n{n}_")
-    (
-        spark.range(n)
-        .repartition(32)
-        .select(
-            F.col("id").alias("vec_id"),
-            F.array(
-                *[(F.rand(seed=i) - F.lit(0.5)).cast("float") for i in range(64)]
-            ).alias("embedding"),
-        )
-        .write.mode("overwrite")
-        .parquet(table_path(out, "embeddings"))
-    )
-    return out
-
-
-def build_clustered_embeddings(
-    spark, n_base: int, n_dup: int, clusters: int, sigma: float, eps: float
-) -> tuple[str, list[tuple[int, int]]]:
-    """Synthetic CLUSTERED embeddings corpus + planted near-dup pairs.
-
-    Every committed ANN lane so far ran on isotropic vectors — the one
-    regime where a seeded random centroid bank cannot skew. Real
-    embedding corpora cluster (crawl snapshots, version families,
-    topical modes), which is exactly the regime the dedup docstrings
-    invoke; this builder makes that corpus deterministically:
-
-    - `clusters` unit cluster centers (seeded randn, d=64), with
-      ZIPF-ISH SIZES: point i belongs to cluster ⌊C·(i/n)²⌋, so the
-      head cluster holds ~10% of the corpus and the tail ~0.5% — real
-      corpora have head topics, and the head is where a seeded bank's
-      hot-cell quadratic bites;
-    - base point i = normalize(center + sigma·g_i) with g_i from a
-      per-row Philox keyed by vec_id. NOTE sigma is PER-DIMENSION:
-      the noise VECTOR norm is sigma·√64, so pairwise intra-cluster
-      cosine ≈ 1/(1+64σ²) — sigma = 1/16 puts it ≈ 0.80, tight
-      real-corpus geometry below the lane's dup threshold (the first
-      cut of this lane used sigma = 1/3 thinking in vector norms and
-      produced a nearly isotropic corpus);
-    - `n_dup` planted dups: vec_id n_base+j copies base (37·j mod
-      n_base) plus eps-noise (again per-dim; eps = 0.0125 → dup
-      cosine ≈ 1/(1+64ε²) ≈ 0.990, above the threshold). The
-      (base, dup) list is the ground truth for recall.
-
-    Generation is distributed (mapInPandas over spark.range) and
-    keyed by vec_id, so any partitioning yields the same corpus.
-    """
-    import numpy as np
-
-    from kafka_parquet_writer_spark.catalog import table_path
-
-    rng = np.random.RandomState(777)
-    centers = rng.randn(clusters, 64)
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-
-    def gen(batches, centers=centers):
-        import pandas as pd
-
-        def base_vec(i: int):
-            g = np.random.Generator(np.random.Philox(key=int(i)))
-            cl = min(clusters - 1, int(clusters * (i / n_base) ** 2))
-            x = centers[cl] + sigma * g.standard_normal(64)
-            return x / np.linalg.norm(x)
-
-        for pdf in batches:
-            out = []
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            for i in ids:
-                if i < n_base:
-                    v = base_vec(i)
-                else:
-                    b = base_vec((37 * (i - n_base)) % n_base)
-                    g = np.random.Generator(np.random.Philox(key=int(i)))
-                    v = b + eps * g.standard_normal(64)
-                    v = v / np.linalg.norm(v)
-                out.append(v.astype(np.float32))
-            yield pd.DataFrame({"vec_id": ids, "embedding": out})
-
-    out_dir = tempfile.mkdtemp(prefix=f"kpws_skew_n{n_base + n_dup}_")
-    (
-        spark.range(n_base + n_dup)
-        .repartition(32)
-        .mapInPandas(gen, "vec_id long, embedding array<float>")
-        .write.mode("overwrite")
-        .parquet(table_path(out_dir, "embeddings"))
-    )
-    planted = [
-        ((37 * j) % n_base, n_base + j) for j in range(n_dup)
-    ]
-    return out_dir, planted
-
-
-def clustered_skew_lane() -> None:
-    """Opt-in lane (`python bench_scale.py skew`): measure seeded vs
-    TRAINED centroid banks on a CLUSTERED corpus — the one untested
-    assumption in the 100 TB dedup story (r6 verdict): every committed
-    bank is seeded isotropic randn, and no lane had measured
-    cell-population skew where the data actually clusters.
-
-    For each bank the lane reports, at the operator's own geometry
-    (m = n/target cells, probe-1 Voronoi populations + the probe-4
-    populations the verify actually runs on):
-      max_cell, Σcell² (the verify's pair budget), and
-      max_cell²/Σcell² (hot-cell concentration — the fraction of all
-      pairwise work sitting in the single largest cell);
-      wall time of the full assignment+verify+distinct pipeline at a
-      0.95 threshold (clustered corpora verify at tight thresholds;
-      0.4 on cos≈0.9 clusters would emit every intra-cluster pair);
-      recall of the planted near-dup pairs.
-    The trained bank is train_centroid_bank's 5 Lloyd passes from the
-    SAME seeded bank (train time reported separately — at 100 TB the
-    trainer runs on a sample). Merged into BENCH_SCALE.json under
-    "clustered_skew"."""
-    import shutil
-
-    for var in (
-        "OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"
-    ):
-        os.environ.setdefault(var, "1")
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
-
-    from kafka_parquet_writer_spark import get_spark
-    from kafka_parquet_writer_spark.operators import dedup as D
-
-    N_BASE, N_DUP, CLUSTERS = 100_000, 2_000, 100
-    # sigma/eps are PER-DIMENSION (see build_clustered_embeddings):
-    # intra-cluster cos ≈ 1/(1+64σ²) ≈ 0.80, planted-dup cos ≈ 0.99,
-    # threshold between them with margin on both sides
-    # 10 rounds: split-reseeding needs ~log2(816/100) ≈ 4 rounds just
-    # to activate the bank on a 100-mode corpus; the remaining rounds
-    # are the actual Lloyd refinement (5 rounds measured: hot-share
-    # improved 3.7x but Σcell² only 16% — unconverged)
-    SIGMA, EPS, THRESHOLD, ROUNDS = 1.0 / 16.0, 0.0125, 0.95, 10
-
-    spark = get_spark("bench_scale_skew")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    d, planted = build_clustered_embeddings(
-        spark, N_BASE, N_DUP, CLUSTERS, SIGMA, EPS
-    )
-    out: dict[str, object] = {
-        "n": N_BASE + N_DUP,
-        "clusters": CLUSTERS,
-        "sigma": round(SIGMA, 4),
-        "eps": EPS,
-        "threshold": THRESHOLD,
-        "planted_pairs": N_DUP,
-        "train_rounds": ROUNDS,
-    }
-    try:
-        emb = D._unit_vectors(spark, d)
-        n_total = N_BASE + N_DUP
-        m = max(D.ANN_DEDUP_CELLS, n_total // D.ANN_DEDUP_TARGET_PER_CELL)
-        out["m"] = m
-        seeded = D._dedup_centroids(m)
-        t0 = time.time()
-        trained = D.train_centroid_bank(emb, seeded, ROUNDS)
-        out["train_sec"] = round(time.time() - t0, 3)
-        print(f"trained {m} cells in {out['train_sec']}s", file=sys.stderr)
-
-        planted_df = spark.createDataFrame(planted, "v1 long, v2 long")
-        verify = D._make_verifier(THRESHOLD)
-
-        def pairs_for(bank):
-            return (
-                emb.mapInPandas(
-                    D._make_assigner(bank),
-                    "vec_id long, u array<double>, cell int",
-                )
-                .groupBy("cell")
-                .applyInPandas(verify, "v1 long, v2 long, cos double")
-                .distinct()
-            )
-
-        modes = (("seeded", seeded), ("trained", trained))
-        results: dict[str, dict] = {tag: {} for tag, _ in modes}
-        for tag, bank in modes:
-            stats = results[tag]
-            for probe, pfx in ((1, "p1"), (D.ANN_DEDUP_PROBE, "p4")):
-                pops = [
-                    r["count"]
-                    for r in emb.mapInPandas(
-                        D._make_assigner(bank, probe=probe),
-                        "vec_id long, u array<double>, cell int",
-                    )
-                    .groupBy("cell")
-                    .count()
-                    .collect()
-                ]
-                sumsq = float(sum(p * p for p in pops))
-                stats[f"{pfx}_max_cell"] = max(pops)
-                stats[f"{pfx}_sumsq"] = sumsq
-                stats[f"{pfx}_hot_share"] = round(
-                    max(pops) ** 2 / sumsq, 4
-                )
-                stats[f"{pfx}_cells_used"] = len(pops)
-        # one untimed warm-up (python worker pool + codegen), then the
-        # two modes INTERLEAVED min-of-2 — the first cut timed seeded
-        # first and charged it the whole pool fork cost
-        run(pairs_for(seeded))
-        for _pass in range(2):
-            for tag, bank in modes:
-                t0 = time.time()
-                run(pairs_for(bank))
-                dt = time.time() - t0
-                prev = results[tag].get("pairs_sec")
-                results[tag]["pairs_sec"] = round(
-                    dt if prev is None else min(prev, dt), 3
-                )
-        for tag, bank in modes:
-            pairs = pairs_for(bank)
-            results[tag]["pairs_out"] = pairs.count()
-            found = planted_df.join(
-                pairs, ["v1", "v2"], "left_semi"
-            ).count()
-            results[tag]["recall"] = round(found / N_DUP, 4)
-            out[tag] = results[tag]
-            print(f"{tag}: {results[tag]}", file=sys.stderr)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_SCALE.json"
-    )
-    try:
-        with open(path) as f:
-            blob = json.load(f)
-    except (OSError, ValueError):
-        blob = {}
-    blob["clustered_skew"] = out
-    with open(path, "w") as f:
-        f.write(json.dumps(blob) + "\n")
-    print(json.dumps({"clustered_skew": out}))
-
-
-def imi_ceiling_lane() -> None:
-    """Opt-in lane (`python bench_scale.py imi`): measure the ANN dedup
-    operator PAST the 64k-cell flat-assignment ceiling — the scale the
-    committed ladder (×32 of sf0.1 = 160k vectors, m = 1280) never
-    reaches. Three synthetic points 2.0625M / 4.125M / 8.25M vectors;
-    the 8.25M point needs m = 66 000 > ANN_DEDUP_MAX_LITERAL_CELLS, so
-    the UNMODIFIED operator takes its two-level IMI handoff there. The
-    two smaller points run twice: their natural flat path (the n·m
-    gemm whose cost is ∝ n²/target — the term the IMI removes) and the
-    IMI path forced via the module ceiling, giving the IMI curve's own
-    doubling exponents plus a flat-vs-IMI contrast at equal n. One
-    timed pass per point (the points are minutes each; cross-pass
-    noise is small relative to the doubling signal). Merges results
-    into BENCH_SCALE.json under "imi_ceiling" without touching the
-    main lanes."""
-    import shutil
-
-    # BLAS thread pinning BEFORE the JVM forks its python daemon: with
-    # 32 workers each defaulting to all-core OpenBLAS, the flat
-    # point's gemms ran 1024 threads and made zero progress in 8 min.
-    # One thread per worker is the right shape on local[32].
-    for var in (
-        "OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"
-    ):
-        os.environ.setdefault(var, "1")
-    # keep glibc from mmap/munmap-ing the assigners' large score
-    # buffers every batch (the 32-worker page-fault storm): big
-    # allocations stay on the heap and get reused
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
-
-    from kafka_parquet_writer_spark import get_spark
-    from kafka_parquet_writer_spark.operators import dedup as D
-    from kafka_parquet_writer_spark.registry import (
-        QUERIES,
-        load_all_operators,
-    )
-
-    load_all_operators()
-    spark = get_spark("bench_scale_imi")
-    # The flat contrast at m = 16.5k/33k cells would otherwise build a
-    # (10000 × m) float64 score matrix per Arrow batch per worker
-    # (1.3-2.6 GB × 32 workers — memory thrash, the second half of the
-    # zero-progress stall). 2048-row batches bound it at ~270-540 MB
-    # per worker; the IMI batches are tiny either way.
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    n8 = 8_250_000
-    points = [n8 // 4, n8 // 2, n8]
-    out: dict[str, dict] = {"flat_sec": {}, "imi_sec": {}, "cells": {}}
-    for n in points:
-        d = build_random_embeddings(spark, n)
-        try:
-            m = max(
-                D.ANN_DEDUP_CELLS, n // D.ANN_DEDUP_TARGET_PER_CELL
-            )
-            out["cells"][str(n)] = m
-            if m <= D.ANN_DEDUP_MAX_LITERAL_CELLS:
-                t0 = time.time()
-                run(QUERIES["dedup_embedding_ann"](spark, d))
-                out["flat_sec"][str(n)] = round(time.time() - t0, 3)
-                print(
-                    f"flat n={n} m={m}: {out['flat_sec'][str(n)]}s",
-                    file=sys.stderr,
-                )
-            old = D.ANN_DEDUP_MAX_LITERAL_CELLS
-            D.ANN_DEDUP_MAX_LITERAL_CELLS = 1  # force the IMI path
-            try:
-                t0 = time.time()
-                run(QUERIES["dedup_embedding_ann"](spark, d))
-                out["imi_sec"][str(n)] = round(time.time() - t0, 3)
-            finally:
-                D.ANN_DEDUP_MAX_LITERAL_CELLS = old
-            forced = " (natural handoff)" if m > old else " (forced)"
-            print(
-                f"imi  n={n} m={m}: {out['imi_sec'][str(n)]}s{forced}",
-                file=sys.stderr,
-            )
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-    imi = {int(k): v for k, v in out["imi_sec"].items()}
-    out["imi_exponent"] = fit_exponent(
-        {k // (n8 // 4): v for k, v in imi.items()}
-    )
-    ks = sorted(imi)
-    out["imi_last_doubling_exponent"] = round(
-        math.log(imi[ks[-1]] / imi[ks[-2]]) / math.log(2), 3
-    )
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_SCALE.json"
-    )
-    try:
-        with open(path) as f:
-            blob = json.load(f)
-    except (OSError, ValueError):
-        blob = {}
-    blob["imi_ceiling"] = out
-    with open(path, "w") as f:
-        f.write(json.dumps(blob) + "\n")
-    print(json.dumps({"imi_ceiling": out}))
-
-
-def _completed_stages(spark) -> dict[tuple[int, int], dict]:
-    """Per-stage metrics from the session's own status REST API
-    (local UI, no event-log parsing): (stageId, attemptId) ->
-    {name, wall_sec, cpu_sec, shuffle_read_mb, shuffle_write_mb,
-    input_mb, tasks}. Keyed by attempt too (r7 ADVICE): a retried
-    stage reports one record per attempt and keying by stageId alone
-    would overwrite the first attempt's task/cpu receipts."""
-    import datetime as dt
-    import urllib.request
-
-    sc = spark.sparkContext
-    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        stages = json.loads(r.read().decode())
-
-    def ts(s):
-        try:
-            return dt.datetime.strptime(
-                s.replace("GMT", "+0000"), "%Y-%m-%dT%H:%M:%S.%f%z"
-            ).timestamp()
-        except (ValueError, AttributeError):
-            return None
-
-    out = {}
-    for st in stages:
-        if st.get("status") != "COMPLETE":
-            continue
-        sub, comp = ts(st.get("submissionTime")), ts(st.get("completionTime"))
-        out[(st["stageId"], st.get("attemptId", 0))] = {
-            "name": st.get("name", "")[:80],
-            "wall_sec": round(comp - sub, 2) if sub and comp else None,
-            # task-OCCUPANCY seconds (includes blocking on python
-            # workers and I/O) vs actual JVM CPU seconds — the gap is
-            # time the executor thread spent WAITING
-            "task_sec": round(st.get("executorRunTime", 0) / 1000.0, 1),
-            "jvm_cpu_sec": round(
-                st.get("executorCpuTime", 0) / 1e9, 1
-            ),
-            "gc_sec": round(st.get("jvmGcTime", 0) / 1000.0, 1),
-            "shuffle_write_sec": round(
-                st.get("shuffleWriteTime", 0) / 1e9, 1
-            ),
-            "shuffle_read_mb": round(
-                st.get("shuffleReadBytes", 0) / 1e6, 1
-            ),
-            "shuffle_write_mb": round(
-                st.get("shuffleWriteBytes", 0) / 1e6, 1
-            ),
-            "input_mb": round(st.get("inputBytes", 0) / 1e6, 1),
-            "tasks": st.get("numTasks", 0),
-        }
-    return out
-
-
-def imi_stage_receipts_lane() -> None:
-    """Opt-in lane (`python bench_scale.py imistages`): per-STAGE
-    receipts for the IMI ceiling points. The r6 lane measured a 1.244
-    doubling exponent for the IMI path and SURVEY attributed the
-    super-linearity to the probe shuffle + Arrow ser/de against one
-    box's page cache (assignment flops being ~1 s) — a plausible
-    decomposition but not a measurement (r6 verdict). This lane runs
-    the 4.125M and 8.25M IMI points once each and records every
-    stage's wall/cpu/shuffle-bytes from the status API, so the claim
-    becomes a table: whichever stage's wall time doubles
-    super-linearly IS the bottleneck. Merged into BENCH_SCALE.json
-    under "imi_stage_receipts"."""
-    import shutil
-
-    for var in (
-        "OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"
-    ):
-        os.environ.setdefault(var, "1")
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
-
-    from kafka_parquet_writer_spark import get_spark
-    from kafka_parquet_writer_spark.operators import dedup as D
-    from kafka_parquet_writer_spark.registry import (
-        QUERIES,
-        load_all_operators,
-    )
-
-    load_all_operators()
-    # the status REST API needs the UI server, which sessions normally
-    # disable; its overhead is irrelevant next to minutes-long points.
-    # The 2048-row Arrow batch clamp was inherited from the imi_ceiling
-    # lane (where it protects the FLAT path's giant score matrices) and
-    # then MEASURED for the IMI path itself: at Spark's default 10k
-    # batches the same points run 373.0/684.3 s vs 316.8/441.2 s
-    # clamped (batch_size_experiment in BENCH_SCALE.json) — the bigger
-    # per-batch object arrays and temporaries cost more than the saved
-    # per-batch overhead (the malloc/page-cache wall again), so the
-    # clamp stays, now by receipt rather than inheritance.
-    spark = get_spark(
-        "bench_scale_imistages",
-        extra_conf={"spark.ui.enabled": "true"},
-    )
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    n8 = 8_250_000
-    out: dict[str, object] = {}
-    # warm-up: one small IMI pass first — forks the full python worker
-    # pool and touches every code path, so the first measured point
-    # does not carry the fork/allocation cold-start (the 5-run
-    # protocols measure run 1 at ~2.5x steady state; r6's imi lane was
-    # implicitly warmed by the flat run preceding it at the same n)
-    wd = build_random_embeddings(spark, 500_000)
-    try:
-        old = D.ANN_DEDUP_MAX_LITERAL_CELLS
-        D.ANN_DEDUP_MAX_LITERAL_CELLS = 1
-        try:
-            run(QUERIES["dedup_embedding_ann"](spark, wd))
-        finally:
-            D.ANN_DEDUP_MAX_LITERAL_CELLS = old
-    finally:
-        shutil.rmtree(wd, ignore_errors=True)
-    for n in (n8 // 2, n8):
-        d = build_random_embeddings(spark, n)
-        try:
-            before = set(_completed_stages(spark))
-            old = D.ANN_DEDUP_MAX_LITERAL_CELLS
-            D.ANN_DEDUP_MAX_LITERAL_CELLS = 1  # force the IMI path
-            try:
-                t0 = time.time()
-                run(QUERIES["dedup_embedding_ann"](spark, d))
-                total = round(time.time() - t0, 2)
-            finally:
-                D.ANN_DEDUP_MAX_LITERAL_CELLS = old
-            after = _completed_stages(spark)
-            stages = [
-                {"stageId": sid, "attemptId": att, **after[(sid, att)]}
-                for sid, att in sorted(set(after) - before)
-            ]
-            out[str(n)] = {"total_sec": total, "stages": stages}
-            print(f"imi n={n}: {total}s", file=sys.stderr)
-            for st in stages:
-                print(f"  {st}", file=sys.stderr)
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_SCALE.json"
-    )
-    try:
-        with open(path) as f:
-            blob = json.load(f)
-    except (OSError, ValueError):
-        blob = {}
-    blob["imi_stage_receipts"] = out
-    with open(path, "w") as f:
-        f.write(json.dumps(blob) + "\n")
-    print(json.dumps({"imi_stage_receipts": out}))
-
-
-def verify_ab_lane() -> None:
-    """Opt-in lane (`python bench_scale.py verifyab`): SAME-BOX-STATE
-    interleaved comparison of the two surviving large-corpus verify
-    plans at the 4.125M IMI point — per-cell groupBy("cell")
-    applyInPandas (shipped) vs bucketed groupBy(cell % 1024) with a
-    multi-cell verifier per group.
-
-    Why interleaved: the first round-7 comparison ran the three
-    verify forms in SEPARATE lane invocations ~25 min apart, and the
-    box degraded monotonically between them (khugepaged THP
-    compaction climbing to ~60% of a core after a day of heavy JVM
-    churn — the per-cell plan re-measured 3× its own committed
-    receipt on IDENTICAL code). Sequential cross-run comparisons on
-    this box are load-noise-dominated; A/B/A/B within one session on
-    one shared dataset is the only trustworthy ordering. Records
-    per-run wall, the verify stage's task/cpu/gc seconds, and the
-    1-min loadavg before each run, under "verify_ab_experiment"."""
-    import shutil
-
-    for var in (
-        "OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"
-    ):
-        os.environ.setdefault(var, "1")
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
-
-    from pyspark.sql import functions as F
-
-    from kafka_parquet_writer_spark import get_spark
-    from kafka_parquet_writer_spark.catalog import load_table
-    from kafka_parquet_writer_spark.operators import dedup as D
-    from kafka_parquet_writer_spark.registry import (
-        QUERIES,
-        load_all_operators,
-    )
-
-    load_all_operators()
-    spark = get_spark(
-        "bench_scale_verifyab",
-        extra_conf={"spark.ui.enabled": "true"},
-    )
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    # warm-up: small forced-IMI pass through the shipped operator
-    wd = build_random_embeddings(spark, 500_000)
-    try:
-        old = D.ANN_DEDUP_MAX_LITERAL_CELLS
-        D.ANN_DEDUP_MAX_LITERAL_CELLS = 1
-        try:
-            run(QUERIES["dedup_embedding_ann"](spark, wd))
-        finally:
-            D.ANN_DEDUP_MAX_LITERAL_CELLS = old
-    finally:
-        shutil.rmtree(wd, ignore_errors=True)
-
-    n = int(os.environ.get("SPARK_GRAFT_VERIFYAB_N", 4_125_000))
-    d = build_random_embeddings(spark, n)
-
-    def probes():
-        # the IMI branch's own assignment (raw float32 input form),
-        # rebuilt per run so each variant pays identical upstream cost
-        m = max(D.ANN_DEDUP_CELLS, n // D.ANN_DEDUP_TARGET_PER_CELL)
-        side = int(math.ceil(math.sqrt(m)))
-        raw = load_table(spark, d, "embeddings").select(
-            "vec_id", F.col("embedding").alias("u")
-        )
-        return raw.mapInPandas(
-            D._make_imi_assigner(side, side, normalize=True, raw_u=True),
-            "vec_id long, u array<float>, cell long",
-        )
-
-    def percell(p):
-        # the superseded per-cell form, kept lane-local so the A/B
-        # stays reproducible after the operator shipped the winner
-        return (
-            p.groupBy("cell")
-            .applyInPandas(
-                D._make_verifier(normalize=True),
-                "v1 long, v2 long, cos double",
-            )
-            .distinct()
-        )
-
-    def bucketed(p):
-        # the shipped plan (dedup.py::_raw_verify), sized like the
-        # IMI branch sizes it
-        m = max(D.ANN_DEDUP_CELLS, n // D.ANN_DEDUP_TARGET_PER_CELL)
-        side = int(math.ceil(math.sqrt(m)))
-        return D._raw_verify(p, cells=side * side)
-
-    out: list[dict] = []
-    try:
-        for label, plan in (
-            ("percell", percell),
-            ("bucket", bucketed),
-            ("percell", percell),
-            ("bucket", bucketed),
-        ):
-            load1 = open("/proc/loadavg").read().split()[0]
-            before = set(_completed_stages(spark))
-            t0 = time.time()
-            run(plan(probes()))
-            total = round(time.time() - t0, 2)
-            after = _completed_stages(spark)
-            new = [
-                {"stageId": sid, "attemptId": att, **after[(sid, att)]}
-                for sid, att in sorted(set(after) - before)
-            ]
-            # the verify stage is the one that reads the probe shuffle;
-            # if the REST snapshot caught no new COMPLETE stage (r7
-            # ADVICE), record nulls instead of crashing the lane
-            ver = (
-                max(new, key=lambda s: s["shuffle_read_mb"])
-                if new
-                else None
-            )
-            rec = {
-                "variant": label,
-                "total_sec": total,
-                "loadavg_before": float(load1),
-                "verify_wall_sec": ver["wall_sec"] if ver else None,
-                "verify_task_sec": ver["task_sec"] if ver else None,
-                "verify_jvm_cpu_sec": ver["jvm_cpu_sec"] if ver else None,
-                "verify_gc_sec": ver["gc_sec"] if ver else None,
-            }
-            out.append(rec)
-            print(json.dumps(rec), file=sys.stderr)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_SCALE.json"
-    )
-    try:
-        with open(path) as f:
-            blob = json.load(f)
-    except (OSError, ValueError):
-        blob = {}
-    prev = blob.get("verify_ab_experiment", {})
-    if "runs" in prev:  # legacy single-point shape -> re-key by its n
-        prev = {str(prev["n"]): prev["runs"]}
-    prev[str(n)] = out
-    blob["verify_ab_experiment"] = prev
-    with open(path, "w") as f:
-        f.write(json.dumps(blob) + "\n")
-    print(json.dumps({"verify_ab_experiment": {str(n): out}}))
-
-
 def subseq_prune_lane() -> None:
     """Opt-in lane (`python bench_scale.py subseq`): does LB-style
     prefix pruning pay for the subsequence-search family in a Spark
@@ -1365,10 +700,13 @@ def bpe_drift_lane() -> None:
 
 
 # Every lane name this file can itself write (opt-in sub-commands
-# included). _carry_forward preserves unknown lanes too — deleting
-# receipts is worse than keeping a renamed one — but stamps them and
-# warns, so a renamed/obsolete lane's receipt cannot silently read as
-# current evidence forever (r8 ADVICE).
+# included), plus the receipts of deleted lanes that docstrings still
+# cite as evidence (imi_ceiling, clustered_skew, imi_stage_receipts*,
+# the ANN verify *_experiment receipts: their lanes called dedup
+# internals that no longer exist). _carry_forward preserves unknown
+# lanes too — deleting receipts is worse than keeping a renamed one —
+# but stamps them and warns, so a renamed/obsolete lane's receipt
+# cannot silently read as current evidence forever.
 KNOWN_LANES = frozenset({
     "metric", "exponents", "streaming_affine", "timings",
     "ks_linear", "ks_ann", "ks_quadratic", "linear_short_keys",
@@ -2120,15 +1458,7 @@ def bpe_drift_rocksdb_lane() -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "imi":
-        imi_ceiling_lane()
-    elif len(sys.argv) > 1 and sys.argv[1] == "skew":
-        clustered_skew_lane()
-    elif len(sys.argv) > 1 and sys.argv[1] == "imistages":
-        imi_stage_receipts_lane()
-    elif len(sys.argv) > 1 and sys.argv[1] == "verifyab":
-        verify_ab_lane()
-    elif len(sys.argv) > 1 and sys.argv[1] == "subseq":
+    if len(sys.argv) > 1 and sys.argv[1] == "subseq":
         subseq_prune_lane()
     elif len(sys.argv) > 1 and sys.argv[1] == "bpedrift":
         bpe_drift_lane()

@@ -29,6 +29,7 @@ from pyspark.sql.window import Window as W
 from kafka_parquet_writer_spark.artifacts import cache_frame
 from kafka_parquet_writer_spark.catalog import load_table
 from kafka_parquet_writer_spark.functions import texthash as TH
+from kafka_parquet_writer_spark.functions import vector as V
 from kafka_parquet_writer_spark.functions.portable import pround
 from kafka_parquet_writer_spark.registry import query
 
@@ -695,8 +696,8 @@ DEDUP_CENTROIDS = _dedup_centroids()
 #: per-cell quadratic verify concentrate (Σ cell² grows). Setting this
 #: >0 refines the seeded bank with that many spherical-k-means passes
 #: over the corpus (train_centroid_bank below) so cells track the data
-#: density; the bench_scale.py `skew` lane measures the effect on a
-#: clustered synthetic corpus. At 100 TB a deployment trains on a
+#: density; BENCH_SCALE.json's clustered_skew receipt measured the
+#: effect on a clustered synthetic corpus. At 100 TB a deployment trains on a
 #: sample (pass a pre-sampled frame to the trainer), then assigns the
 #: full corpus with the frozen bank.
 ANN_TRAINED_ROUNDS = 0
@@ -723,8 +724,8 @@ def train_centroid_bank(
 ) -> list[list[float]]:
     """Refine `bank` with `rounds` exact spherical-k-means Lloyd passes
     over `emb` (any frame with a unit-vector column ``u``): assign each
-    vector to its max-dot centroid (probe-1; argmax first-occurrence ==
-    the stable lowest-index tie-break used everywhere else), then move
+    vector to its max-dot centroid (`V.nearest`, probe 1, ties to the
+    lowest index), then move
     each centroid to the renormalized mean direction of its members —
     the same Lloyd loop embedding_cluster_kmeans (mlfeat.py) runs, but
     emitting a BANK instead of labels.
@@ -800,7 +801,7 @@ def train_centroid_bank(
                     order = np.argsort(ids, kind="stable")
                     ids = ids[order]
                     u = np.vstack(pdf["u"].to_numpy())[order][:, lo:hi]
-                    cells = np.argmax(u @ c.T, axis=1)
+                    cells = V.nearest(u, c, 1, "dot")[:, 0]
                     cnt = np.bincount(cells, minlength=mm)
                     acc = np.zeros((mm, hi - lo))
                     np.add.at(acc, cells, u)
@@ -1048,12 +1049,7 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").alias("u")
         )
-        probes = raw.mapInPandas(
-            _make_imi_assigner(
-                side, side, banks=banks, normalize=True, raw_u=True
-            ),
-            "vec_id long, u array<float>, cell long",
-        )
+        probes = _assign_imi_cells(raw, side, side, banks=banks, normalize=True)
         # bucketed verify sized to the IMI product-cell space (see
         # _raw_verify for the A/B that chose this form)
         return _raw_verify(probes, cells=side * side)
@@ -1062,25 +1058,17 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         # opt-in Lloyd refinement (clustered corpora — see the flag's
         # docstring); 0 keeps the exact seeded/oracle geometry
         cs = train_centroid_bank(emb, cs[:m], ANN_TRAINED_ROUNDS)
-    # BLAS batch assignment (mapInPandas), not a per-centroid catalyst
-    # expression: the n·m dot products are one gemm per Arrow batch.
-    # The r4 literal-transform assignment (one 2-D SQL literal + an
-    # indexed transform lambda) paid ~0.8 s of plan build for the
-    # 64-row bank and, being a higher-order function, never entered
-    # whole-stage codegen — at m = 512 (lane ×32) it dominated the
-    # whole query. Cell choice matches the oracle's
-    # list_sort(struct(-dot, idx)) — stable argsort on -dot breaks
-    # EXACT score ties by centroid index — up to float64
-    # summation-order effects: BLAS reassociates/FMAs the dot sums
-    # while DuckDB folds sequentially, so a near-tie between two
-    # centroid scores (~1e-16 relative) could in principle rank cells
-    # differently across engines. No rounding absorbs that for cell
-    # CHOICE (unlike the 6-decimal cos output); probability is
-    # negligible on random data and has never been observed, but
-    # "identical" holds only up to that caveat. The centroid matrix
-    # rides in the
-    # UDF closure (m×64 float64 — bounded by the literal-cells
-    # assertion above; past that, broadcast + two-level assignment).
+    # BLAS batch assignment (`_assign_cells`: one gemm per Arrow batch,
+    # the m×64 bank in the kernel's closure, bounded by the
+    # literal-cells assertion above). The r4 literal-transform
+    # assignment paid ~0.8 s of plan build for the 64-row bank and,
+    # being a higher-order function, never entered whole-stage codegen.
+    # Cell choice matches the oracle's list_sort(struct(-dot, idx)) up
+    # to float64 summation order: BLAS reassociates the dot sums while
+    # DuckDB folds sequentially, so a near-tie between two centroid
+    # scores (~1e-16 relative) could in principle rank cells
+    # differently across engines — never observed on random data, but
+    # "identical" holds only up to that caveat.
     if n >= ANN_RAW_INPUT_MIN_ROWS:
         # large-corpus input form (see ANN_RAW_INPUT_MIN_ROWS): raw
         # float32 in, numpy normalization for scoring, float32
@@ -1091,16 +1079,11 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").alias("u")
         )
-        probes = raw.mapInPandas(
-            _make_assigner(cs[:m], normalize=True, raw_u=True),
-            "vec_id long, u array<float>, cell int",
-        )
+        probes = _assign_cells(raw, cs[:m], normalize=True)
         # bucketed verify sized to the flat bank — same pairs as the
         # fixture plan's per-cell applyInPandas (see _raw_verify)
         return _raw_verify(probes, cells=m)
-    probes = emb.mapInPandas(
-        _make_assigner(cs[:m]), "vec_id long, u array<double>, cell int"
-    )
+    probes = _assign_cells(emb, cs[:m])
     # Per-cell BLAS block verify (the FAISS IVF pattern), NOT a
     # self-join: the r4 join evaluated the cosine per candidate pair
     # as an interpreted zip_with/aggregate lambda (higher-order array
@@ -1116,114 +1099,40 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by construction — measured max/median ≈ 1.2).
     return (
         probes.groupBy("cell")
-        .applyInPandas(_verify_cell_blas, "v1 long, v2 long, cos double")
+        .applyInPandas(_make_verifier(), "v1 long, v2 long, cos double")
         .distinct()
     )
 
 
-def _make_assigner(
+def _assign_cells(
+    df: DataFrame,
     centroids: list[list[float]],
     probe: int = ANN_DEDUP_PROBE,
     normalize: bool = False,
-    raw_u: bool = False,
-):
-    """mapInPandas factory: per Arrow batch, score all m centroids in
-    one gemm and emit the `probe` nearest cells per vector (default
-    ANN_DEDUP_PROBE; dedup_semantic uses probe=1 for a Voronoi
-    partition). Stable argsort on score = -dot reproduces the
-    oracle's list_sort(struct(-dot, idx)) tie-breaking exactly.
+) -> DataFrame:
+    """(vec_id, u) rows -> (vec_id, u, cell), one row per each vector's
+    `probe` max-dot cells of the flat bank (`V.nearest`, metric "dot":
+    the oracle's list_sort(struct(-dot, idx)) order). dedup_semantic
+    uses probe=1 for a Voronoi partition.
 
-    `normalize=True` takes RAW (float32) embeddings in the ``u``
-    column and unit-normalizes them numpy-side after the float64
-    cast — the large-corpus input form: it halves the JVM→python
-    Arrow stream (float32 in) and moves normalization off Catalyst's
-    interpreted higher-order `transform` (never whole-stage-codegen'd)
-    into one vectorized divide. The float32→float64 cast is
-    value-exact on both routes; only the norm SUM's association order
-    differs from the SQL fold (~1e-16 — the same accepted class as
-    the BLAS dot caveat in dedup_embedding_ann's docstring). With
-    `raw_u=True` the emitted ``u`` is the UNTOUCHED float32 source
-    vector (array<float> schema) and the verifier normalizes per cell
-    (`_make_verifier(normalize=True)`) — the probe-table shuffle and
-    both of its Arrow crossings halve, with bit-identical cos values
-    (the float64 normalize runs on the same exact float32 sources,
-    just on the other side of the shuffle)."""
+    `normalize=True` is the large-corpus input form: ``u`` holds RAW
+    float32 embeddings, scored as their float64 unit vectors
+    (`V.unit`) and passed through untouched, so the probe shuffle and
+    both Arrow crossings carry half the bytes and no interpreted
+    Catalyst `transform` runs in the hot stage. The verifier then
+    normalizes per cell (`_make_verifier(normalize=True)`) on the same
+    exact float32 values — bit-identical cos. Only the norm SUM's
+    association order differs from the SQL fold (~1e-16, the BLAS
+    caveat of dedup_embedding_ann)."""
     import numpy as np
 
-    c = np.asarray(centroids, dtype=np.float64)
-
-    m = c.shape[0]
-
-    def assign(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            u = np.vstack(pdf["u"].to_numpy())
-            if normalize:
-                u = u.astype(np.float64, copy=False)
-                nrm = np.linalg.norm(u, axis=1, keepdims=True)
-                if not np.all(nrm > 0.0):  # catches 0 and NaN norms
-                    raise ValueError(
-                        "zero/NaN-norm embedding: cosine undefined"
-                    )
-                u = u / nrm
-                if raw_u:
-                    uo = pdf["u"].to_numpy()
-                else:
-                    uo = np.empty(len(u), dtype=object)
-                    uo[:] = list(u)
-            else:
-                uo = pdf["u"].to_numpy()
-            if m <= 2048:
-                # full stable argsort: exact (score, idx) order — the
-                # oracle-checked regime (every oracle fixture has
-                # m ≤ 64) and cheap at small m
-                s = -(u @ c.T)
-                order = np.argsort(s, axis=1, kind="stable")[:, :probe]
-            else:
-                # Large banks (lane/production scale, beyond any
-                # oracle fixture) need two departures from the naive
-                # form, both measured on the 16.5k-cell lane point:
-                # (1) O(m) argpartition instead of the O(m log m)
-                # full sort (ties at the probe boundary resolve by
-                # partition order instead of centroid index —
-                # indistinguishable in practice and outside the
-                # oracle-covered regime by construction); (2) row
-                # CHUNKS with a REUSED out= buffer: materializing the
-                # full batch×m score matrix (270 MB at 2048×16.5k)
-                # plus argpartition's same-size index array, fresh
-                # per batch across 32 workers, produced a kernel
-                # page-fault storm (91% sys time, zero task progress
-                # in 8 min). 256-row chunks bound live temporaries at
-                # ~34 MB and the matmul target is allocated once.
-                ch = 256
-                order = np.empty((len(u), probe), dtype=np.int64)
-                s_buf = np.empty((ch, m))
-                for st in range(0, len(u), ch):
-                    en = min(st + ch, len(u))
-                    sb = s_buf[: en - st]
-                    np.matmul(u[st:en], c.T, out=sb)
-                    np.negative(sb, out=sb)
-                    part = np.argpartition(sb, probe, axis=1)[:, :probe]
-                    sv = np.take_along_axis(sb, part, axis=1)
-                    order[st:en] = np.take_along_axis(
-                        part,
-                        np.argsort(sv, axis=1, kind="stable"),
-                        axis=1,
-                    )
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(
-                        pdf["vec_id"].to_numpy(dtype=np.int64), probe
-                    ),
-                    "u": np.repeat(uo, probe),
-                    "cell": order.ravel().astype(np.int32),
-                }
-            )
-
-    return assign
+    bank = np.asarray(centroids, dtype=np.float64)
+    return V.map_vectors(
+        df.select("vec_id", "u"),
+        "u",
+        lambda x: V.nearest(V.unit(x) if normalize else x, bank, probe, "dot"),
+        "cell long",
+    )
 
 
 def _make_verifier(
@@ -1232,13 +1141,13 @@ def _make_verifier(
     """Factory for the per-cell exact-cosine verify, with the dup
     threshold carried in the closure: python workers re-import this
     module, so a driver-side override of the module global would never
-    reach them — opt-in lanes that verify clustered corpora at a
-    tighter threshold (bench_scale.py `skew`) build their own.
+    reach them — callers that verify clustered corpora at a tighter
+    threshold build their own.
 
-    `normalize=True` pairs with the assigners' `raw_u` form: the cell
-    rows carry the UNTOUCHED float32 source vectors (half the probe
-    shuffle and both Arrow crossings) and the float64 unit-normalize
-    runs here instead — on the same exact float32 values, so the cos
+    `normalize=True` pairs with the assigners' `normalize=True` form:
+    the cell rows carry the UNTOUCHED float32 source vectors (half the
+    probe shuffle and both Arrow crossings) and the float64
+    unit-normalize runs here instead — on the same exact float32 values, so the cos
     output is bit-identical to normalizing before the shuffle."""
 
     def verify(pdf):
@@ -1256,11 +1165,7 @@ def _make_verifier(
             )
         u = np.vstack(pdf["u"].to_numpy())
         if normalize:
-            u = u.astype(np.float64, copy=False)
-            nrm = np.linalg.norm(u, axis=1, keepdims=True)
-            if not np.all(nrm > 0.0):  # catches 0 and NaN norms
-                raise ValueError("zero/NaN-norm embedding: cosine undefined")
-            u = u / nrm
+            u = V.unit(u)
         s = u @ u.T
         iu, ju = np.triu_indices(len(ids), k=1)
         cos = s[iu, ju]
@@ -1275,16 +1180,6 @@ def _make_verifier(
         )
 
     return verify
-
-
-def _verify_cell_blas(pdf):
-    """Exact-cosine verify of one IVF cell: full dot block via gemm,
-    upper triangle, threshold, portable floor-round (identical to
-    functions.portable.pround semantics: floor(x·1e6 + 0.5)/1e6).
-    float64 end-to-end, so values match the JVM/DuckDB sequential
-    folds exactly at 6-decimal rounding (same guarantee the
-    similarity_topk_blas oracle already proves)."""
-    return _make_verifier()(pdf)
 
 
 #: cells per verify bucket: the large-corpus verify groups cells
@@ -1306,65 +1201,20 @@ def _make_bucket_verifier(
 ):
     """applyInPandas factory for the large-corpus verify: one GROUP =
     one cell BUCKET (cell % ceil(m / VERIFY_CELLS_PER_BUCKET))
-    holding ~VERIFY_CELLS_PER_BUCKET whole cells. Sorts the bucket's rows by cell (numpy stable
-    argsort — applyInPandas guarantees group completeness, not row
-    order), then runs _make_verifier's exact per-cell math on each
-    contiguous cell slice: same float64 normalize (with
-    `normalize=True`, on the same exact float32 sources), same gemm,
-    same threshold compare, same portable floor-round. Equivalence to
-    the per-cell verifier is pinned by tests/test_round7_ops.py both
-    python-level and end-to-end against the fixture plan."""
+    holding ~VERIFY_CELLS_PER_BUCKET whole cells: runs the per-cell
+    verifier (`_make_verifier`) on each cell's rows of the bucket
+    (applyInPandas guarantees group completeness, not row order)."""
+    per_cell = _make_verifier(threshold, normalize)
 
     def verify(pdf):
-        import numpy as np
         import pandas as pd
 
-        order = np.argsort(pdf["cell"].to_numpy(), kind="stable")
-        cells = pdf["cell"].to_numpy()[order]
-        ids_all = pdf["vec_id"].to_numpy(dtype=np.int64)[order]
-        u_all = pdf["u"].to_numpy()[order]
-        starts = np.flatnonzero(np.r_[True, cells[1:] != cells[:-1]])
-        ends = np.r_[starts[1:], len(cells)]
-        v1s, v2s, coss = [], [], []
-        for s0, e0 in zip(starts, ends):
-            p = int(e0 - s0)
-            if p < 2:
-                continue
-            u = np.vstack(u_all[s0:e0])
-            if normalize:
-                u = u.astype(np.float64, copy=False)
-                nrm = np.linalg.norm(u, axis=1, keepdims=True)
-                if not np.all(nrm > 0.0):  # catches 0 and NaN norms
-                    raise ValueError(
-                        "zero/NaN-norm embedding: cosine undefined"
-                    )
-                u = u / nrm
-            s = u @ u.T
-            iu, ju = np.triu_indices(p, k=1)
-            cos = s[iu, ju]
-            keep = cos >= threshold
-            if not keep.any():
-                continue
-            ids = ids_all[s0:e0]
-            a, b = ids[iu[keep]], ids[ju[keep]]
-            v1s.append(np.minimum(a, b))
-            v2s.append(np.maximum(a, b))
-            coss.append(np.floor(cos[keep] * 1e6 + 0.5) / 1e6)
-        if not v1s:
-            return pd.DataFrame(
-                {
-                    "v1": np.array([], dtype=np.int64),
-                    "v2": np.array([], dtype=np.int64),
-                    "cos": np.array([], dtype=np.float64),
-                }
-            )
-        return pd.DataFrame(
-            {
-                "v1": np.concatenate(v1s),
-                "v2": np.concatenate(v2s),
-                "cos": np.concatenate(coss),
-            }
-        )
+        parts = [
+            out
+            for _, rows in pdf.groupby("cell", sort=False)
+            if len(out := per_cell(rows))
+        ]
+        return pd.concat(parts, ignore_index=True) if parts else per_cell(pdf[:0])
 
     return verify
 
@@ -1406,7 +1256,7 @@ def _raw_verify(probes, cells: int):
     Skew note: bucketing never splits a cell, so a clustered
     corpus's hot cell dominates whichever group holds it — the
     straggler bound is IDENTICAL to the per-cell plan's, and the
-    mitigation is the same one the clustered_skew lane measures:
+    mitigation is the same one the clustered_skew receipt measured:
     trained centroid banks (ANN_TRAINED_ROUNDS) that bound hot-cell
     population, not the verify's group shape."""
     buckets = max(1, -(-cells // VERIFY_CELLS_PER_BUCKET))
@@ -1456,93 +1306,35 @@ def _imi_banks(
     return out[0], out[1]
 
 
-def _make_imi_assigner(
+def _assign_imi_cells(
+    df: DataFrame,
     m1: int,
     m2: int,
     probe: int = ANN_DEDUP_PROBE,
     banks: tuple[list[list[float]], list[list[float]]] | None = None,
     normalize: bool = False,
-    raw_u: bool = False,
-):
-    """mapInPandas factory for the two-level assignment: per Arrow
-    batch, TWO half-dim gemms (m1 + m2 dots per row), then the probe
-    nearest of the m1·m2 product cells via the top-probe × top-probe
-    shortcut — exact because any pair (i, j) among the overall
-    top-probe combined scores must have i among s1's top-probe (were
-    there `probe` coarse indices strictly better than i, pairing each
-    with the same j would give `probe` strictly better pairs) and
-    symmetrically j among s2's; score ties resolve by cell id on both
-    engines (stable argsort here ≡ the oracle's list_sort(struct(s,
-    c))). Cell id = i·m2 + j as int64. Closure ships two (side × 32)
-    float64 banks — 64 KB at side 256 (m = 65 k), still closure-sized
-    at every realistic m (side 4096 → 2 MB). `banks` overrides the
-    seeded half-banks with trained ones (train_centroid_bank with
-    dims/norm for each half); None keeps the seeded/oracle geometry.
-    `normalize` / `raw_u` as in _make_assigner: raw float32
-    embeddings in, numpy normalization for scoring, and with raw_u
-    the float32 source vectors passed through for a per-cell
-    normalizing verifier — the large-corpus input form."""
+) -> DataFrame:
+    """(vec_id, u) rows -> (vec_id, u, cell): the two-level assignment,
+    one row per each vector's `probe` nearest of the m1·m2 product
+    cells (`V.imi_nearest`: two half-dim gemms per Arrow batch, m1 + m2
+    dots per row; cell id = i·m2 + j). The closure ships two (side ×
+    32) float64 banks — 64 KB at side 256 (m = 65 k), still
+    closure-sized at every realistic m (side 4096 → 2 MB). `banks`
+    overrides the seeded half-banks with trained ones
+    (train_centroid_bank with dims/norm for each half); None keeps the
+    seeded/oracle geometry. `normalize` as in _assign_cells."""
     import numpy as np
 
-    c1l, c2l = banks if banks is not None else _imi_banks(m1, m2)
-    c1 = np.asarray(c1l, dtype=np.float64)
-    c2 = np.asarray(c2l, dtype=np.float64)
-
-    def assign(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            u = np.vstack(pdf["u"].to_numpy())
-            if normalize:
-                u = u.astype(np.float64, copy=False)
-                nrm = np.linalg.norm(u, axis=1, keepdims=True)
-                if not np.all(nrm > 0.0):  # catches 0 and NaN norms
-                    raise ValueError(
-                        "zero/NaN-norm embedding: cosine undefined"
-                    )
-                u = u / nrm
-                if raw_u:
-                    uo = pdf["u"].to_numpy()
-                else:
-                    uo = np.empty(len(u), dtype=object)
-                    uo[:] = list(u)
-            else:
-                uo = pdf["u"].to_numpy()
-            rows = len(u)
-            s1 = -(u[:, :32] @ c1.T)
-            s2 = -(u[:, 32:] @ c2.T)
-            o1 = np.argsort(s1, axis=1, kind="stable")[:, :probe]
-            o2 = np.argsort(s2, axis=1, kind="stable")[:, :probe]
-            rix = np.arange(rows)[:, None, None]
-            sc = (
-                s1[rix, o1[:, :, None]] + s2[rix, o2[:, None, :]]
-            ).reshape(rows, -1)
-            cells = (
-                o1[:, :, None].astype(np.int64) * m2 + o2[:, None, :]
-            ).reshape(rows, -1)
-            # (score, cell) order: pre-sort combos by cell id, then
-            # stable argsort by score — equal scores rank by cell id
-            bycell = np.argsort(cells, axis=1, kind="stable")
-            sc = np.take_along_axis(sc, bycell, axis=1)
-            cells = np.take_along_axis(cells, bycell, axis=1)
-            best = np.take_along_axis(
-                cells,
-                np.argsort(sc, axis=1, kind="stable")[:, :probe],
-                axis=1,
-            )
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(
-                        pdf["vec_id"].to_numpy(dtype=np.int64), probe
-                    ),
-                    "u": np.repeat(uo, probe),
-                    "cell": best.ravel(),
-                }
-            )
-
-    return assign
+    b1, b2 = (
+        np.asarray(b, dtype=np.float64)
+        for b in (banks if banks is not None else _imi_banks(m1, m2))
+    )
+    return V.map_vectors(
+        df.select("vec_id", "u"),
+        "u",
+        lambda x: V.imi_nearest(V.unit(x) if normalize else x, b1, b2, probe),
+        "cell long",
+    )
 
 
 def _ann_imi_oracle() -> str:
@@ -1619,16 +1411,14 @@ def dedup_embedding_ann_imi(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized to 1/√2 so every product centroid is exactly unit
     norm: max-dot assignment stays spherical k-means, same geometry
     as the flat path. Verify is the shared per-cell BLAS block
-    (_verify_cell_blas).
+    (_make_verifier).
     """
-    emb = _unit_vectors(spark, sf_dir)
-    probes = emb.mapInPandas(
-        _make_imi_assigner(ANN_IMI_SIDE, ANN_IMI_SIDE),
-        "vec_id long, u array<double>, cell long",
+    probes = _assign_imi_cells(
+        _unit_vectors(spark, sf_dir), ANN_IMI_SIDE, ANN_IMI_SIDE
     )
     return (
         probes.groupBy("cell")
-        .applyInPandas(_verify_cell_blas, "v1 long, v2 long, cos double")
+        .applyInPandas(_make_verifier(), "v1 long, v2 long, cos double")
         .distinct()
     )
 
@@ -1775,9 +1565,7 @@ def dedup_embedding_ann_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             u = np.vstack(pdf["u"].to_numpy())
-            # first-occurrence argmax == the stable lowest-index
-            # tie-break _make_assigner's stable argsort implements
-            cells = np.argmax(u @ cmat.T, axis=1)
+            cells = V.nearest(u, cmat, 1, "dot")[:, 0]
             cnt = np.bincount(cells, minlength=mm)
             sv = np.zeros(mm, dtype=np.int64)
             np.add.at(sv, cells, ids)
@@ -2233,7 +2021,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     paper's k ∝ n choice — so the within-cluster pairwise work stays
     Σ cell² ∝ n at any corpus size (a FIXED cluster count would be
     the n² trap). Per-cell verdicts are one BLAS gram matrix per cell
-    (applyInPandas, the _verify_cell_blas shape) emitting one row per
+    (applyInPandas, the _make_verifier shape) emitting one row per
     vector. Shuffle volume: n assignment rows, nothing else.
 
     Cross-cell misses are the probe-1 tradeoff the paper accepts
@@ -2250,10 +2038,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ceiling (see dedup_embedding_ann)"
         )
     cs = DEDUP_CENTROIDS if m <= ANN_DEDUP_BANK else _dedup_centroids(m)
-    probes = emb.mapInPandas(
-        _make_assigner(cs[:m], probe=1),
-        "vec_id long, u array<double>, cell int",
-    )
+    probes = _assign_cells(emb, cs[:m], probe=1)
 
     def verdicts(pdf):
         import numpy as np

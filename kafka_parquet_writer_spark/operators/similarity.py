@@ -6,9 +6,14 @@ Two paths, same API shape:
   is small (queries broadcast against the corpus).
 - **LSH-bucketed ANN** — random-hyperplane signatures turn candidate
   generation into an equi-join on bucket id; cost ∝ Σ bucket² instead
-  of |Q|×|C|. The hyperplanes are seeded literals embedded in both the
-  Spark plan and the oracle SQL, so even the *approximate* operator is
-  value-hash-verified (both engines run the identical algorithm).
+  of |Q|×|C|. The hyperplanes are seeded constants, so even the
+  *approximate* operator is value-hash-verified (both engines run the
+  identical algorithm).
+- **IVF / PQ / IVF-PQ / IMI** — cell assignment, PQ coding and
+  asymmetric distance run as the numpy kernels of functions/vector.py
+  under one `mapInArrow` adapter (`V.map_vectors`): centroids and
+  codebooks live in the kernel's closure, never in the plan, so every
+  key plans a few nodes. The oracle SQL carries them as literals.
 
 All cosine math is double-precision with rounding to 6 digits before
 ranking, so rank order is engine-independent (ties broken by vec_id).
@@ -154,12 +159,13 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = repartition_for_compute(
         load_table(spark, sf_dir, "embeddings"), F.col("vec_id")
     )
-    v = F.col("embedding")
-    bucket = None
-    for j, p in enumerate(ANN_PLANES):
-        bit = (V.dot_expr(v, V.lit_vector(p)) >= 0).cast("int") * F.lit(1 << j)
-        bucket = bit if bucket is None else bucket + bit
-    b = emb.select("vec_id", "embedding", bucket.alias("bucket"))
+    planes = np.asarray(ANN_PLANES)
+    b = V.map_vectors(
+        emb.select("vec_id", "embedding"),
+        "embedding",
+        lambda x: V.lsh_bucket(x, planes),
+        "bucket long",
+    )
     q = b.filter(F.col("vec_id") < ANN_N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qv"),
@@ -198,81 +204,16 @@ def _ivf_centroids() -> list[list[float]]:
 IVF_CENTROIDS = _ivf_centroids()
 
 
-def _ivf_cell_structs(v, centroids: list[list[float]] | None = None):
-    """Array of (l2-score, cell-idx) structs vs every centroid.
-    score_j = ‖c_j‖² − 2·v·c_j  (argmin over j ≡ nearest centroid;
-    the ‖v‖² term is constant per row and dropped)."""
-    cells = []
-    for j, c in enumerate(centroids or IVF_CENTROIDS):
-        c_norm2 = sum(x * x for x in c)
-        score = F.lit(float(c_norm2)) - 2.0 * V.dot_expr(v, V.lit_vector(c))
-        cells.append(F.struct(score.alias("s"), F.lit(j).alias("c")))
-    return F.array(*cells)
-
-
-#: symbolically-constant Column trees memoized per SparkContext —
-#: (tag, applicationId, id(const)) -> (const strong-ref, columns)
-_CONST_COL_MEMO: dict[tuple, tuple] = {}
-
-
-def _memo_const_cols(tag: str, const, builder):
-    """Memoize a Column tree that is a pure function of module-level
-    constants (the centroid/codebook literal banks).
-
-    Building these trees costs 0.3–1.0 s of py4j round-trips per
-    invocation (measured r15 — data-INDEPENDENT, the same cost class
-    the single-parse lit_matrix already shrank). Columns are immutable
-    unresolved expression wrappers, safe to reuse across DataFrames
-    and queries within one SparkContext; the key carries the
-    applicationId so a restarted context rebuilds instead of touching
-    stale JVM references, and id(const) with a strong reference held
-    in the value so the id cannot be recycled while the entry lives.
-    This caches EXPRESSIONS only — never data, plans-with-state, or
-    results; every query still computes from the parquet inputs."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    key = (tag, sc.applicationId if sc is not None else None, id(const))
-    hit = _CONST_COL_MEMO.get(key)
-    if hit is None:
-        hit = (const, builder())
-        _CONST_COL_MEMO[key] = hit
-    return hit[1]
-
-
-def kmeans_centroids(
-    emb: DataFrame,
-    n_cells: int,
-    sample_fraction: float = 1.0,
-    seed: int = IVF_SEED,
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Production IVF centroid selection: k-means on a sample (MLlib).
-
-    The declared `similarity_ivf` query uses seeded random centroids so
-    the DuckDB oracle can run the identical algorithm; a real deployment
-    wants centroids that follow the data distribution — cells come out
-    balanced, so probe cost (∝ Σ probed-cell sizes) stays predictable.
-
-    Scale shape: train on a small sample (~1% — k-means only needs the
-    coarse density landscape), which bounds driver/MLlib cost regardless
-    of corpus size; the returned centroids are plain Python literals, so
-    the assignment/probe/re-rank plan (`ivf_topk`) is byte-identical to
-    the seeded-centroid plan — still per-row expressions + one equi-join.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    sample = emb if sample_fraction >= 1.0 else emb.sample(
-        fraction=sample_fraction, seed=seed
+def ivf_cells(
+    df: DataFrame, centroids: list[list[float]], probe: int = 1
+) -> DataFrame:
+    """`df` plus ``cell``: one row per each embedding's `probe` nearest
+    centroids (l2, ties to the lower cell) — the IVF assignment of
+    every batch and streaming IVF key."""
+    cents = np.asarray(centroids, dtype=np.float64)
+    return V.map_vectors(
+        df, "embedding", lambda x: V.nearest(x, cents, probe), "cell long"
     )
-    feats = sample.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=n_cells, seed=seed, maxIter=20).fit(feats)
-    return [
-        [round(float(x), 6) for x in center] for center in model.clusterCenters()
-    ]
 
 
 def ivf_topk(
@@ -283,31 +224,16 @@ def ivf_topk(
     topk: int = IVF_TOPK,
 ) -> DataFrame:
     """IVF assignment/probe/re-rank with caller-supplied centroids —
-    the shared engine under `similarity_ivf` (seeded centroids, oracle-
-    checked) and the k-means production path (`kmeans_centroids`)."""
-    cells = emb.select(
-        "vec_id",
-        "embedding",
-        _memo_const_cols(
-            "ivf_cells",
-            centroids,
-            lambda: _ivf_cell_structs(F.col("embedding"), centroids),
-        ).alias("cl"),
+    the engine under `similarity_ivf` (seeded centroids, oracle-
+    checked) and the k-means production path (`pq_codebooks_kmeans`
+    with one book)."""
+    emb = emb.select("vec_id", "embedding")
+    corpus = ivf_cells(emb, centroids).select(
+        F.col("vec_id").alias("n_id"), F.col("embedding").alias("cv"), "cell"
     )
-    corpus = cells.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("cv"),
-        F.array_min(F.col("cl"))["c"].alias("cell"),
-    )
-    probes = (
-        cells.filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("qv"),
-            F.explode(F.slice(F.array_sort(F.col("cl")), 1, probe)).alias("p"),
-        )
-        .select("q_id", "qv", F.col("p.c").alias("cell"))
-    )
+    probes = ivf_cells(
+        emb.filter(F.col("vec_id") < n_queries), centroids, probe
+    ).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"), "cell")
     cos = pround(V.cosine_expr(F.col("qv"), F.col("cv")), 6)
     # each corpus vector lives in exactly one cell and a query's probe
     # rows carry distinct cells, so (q_id, n_id) pairs are unique
@@ -364,14 +290,14 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeded centroids (inverted file cells); each query probes its 2
     nearest cells and exact-cosine re-ranks within them, top-3.
 
-    Scale shape: cell assignment is a pure per-row expression (argmin
-    via array_min over (score, idx) structs — no shuffle, no explosion
-    of the corpus); the join is an equi-join on cell id, cost
-    ∝ Σ probed-cell sizes, never |Q|×|C|. In production the centroids
-    come from a sampled k-means (MLlib KMeans on ~1% of rows) and
-    IVF_CELLS scales to √N; the assignment/probe/re-rank plan is
-    unchanged. The oracle runs the identical algorithm — centroids are
-    seeded literals in both plans.
+    Scale shape: cell assignment is one narrow mapInArrow (`ivf_cells`:
+    one BLAS product per Arrow batch, centroids in the closure — no
+    shuffle, no explosion of the corpus); the join is an equi-join on
+    cell id, cost ∝ Σ probed-cell sizes, never |Q|×|C|. In production
+    the centroids come from a sampled k-means (MLlib KMeans on ~1% of
+    rows) and IVF_CELLS scales to √N; the plan is unchanged. The
+    oracle runs the identical algorithm over the same seeded
+    centroids, as literals.
 
     A query's own vector can appear in a probed cell; it is excluded
     (n_id ≠ q_id), matching the brute-force operator's convention.
@@ -396,11 +322,7 @@ def brute_force_topk_matrix(
     import pandas as pd
 
     q_ids = np.array([q[0] for q in queries], dtype=np.int64)
-    q_mat = np.array([q[1] for q in queries], dtype=np.float64)
-    q_nrm = np.linalg.norm(q_mat, axis=1, keepdims=True)
-    if not np.all(q_nrm > 0.0):  # catches 0 and NaN norms
-        raise ValueError("zero/NaN-norm query embedding: cosine undefined")
-    q_mat = q_mat / q_nrm
+    q_mat = V.unit([q[1] for q in queries])
 
     def score(batches):
         for pdf in batches:
@@ -495,47 +417,25 @@ def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     storage 64·4 bytes → 2 bytes and makes the ANN candidate scan
     memory-resident at 100 TB.
 
-    Scale shape: pure per-row expressions (no shuffle, no UDF) — the
-    codebooks are plan literals (seeded here; production swaps in
-    k-means-trained books exactly as `kmeans_centroids` does for IVF
-    cells, same plan). The oracle runs the identical arithmetic; the
-    sequential-fold dot product keeps doubles bit-identical.
+    Scale shape: one narrow mapInArrow over the scan (no shuffle): per
+    Arrow batch, `V.pq_codes` (one BLAS product per codebook) and the
+    error as `V.adc` of the vector against its own codes. The codebooks
+    live in the kernel's closure — seeded here; production swaps in
+    k-means-trained books (`pq_codebooks_kmeans`), same plan. The
+    oracle runs the identical arithmetic, and the error is folded in
+    its sequential order, so the doubles are bit-identical.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
+    books = [np.asarray(b, dtype=np.float64) for b in PQ_CODEBOOKS]
+    radix = PQ_K ** np.arange(PQ_M)
 
-    def _build():
-        v = F.col("embedding")
-        errs, codes = [], []
-        for m, book in enumerate(PQ_CODEBOOKS):
-            sub = F.slice(v, m * PQ_SUBDIM + 1, PQ_SUBDIM)
-            structs = F.array(
-                *[
-                    F.struct(
-                        (
-                            F.lit(float(sum(x * x for x in c)))
-                            - 2.0 * V.dot_expr(sub, V.lit_vector(c))
-                        ).alias("s"),
-                        F.lit(k).alias("c"),
-                    )
-                    for k, c in enumerate(book)
-                ]
-            )
-            best = F.array_min(structs)
-            errs.append(best["s"] + V.sq_norm_expr(sub))
-            codes.append(best["c"] * (PQ_K**m))
-        err = errs[0]
-        for e in errs[1:]:
-            err = err + e
-        code = codes[0]
-        for c in codes[1:]:
-            code = code + c
-        return [
-            code.cast("long").alias("pq_code"),
-            pround(err, 6).alias("err6"),
-        ]
+    def code(x):
+        codes = V.pq_codes(x, books)
+        return codes @ radix, V.adc(x, books, codes)
 
-    coded = _memo_const_cols("embpq_codes", PQ_CODEBOOKS, _build)
-    return emb.select("vec_id", *coded)
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return V.map_vectors(
+        emb, "embedding", code, "pq_code long, err double", keep=["vec_id"]
+    ).select("vec_id", "pq_code", pround(F.col("err"), 6).alias("err6"))
 
 
 @query(
@@ -676,17 +576,17 @@ def similarity_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate's code — no candidate embedding touched), keeps an
     ADC shortlist of 10, and exact-cosine re-ranks only that shortlist
     into the final top-3. The oracle runs the identical algorithm
-    (same seeded centroids/codebooks as plan literals, same fold
-    order), so every stage — assignment, coding, ADC, re-rank — is
+    (same seeded centroids/codebooks, as literals; same fold order),
+    so every stage — assignment, coding, ADC, re-rank — is
     value-hash-verified end to end.
 
     Scale shape: the candidate scan reads 2 bytes/vector instead of
-    256 (the memory-residency argument for PQ); ADC is a pure per-row
-    expression after one equi-join on cell id (cost ∝ Σ probed-cell
-    sizes); only `IVFPQ_RERANK` rows per query ever touch a raw
-    embedding again, via an equi-join of the (tiny, broadcast)
+    256 (the memory-residency argument for PQ); ADC is one narrow
+    mapInArrow (`V.adc`) after one equi-join on cell id (cost ∝ Σ
+    probed-cell sizes); only `IVFPQ_RERANK` rows per query ever touch
+    a raw embedding again, via an equi-join of the (tiny, broadcast)
     shortlist against the vector store. Production swaps in k-means
-    centroids/codebooks (`kmeans_centroids`) — same plan.
+    centroids/codebooks (`pq_codebooks_kmeans`) — same plan.
     """
     emb = repartition_for_compute(
         load_table(spark, sf_dir, "embeddings"), F.col("vec_id")
@@ -702,16 +602,20 @@ def pq_codebooks_kmeans(
     sample_fraction: float = 1.0,
     vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
-    """Production PQ codebook training: per-subspace k-means (MLlib).
+    """Production PQ codebook and IVF centroid training: per-subspace
+    k-means (MLlib) on a sample.
 
-    The declared `similarity_ivf_pq` key uses seeded random codebooks
-    so the DuckDB oracle can run the identical algorithm; seeded
-    random codewords quantize badly (on the isotropic fixture the
+    The declared keys use seeded random centroids and codebooks so
+    the DuckDB oracle can run the identical algorithm; seeded random
+    codewords quantize badly (on the isotropic fixture the
     quantization error swamps neighbor gaps — measured in
     tests/test_round4_ops.py), so a real deployment trains each
-    subspace's codebook on a sample, exactly as `kmeans_centroids`
-    does for IVF cells. Returned books are plain literals — the
-    `ivf_pq_topk` plan is byte-identical to the seeded-book plan.
+    subspace's codebook on a sample. One book of `n` codes is the IVF
+    centroid bank: ``pq_codebooks_kmeans(emb, 1, n, IVF_SEED)[0]``.
+    Training on ~1% of rows bounds driver/MLlib cost at any corpus
+    size (k-means only needs the coarse density landscape). Returned
+    books are plain lists — the `ivf_topk` / `ivf_pq_topk` plans are
+    identical to the seeded-constant ones.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -747,80 +651,42 @@ def ivf_pq_topk(
 ) -> DataFrame:
     """The IVF-PQ engine with caller-supplied centroids/codebooks —
     shared by the declared seeded-constant key (oracle-checked) and
-    the k-means production path (`kmeans_centroids` +
-    `pq_codebooks_kmeans`)."""
-    subdim = EMBED_DIM // len(codebooks)
-    v = F.col("embedding")
-    # the cell/code/ADC trees are pure functions of the constant
-    # banks; _memo_const_cols skips their py4j re-construction on
-    # every invocation after the first (r15: ~0.8 s of the 1.6 s warm
-    # build was re-building these three fragments)
-    cl = _memo_const_cols(
-        "ivfpq_cells", centroids, lambda: _ivf_cell_structs(v, centroids)
-    )
-    # one 2-D literal + indexed transform per book (16 separate
-    # expression trees per book made ANALYSIS the dominant cost —
-    # 5.4 s plan build measured at sf0.01; same fix as the ANN
-    # dedup centroid bank)
-
-    def _code_structs(sub, norms):
-        def fn(c, j):
-            return F.struct(
-                (F.element_at(norms, j + 1) - 2.0 * V.dot_expr(sub, c)).alias(
-                    "s"
-                ),
-                j.alias("c"),
-            )
-
-        return fn
-
-    def _build_code_cols():
-        cols = []
-        for m, book in enumerate(codebooks):
-            norms = V.lit_vector([sum(x * x for x in c) for c in book])
-            sub = F.slice(v, m * subdim + 1, subdim)
-            structs = F.transform(V.lit_matrix(book), _code_structs(sub, norms))
-            cols.append(F.array_min(structs)["c"].alias(f"c{m}"))
-        return cols
-
-    code_cols = _memo_const_cols("ivfpq_codes", codebooks, _build_code_cols)
-    corpus = emb.select(
-        F.col("vec_id").alias("n_id"),
-        F.array_min(cl)["c"].alias("cell"),
-        *code_cols,
-    )
-    probes = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            v.alias("qv"),
-            F.explode(F.slice(F.array_sort(cl), 1, probe)).alias("p"),
-        )
-        .select("q_id", "qv", F.col("p.c").alias("cell"))
-    )
-    def _lut_entry(qsub, norms):
-        def fn(c, j):
-            return F.element_at(norms, j + 1) - 2.0 * V.dot_expr(qsub, c)
-
-        return fn
-
-    def _build_adc_terms():
-        acc = None
-        for m, book in enumerate(codebooks):
-            norms = V.lit_vector([sum(x * x for x in c) for c in book])
-            qsub = F.slice(F.col("qv"), m * subdim + 1, subdim)
-            lut = F.transform(V.lit_matrix(book), _lut_entry(qsub, norms))
-            term = F.element_at(lut, F.col(f"c{m}") + 1) + V.sq_norm_expr(qsub)
-            acc = term if acc is None else acc + term
-        return acc
-
-    terms = _memo_const_cols("ivfpq_adc", codebooks, _build_adc_terms)
-    adc = (
+    the k-means production path (`pq_codebooks_kmeans`)."""
+    emb = emb.select("vec_id", "embedding")
+    corpus = pq_index(emb, centroids, codebooks)
+    probes = ivf_cells(
+        emb.filter(F.col("vec_id") < n_queries), centroids, probe
+    ).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"), "cell")
+    cands = (
         F.broadcast(probes)
         .join(corpus, "cell")
         .filter(F.col("n_id") != F.col("q_id"))
-        .select("q_id", "qv", "n_id", pround(terms, 6).alias("adc6"))
     )
+    return adc_rerank(cands, emb, codebooks, rerank, topk)
+
+
+def adc_rerank(
+    cands: DataFrame,
+    emb: DataFrame,
+    codebooks: list[list[list[float]]],
+    rerank: int = IVFPQ_RERANK,
+    topk: int = IVFPQ_TOPK,
+) -> DataFrame:
+    """The IVF-PQ tail over candidate rows (q_id, qv, n_id, c0..):
+    ADC-score each candidate (`V.adc`: the query's per-subspace
+    distance to the codeword its code names), keep a shortlist of
+    `rerank` per query by (adc6, n_id), and exact-cosine re-rank only
+    the shortlist against the `emb` store into the top `topk`."""
+    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
+    code_cols = tuple(f"c{m}" for m in range(len(books)))
+    adc = V.map_vectors(
+        cands.select("q_id", "qv", "n_id", *code_cols),
+        "qv",
+        lambda x, *cs: V.adc(x, books, np.stack(cs, axis=1)),
+        "adc double",
+        args=code_cols,
+        keep=["q_id", "qv", "n_id"],
+    ).select("q_id", "qv", "n_id", pround(F.col("adc"), 6).alias("adc6"))
     ws = W.partitionBy("q_id").orderBy(F.col("adc6"), F.col("n_id"))
     short = (
         adc.withColumn("srnk", F.row_number().over(ws))
@@ -1092,7 +958,8 @@ def similarity_ann_imi(spark: SparkSession, sf_dir: str) -> DataFrame:
     where flat IVF's grows as n/target.
 
     Scale shape: both assignment passes are the shared IMI
-    mapInPandas gemms (narrow, two half-dots per bank row); the only
+    mapInArrow kernel (`V.imi_nearest`: narrow, two half-dim BLAS
+    products per Arrow batch); the only
     exchange is the probe⋈corpus equi-join on cell id plus the
     per-query top-k window (probe rows per query are distinct cells
     and corpus rows live in one cell, so pairs are unique — no
@@ -1100,25 +967,17 @@ def similarity_ann_imi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from kafka_parquet_writer_spark.operators.dedup import (
         ANN_IMI_SIDE,
-        _make_imi_assigner,
+        _assign_imi_cells,
         _unit_vectors,
     )
 
     emb = _unit_vectors(spark, sf_dir)
-    corpus = emb.mapInPandas(
-        _make_imi_assigner(ANN_IMI_SIDE, ANN_IMI_SIDE, probe=1),
-        "vec_id long, u array<double>, cell long",
-    ).select(
+    corpus = _assign_imi_cells(emb, ANN_IMI_SIDE, ANN_IMI_SIDE, probe=1).select(
         F.col("vec_id").alias("n_id"), F.col("u").alias("cv"), "cell"
     )
-    probes = (
-        emb.filter(F.col("vec_id") < IMI_Q_NQ)
-        .mapInPandas(
-            _make_imi_assigner(ANN_IMI_SIDE, ANN_IMI_SIDE),
-            "vec_id long, u array<double>, cell long",
-        )
-        .select(F.col("vec_id").alias("q_id"), F.col("u").alias("qv"), "cell")
-    )
+    probes = _assign_imi_cells(
+        emb.filter(F.col("vec_id") < IMI_Q_NQ), ANN_IMI_SIDE, ANN_IMI_SIDE
+    ).select(F.col("vec_id").alias("q_id"), F.col("u").alias("qv"), "cell")
     cos = pround(V.dot_expr(F.col("qv"), F.col("cv")), 6)
     scored = (
         F.broadcast(probes)
@@ -1141,7 +1000,7 @@ def similarity_ann_imi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mkdtemp parquet dir. This section closes the asymmetry: the PQ-coded
 # corpus becomes a CELL-BUCKETED catalog table (sources/bucketed.py),
 # value-oracled at build, with an incremental-maintenance key proving
-# delta ≡ batch. Assignment and coding are PER-ROW expressions (nearest
+# delta ≡ batch. Assignment and coding are PER-ROW functions (nearest
 # centroid + per-subspace argmin — no corpus-global statistic anywhere),
 # so the delta path is embarrassingly incremental: code the new vectors,
 # append. That is the structural contrast with the text side, where df
@@ -1160,41 +1019,26 @@ ANN_CDC_RESIDUE = 0
 ANN_INDEX_BUCKETS = IVF_CELLS
 
 
-def _pq_coded_select(df: DataFrame) -> DataFrame:
-    """embeddings rows -> (n_id, cell, c0..c{PQ_M-1}): IVF cell
-    assignment (nearest seeded centroid) + per-subspace PQ codes
-    (argmin of ‖c‖² − 2·v·c per codebook). Pure per-row expressions —
-    no shuffle, no UDF, no corpus-global term — shared by the build
-    key, the delta key, and the streaming route's index accessor."""
+def pq_index(
+    df: DataFrame,
+    centroids: list[list[float]] = IVF_CENTROIDS,
+    codebooks: list[list[list[float]]] = PQ_CODEBOOKS,
+) -> DataFrame:
+    """(vec_id, embedding) rows -> (n_id, cell, c0..c{M-1}): IVF cell
+    (`V.nearest`) + per-subspace PQ codes (`V.pq_codes`) in one narrow
+    mapInArrow — no shuffle, no corpus-global term. The index rows of
+    the build key, the delta key, the streaming maintainer and
+    ivf_pq_topk's corpus side."""
+    cents = np.asarray(centroids, dtype=np.float64)
+    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
 
-    def _build():
-        v = F.col("embedding")
-        subdim = EMBED_DIM // PQ_M
-        code_cols = []
-        for m, book in enumerate(PQ_CODEBOOKS):
-            sub = F.slice(v, m * subdim + 1, subdim)
-            structs = F.array(
-                *[
-                    F.struct(
-                        (
-                            F.lit(float(sum(x * x for x in c)))
-                            - 2.0 * V.dot_expr(sub, V.lit_vector(c))
-                        ).alias("s"),
-                        F.lit(k).alias("c"),
-                    )
-                    for k, c in enumerate(book)
-                ]
-            )
-            code_cols.append(
-                F.array_min(structs)["c"].cast("long").alias(f"c{m}")
-            )
-        return [
-            F.array_min(_ivf_cell_structs(v))["c"].cast("long").alias("cell"),
-            *code_cols,
-        ]
+    def code(x):
+        return (V.nearest(x, cents)[:, 0], *V.pq_codes(x, books).T)
 
-    coded = _memo_const_cols("annidx_codes", PQ_CODEBOOKS, _build)
-    return df.select(F.col("vec_id").alias("n_id"), *coded)
+    fields = ", ".join(["cell long"] + [f"c{m} long" for m in range(len(books))])
+    return V.map_vectors(
+        df, "embedding", code, fields, keep=["vec_id"]
+    ).withColumnRenamed("vec_id", "n_id")
 
 
 def _ann_index_oracle(where: str = "") -> str:
@@ -1243,25 +1087,15 @@ def ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE embeddings scan and zero exchanges — assignment
     and coding are per-row functions of the vector and the (fixed)
-    codebooks. Served by the Arrow/numpy mapper (one matmul per
-    codebook per batch): the r15-build expression-tree form was
-    zero-Python but paid ~2.5 s PER INVOCATION of py4j Column
-    construction + Catalyst analysis over its ~1.5k literal nodes —
-    data-INDEPENDENT driver cost (the same lesson stream_ann_route_pq
-    measured in r14, and _pq_code_mapper's own docstring records:
-    15 s of a 17 s streaming run was plan re-analysis). Numeric
-    equivalence mapper ≡ expressions ≡ DuckDB is pinned by
-    tests/test_round15_ops.py::test_stream_ann_index_delta_zero_state
-    _append_only, which compares the mapper's rows against this key's.
-    The cell-bucketed write pays its one shuffle at persist time so
-    the serving join bucket-prunes forever after; build cost is the
+    codebooks, computed by `pq_index` (one BLAS product per bank per
+    Arrow batch, banks in the kernel's closure). The form with the
+    banks as ~1.5k plan-literal nodes paid ~2.5 s PER INVOCATION of
+    py4j Column construction + Catalyst analysis, data-independent,
+    and re-paid it per micro-batch in the streaming maintainer. The
+    cell-bucketed write pays its one shuffle at persist time so the
+    serving join bucket-prunes forever after; build cost is the
     theoretical floor: read, code, write."""
-    fn, schema = _pq_code_mapper()
-    return (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .mapInPandas(fn, schema)
-    )
+    return pq_index(load_table(spark, sf_dir, "embeddings"))
 
 
 def _ann_table(spark: SparkSession, sf_dir: str, name: str) -> str:
@@ -1274,11 +1108,10 @@ def _ann_table(spark: SparkSession, sf_dir: str, name: str) -> str:
     file per probed cell at 100 TB."""
 
     def build() -> DataFrame:
-        fn, schema = _pq_code_mapper()
         emb = load_table(spark, sf_dir, "embeddings")
         if name == "ann_pq_base":
             emb = emb.filter(F.col("vec_id") % ANN_CDC_MOD != ANN_CDC_RESIDUE)
-        return emb.select("vec_id", "embedding").mapInPandas(fn, schema)
+        return pq_index(emb)
 
     return ensure_artifact(
         spark,
@@ -1320,65 +1153,11 @@ def ann_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one embeddings scan (the delta, vec_id % predicate
     at the scan — plan-gated) + one bucket-aligned read of the base
     table; zero joins, zero window passes; the union is exchange-free.
-    Coding runs through the Arrow/numpy mapper for the same reason as
-    ann_index_build: the expression-tree form re-paid ~2.5 s of py4j +
-    Catalyst literal-tree cost per invocation."""
-    fn, schema = _pq_code_mapper()
+    Coding is ann_index_build's `pq_index`."""
     base = spark.table(_ann_table(spark, sf_dir, "ann_pq_base"))
-    delta = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % ANN_CDC_MOD == ANN_CDC_RESIDUE)
-        .select("vec_id", "embedding")
-        .mapInPandas(fn, schema)
+    delta = pq_index(
+        load_table(spark, sf_dir, "embeddings").filter(
+            F.col("vec_id") % ANN_CDC_MOD == ANN_CDC_RESIDUE
+        )
     )
     return base.unionByName(delta)
-
-
-def _pq_code_mapper():
-    """Arrow-vectorized twin of _pq_coded_select for mapInPandas: one
-    numpy matmul per codebook per batch instead of ~1.5k literal
-    expression nodes. Exists for the STREAMING maintainer
-    (stream_ann_index_delta), where foreachBatch re-analyzes its plan
-    every micro-batch and the literal trees cost ~3.5 s of Catalyst
-    per batch — data-independent, so at fixture batch sizes it
-    dominated (measured 15 s for a 4-batch run whose execution is
-    ~2 s). The batch build key keeps the expression form (zero-python,
-    zero-exchange, analyzed once); both are oracled against the SAME
-    DuckDB SQL, which is the numeric-equivalence proof: argmin over
-    ‖c‖² − 2·v·c agrees between numpy's pairwise-summed dots and the
-    sequential folds on these fixtures (ulp-level sum-order
-    differences would need an exact inter-centroid tie to flip an
-    argmin; the seeded continuous data has none — the IMI keys have
-    relied on the same property since r6).
-
-    Returns (mapInPandas fn, schema string)."""
-    cents = np.asarray(IVF_CENTROIDS, dtype=np.float64)
-    cnorm = (cents * cents).sum(axis=1)
-    books = [np.asarray(b, dtype=np.float64) for b in PQ_CODEBOOKS]
-    bnorms = [(b * b).sum(axis=1) for b in books]
-    subdim = EMBED_DIM // PQ_M
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            out = {
-                "n_id": pdf["vec_id"].to_numpy(),
-                "cell": np.argmin(
-                    cnorm[None, :] - 2.0 * (V @ cents.T), axis=1
-                ).astype(np.int64),
-            }
-            for m, (b, bn) in enumerate(zip(books, bnorms)):
-                sub = V[:, m * subdim : (m + 1) * subdim]
-                out[f"c{m}"] = np.argmin(
-                    bn[None, :] - 2.0 * (sub @ b.T), axis=1
-                ).astype(np.int64)
-            yield pd.DataFrame(out)
-
-    schema = "n_id long, cell long, " + ", ".join(
-        f"c{m} long" for m in range(PQ_M)
-    )
-    return fn, schema

@@ -2211,48 +2211,6 @@ def _ann_queries_stream(
     )[0]
 
 
-def _ivf_cell_udfs(probe: int):
-    """(nearest_cell, probe_cells) pandas UDFs for IVF assignment with
-    the centroids held in the CLOSURE, not the plan: micro-batch
-    execution re-analyzes the full streaming plan every trigger, and
-    the r13 expression-tree form carried ~500 centroid literals that
-    cost Catalyst time per batch, data-independent (the trap r14
-    measured at 2.5 s/batch on the PQ codebooks). Argmin equivalence
-    numpy ≡ expression trees ≡ DuckDB is the property the IMI/PQ keys
-    have relied on since r6; each route's incremental-≡-batch oracle
-    re-proves it end to end."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    from kafka_parquet_writer_spark.operators.similarity import (
-        IVF_CENTROIDS,
-    )
-
-    cents = np.asarray(IVF_CENTROIDS, dtype=np.float64)
-    cnorm = (cents * cents).sum(axis=1)
-
-    @pandas_udf("long")
-    def nearest_cell(s):
-        import pandas as pd
-
-        M = np.stack(s.to_numpy()).astype(np.float64)
-        return pd.Series(
-            np.argmin(cnorm[None, :] - 2.0 * (M @ cents.T), axis=1)
-        ).astype("int64")
-
-    @pandas_udf("array<long>")
-    def probe_cells(s):
-        import pandas as pd
-
-        M = np.stack(s.to_numpy()).astype(np.float64)
-        sc = cnorm[None, :] - 2.0 * (M @ cents.T)
-        # (score, cell) ascending — the array_sort(struct) order
-        idx = np.argsort(sc, axis=1, kind="stable")[:, :probe]
-        return pd.Series(list(idx.astype(np.int64)))
-
-    return nearest_cell, probe_cells
-
-
 @query("stream_ann_route", oracle=_stream_ann_oracle())
 def stream_ann_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN serving moved to REQUEST time — the stream-static
@@ -2260,9 +2218,9 @@ def stream_ann_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stream_static_enrich: dimension lookup; stream_query_router:
     inverted-index routing; this: vector search): query embeddings
     arrive in vec_id-ranged micro-batches, each row is assigned its
-    IVF_PROBE nearest cells by the same per-row centroid expressions
-    the batch key uses (similarity.py:_ivf_cell_structs — stateless,
-    no Python), and the probe rows join the STATIC cell-assigned
+    IVF_PROBE nearest cells by the batch key's own assignment
+    (similarity.ivf_cells — stateless, one mapInArrow), and the probe
+    rows join the STATIC cell-assigned
     corpus per micro-batch with the exact-cosine re-rank computed
     in-stream. Zero streaming state: assignment is a per-row map and
     the stream-static inner join is stateless, so append mode needs
@@ -2279,47 +2237,37 @@ def stream_ann_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     it would be the materialized cell-bucketed index; here it is the
     same assignment the batch key gates) and the per-batch join
     is broadcast at fixture scale; nothing in the serving path
-    shuffles the corpus.
-
-    Cell assignment on BOTH sides runs as a vectorized pandas UDF
-    (one numpy matmul per Arrow batch) rather than the r13
-    centroid-literal expression trees: micro-batch execution
-    re-analyzes the FULL plan — static side included — every
-    trigger, so ~500 literal nodes cost Catalyst time per batch,
-    data-independent (the same trap r14 measured and fixed in
-    stream_ann_route_pq at 2.5 s/batch; the literals now live in
-    the UDF closure, invisible to the analyzer). Argmin equivalence
-    numpy ≡ expressions ≡ DuckDB is the property the IMI/PQ keys
-    have relied on since r6, and the incremental-≡-batch gate
-    compares this key's rows against similarity_ivf's.
+    shuffles the corpus. The centroids live in the kernel's closure,
+    not the plan: micro-batch execution re-analyzes the FULL plan —
+    static side included — every trigger, and the earlier
+    centroid-literal expression trees (~500 nodes) cost Catalyst time
+    per batch, data-independent.
     """
     from pyspark.sql.window import Window
 
     from kafka_parquet_writer_spark.functions import vector as V
     from kafka_parquet_writer_spark.operators.similarity import (
+        IVF_CENTROIDS,
         IVF_PROBE,
         IVF_TOPK,
+        ivf_cells,
     )
 
-    nearest_cell, probe_cells = _ivf_cell_udfs(IVF_PROBE)
-
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # static side: the cell-assigned corpus — materialized ONCE.
     # Micro-batch execution re-plans and re-executes the static side
     # every trigger; without the localCheckpoint each of the
     # ANN_STREAM_BATCHES triggers re-scans the corpus and re-runs
     # cell assignment before rebuilding the broadcast.
-    corpus = emb.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("cv"),
-        nearest_cell(F.col("embedding")).alias("cell"),
-    ).localCheckpoint()
+    corpus = (
+        ivf_cells(emb, IVF_CENTROIDS)
+        .select(F.col("vec_id").alias("n_id"), F.col("embedding").alias("cv"), "cell")
+        .localCheckpoint()
+    )
 
     src = _ann_queries_stream(spark, sf_dir, emb)
-    probes = src.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qv"),
-        F.explode(probe_cells(F.col("embedding"))).alias("cell"),
+    probes = ivf_cells(src, IVF_CENTROIDS, IVF_PROBE).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"), "cell"
     )
     scored = (
         probes.join(F.broadcast(corpus), "cell")
@@ -2384,19 +2332,18 @@ def stream_ann_route_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_ann_route's raw-vector corpus — built once per session by
     a batch plan and joined per micro-batch as a plain 6-column
     parquet scan. The IN-STREAM stage is deliberately minimal: assign
-    each query its probe cells (per-row centroid expressions, the raw
-    route's own) and equi-join the index on cell — zero streaming
-    state (receipted from the finished query in LAST_ANN_PQ_TRACE,
-    plan-gated), and NO codebook literals in the streaming plan
+    each query its probe cells (similarity.ivf_cells, the raw route's
+    own) and equi-join the index on cell — zero streaming state
+    (receipted from the finished query in LAST_ANN_PQ_TRACE,
+    plan-gated), and no centroid or codebook literal in any plan
     (Structured Streaming re-plans per micro-batch; the first cut
     carried the 4x16-codeword trees in-stream and paid ~2.5 s of
     Catalyst analysis per batch — 14.7 s vs the raw route's 4.4 at
-    sf0.1, data-independent). The sunk rows carry (qv, candidate
-    codes); ADC — the per-subspace lookup tables indexed by the
-    candidate's code, the batch key's own expression trees — runs
-    batch-side over them ONCE, followed by the shortlist of
-    {IVFPQ_RERANK} and the exact-cosine re-rank of only that
-    shortlist, exact per query because each query lives in one
+    sf0.1, data-independent). The sunk rows carry (q_id, n_id,
+    candidate codes); the batch key's own tail (similarity.adc_rerank:
+    ADC over the codes, the shortlist of {IVFPQ_RERANK} and the
+    exact-cosine re-rank of only that shortlist) runs batch-side over
+    them ONCE, exact per query because each query lives in one
     micro-batch. The oracle is similarity_ivf_pq's own SQL
     (incremental = batch), so assignment, coding, ADC, and re-rank
     are all value-hash-verified through the stream.
@@ -2406,34 +2353,25 @@ def stream_ann_route_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (queries x {IVFPQ_RERANK})-row broadcast re-rank join; the
     corpus-sized coding work happened once, at index-build time —
     rag_topk_from_index's pattern on the vector side."""
-    from pyspark.sql.window import Window
-
-    from kafka_parquet_writer_spark.functions import vector as V
     from kafka_parquet_writer_spark.operators.similarity import (
-        EMBED_DIM,
+        IVF_CENTROIDS,
         IVFPQ_N_QUERIES,
         IVFPQ_PROBE,
-        IVFPQ_RERANK,
-        IVFPQ_TOPK,
         PQ_CODEBOOKS,
+        _ann_table,
+        adc_rerank,
+        ivf_cells,
     )
 
-    from kafka_parquet_writer_spark.operators.similarity import _ann_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     corpus = spark.table(_ann_table(spark, sf_dir, "ann_pq"))
 
     # stream side: vec_id-ranged query micro-batches (the staged split
     # covers vec_id < IVF_N_QUERIES == IVFPQ_N_QUERIES)
     src = _ann_queries_stream(spark, sf_dir, emb)
-    # probe assignment via the closure-held-centroid pandas UDF — the
-    # raw route's r15 form: the r13 expression trees re-paid ~500
-    # centroid literals of Catalyst analysis per micro-batch
-    _, probe_cells = _ivf_cell_udfs(IVFPQ_PROBE)
-    probes = src.filter(F.col("vec_id") < IVFPQ_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.explode(probe_cells(F.col("embedding"))).alias("cell"),
-    )
+    probes = ivf_cells(
+        src.filter(F.col("vec_id") < IVFPQ_N_QUERIES), IVF_CENTROIDS, IVFPQ_PROBE
+    ).select(F.col("vec_id").alias("q_id"), "cell")
     # sunk rows carry (q_id, n_id, codes) ONLY — not qv. The memory
     # sink collects every candidate row to the driver, and duplicating
     # the query embedding onto each of its ~probe × cell-size
@@ -2458,65 +2396,7 @@ def stream_ann_route_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < IVFPQ_N_QUERIES)
         .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"))
     )
-    table = table.join(F.broadcast(qemb), "q_id")
-
-    # batch side over the sunk candidate rows: per-row ADC (query-side
-    # LUT per subspace, indexed by the candidate's code — identical
-    # expression trees to ivf_pq_topk, analyzed ONCE here instead of
-    # per micro-batch; the py4j tree construction itself is memoized
-    # per SparkContext like the batch keys')
-    from kafka_parquet_writer_spark.operators.similarity import (
-        _memo_const_cols,
-    )
-
-    subdim = EMBED_DIM // len(PQ_CODEBOOKS)
-
-    def _lut_entry(qsub, norms):
-        def fn(c, j):
-            return F.element_at(norms, j + 1) - 2.0 * V.dot_expr(qsub, c)
-
-        return fn
-
-    def _build_adc_terms():
-        acc = None
-        for m, book in enumerate(PQ_CODEBOOKS):
-            norms = V.lit_vector([sum(x * x for x in c) for c in book])
-            qsub = F.slice(F.col("qv"), m * subdim + 1, subdim)
-            lut = F.transform(V.lit_matrix(book), _lut_entry(qsub, norms))
-            # codes are stored long in the index table; element_at
-            # wants INT
-            term = F.element_at(
-                lut, (F.col(f"c{m}") + 1).cast("int")
-            ) + V.sq_norm_expr(qsub)
-            acc = term if acc is None else acc + term
-        return acc
-
-    terms = _memo_const_cols("stream_pq_adc", PQ_CODEBOOKS, _build_adc_terms)
-    adc = table.select("q_id", "qv", "n_id", pround(terms, 6).alias("adc6"))
-    ws = Window.partitionBy("q_id").orderBy(F.col("adc6"), F.col("n_id"))
-    short = (
-        adc.withColumn("srnk", F.row_number().over(ws))
-        .filter(F.col("srnk") <= IVFPQ_RERANK)
-        .drop("srnk")
-    )
-    store = emb.select(
-        F.col("vec_id").alias("n_id"), F.col("embedding").alias("cv")
-    )
-    rer = (
-        F.broadcast(short)
-        .join(store, "n_id")
-        .select(
-            "q_id",
-            "n_id",
-            pround(V.cosine_expr(F.col("qv"), F.col("cv")), 6).alias("cos"),
-        )
-    )
-    wk = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        rer.withColumn("rnk", F.row_number().over(wk).cast("int"))
-        .filter(F.col("rnk") <= IVFPQ_TOPK)
-        .select("q_id", "n_id", "cos", "rnk")
-    )
+    return adc_rerank(table.join(F.broadcast(qemb), "q_id"), emb, PQ_CODEBOOKS)
 
 
 from kafka_parquet_writer_spark.operators.rag_prep import (  # noqa: E402
@@ -2691,10 +2571,10 @@ def stream_ann_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VECTOR-index maintenance through a REAL stream — the
     stream_index_delta pattern on the embarrassingly-incremental side:
     embeddings arrive as vec_id-ranged micro-batches and foreachBatch
-    codes EACH BATCH with the Arrow-vectorized IVF+PQ coder
-    (similarity's _pq_code_mapper — one numpy matmul per codebook per
-    Arrow batch) and appends the coded rows to the at-rest index as
-    new files. That is
+    codes EACH BATCH with ann_index_build's own coder
+    (similarity.pq_index — one numpy matmul per bank per Arrow batch)
+    and appends the coded rows to the at-rest index as new files. That
+    is
     the WHOLE maintainer: no merge window, no affected-set anti-join,
     no state read at all — assignment and coding depend only on the
     row and the fixed codebooks, so batch outputs are disjoint and
@@ -2712,20 +2592,13 @@ def stream_ann_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     crashed maintainer resumes from the checkpoint and the already-
     appended files.
 
-    Plan-cost note (measured this round): foreachBatch re-analyzes
-    its batch plan per micro-batch, so the build key's ~1.5k-node
-    codebook literal trees cost ~3.5 s of Catalyst PER BATCH here —
-    data-independent, 15 s for a 4-batch run whose execution is ~2 s.
-    The maintainer therefore codes through _pq_code_mapper's
-    mapInPandas (a ~10-node plan analyzed instantly, numpy matmuls
-    inside — the r14 serving lesson applied to the build side), and
-    the DuckDB oracle over the final artifact is the proof that the
-    vectorized path reproduces the expression path's codes exactly."""
-    from kafka_parquet_writer_spark.operators.similarity import (
-        _pq_code_mapper,
-    )
+    Plan-cost note: foreachBatch re-analyzes its batch plan per
+    micro-batch. The coder keeps the banks in its closure, so that
+    plan is ~10 nodes; the earlier ~1.5k-node codebook literal trees
+    cost ~3.5 s of Catalyst PER BATCH here — data-independent, 15 s
+    for a 4-batch run whose execution is ~2 s."""
+    from kafka_parquet_writer_spark.operators.similarity import pq_index
 
-    code_fn, code_schema = _pq_code_mapper()
     stream, _, _ = _ranged_stream(
         spark,
         sf_dir,
@@ -2739,9 +2612,7 @@ def stream_ann_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def apply_batch(bdf: DataFrame, bid: int) -> None:
         out = os.path.join(state_base, f"idx_b{bid}")
-        bdf.mapInPandas(code_fn, code_schema).write.mode(
-            "overwrite"
-        ).parquet(out)
+        pq_index(bdf).write.mode("overwrite").parquet(out)
         holder["dirs"].append(out)
 
     q = _run_stream(stream, apply_batch)

@@ -42,7 +42,7 @@ def test_every_key_has_a_green_receipt_on_the_current_code():
 
 
 def test_editing_a_shared_helper_stales_exactly_its_dependents(monkeypatch):
-    """Edit dedup._make_imi_assigner's source text in memory: exactly the
+    """Edit dedup._assign_imi_cells's source text in memory: exactly the
     keys whose closure holds that interval go stale (the two IMI keys
     among them, one through a function-local import), and no other.
     Lines inserted above every interval only renumber them: nothing goes
@@ -61,7 +61,7 @@ def test_editing_a_shared_helper_stales_exactly_its_dependents(monkeypatch):
 
     idx = EA._module_index("kafka_parquet_writer_spark.operators.dedup")
     rel = os.path.relpath(idx.path, EA.REPO)
-    start, end = EA._func_span(idx.defs["_make_imi_assigner"])
+    start, end = EA._func_span(idx.defs["_assign_imi_cells"])
     dependents = {
         k
         for k, fn in QUERIES.items()
@@ -121,7 +121,8 @@ def test_receipt_merge_records_passes_drops_failures_keeps_the_rest(tmp_path):
 
 def test_audit_closure_reaches_shared_helpers_and_local_imports():
     """Regression pins for the exact miss classes the tool exists for:
-    module-level helper factories (r7's _make_imi_assigner rewrite) and
+    module-level helpers (the IMI assigner, once rewritten under two
+    keys whose bodies were untouched) and
     function-LOCAL imports (similarity_ann_imi imports the assigner
     inside its body)."""
     import evidence_audit as EA
@@ -136,10 +137,10 @@ def test_audit_closure_reaches_shared_helpers_and_local_imports():
         return set(EA.closure_of(QUERIES[key]))
 
     dedup = "kafka_parquet_writer_spark/operators/dedup.py"
-    # same-module helper chain: ann -> _make_assigner/_raw_verify
+    # same-module helper chain: ann -> _assign_cells/_raw_verify
     assert dedup in files_of("dedup_embedding_ann")
     # cross-module function-local import: similarity_ann_imi's body
-    # imports _make_imi_assigner from dedup
+    # imports _assign_imi_cells from dedup
     assert dedup in files_of("similarity_ann_imi")
     # class dependency: table keys must reach TxTable in tablefmt.py
     assert "kafka_parquet_writer_spark/tablefmt.py" in files_of(

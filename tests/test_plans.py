@@ -79,7 +79,7 @@ def test_embedding_dedup_never_broadcasts_corpus(spark, sf_dir):
     plan = formatted_plan(E.queries()["dedup_embedding"](spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-    # ANN (r5 Arrow form): assignment is a mapInPandas closure and the
+    # ANN (r5 Arrow form): assignment is a mapInArrow closure and the
     # verify an applyInPandas per cell — no joins should remain at all
     plan = formatted_plan(E.queries()["dedup_embedding_ann"](spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan

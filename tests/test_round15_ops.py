@@ -225,36 +225,3 @@ def test_stream_ann_index_delta_zero_state_append_only(spark):
         for r in E.queries()["ann_index_build"](spark, SF).collect()
     }
     assert rows == batch and len(batch) > 0
-
-
-# --------------------------------------- constant Column-tree memo
-
-
-def test_const_col_memo_reuses_and_rebuilds(spark):
-    """The IVF/PQ constant Column trees (cell structs, PQ code
-    columns, ADC terms) are memoized per SparkContext: the same
-    (tag, const identity) returns the SAME objects with no py4j
-    re-construction; a different const identity misses and rebuilds.
-    Result identity of every consumer key is pinned by its oracle
-    gate — this test pins only the memo mechanics."""
-    from pyspark.sql import functions as F
-
-    from kafka_parquet_writer_spark.operators import similarity as S
-
-    tag = "t_memo_mechanics"
-    c1 = S._memo_const_cols(
-        tag, S.IVF_CENTROIDS, lambda: S._ivf_cell_structs(F.col("embedding"))
-    )
-
-    def _must_not_rebuild():
-        raise AssertionError("memoized builder re-invoked")
-
-    c2 = S._memo_const_cols(tag, S.IVF_CENTROIDS, _must_not_rebuild)
-    assert c1 is c2
-    other = [[0.0]]
-    c3 = S._memo_const_cols(tag, other, lambda: "fresh")
-    assert c3 == "fresh"
-    # entries hold a strong reference to their const so id() keying
-    # cannot alias a recycled object
-    key = next(k for k in S._CONST_COL_MEMO if k[0] == tag and k[2] == id(other))
-    assert S._CONST_COL_MEMO[key][0] is other

@@ -120,15 +120,15 @@ def test_ivf_pq_trained_books_beat_seeded(spark):
     from kafka_parquet_writer_spark.catalog import load_table
     from kafka_parquet_writer_spark.operators.similarity import (
         IVF_CENTROIDS,
+        IVF_SEED,
         PQ_CODEBOOKS,
         ivf_pq_topk,
-        kmeans_centroids,
         pq_codebooks_kmeans,
     )
     from tests.conftest import SF_ORACLE as sf
 
     emb = load_table(spark, sf, "embeddings")
-    cents = kmeans_centroids(emb, 8)
+    cents = pq_codebooks_kmeans(emb, n_books=1, n_codes=8, seed=IVF_SEED)[0]
     books = pq_codebooks_kmeans(emb)
     trained = {
         (r["q_id"], r["n_id"])

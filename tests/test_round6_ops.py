@@ -19,33 +19,32 @@ def _unit_fixture_vectors(sf_dir, limit=200):
     return t["vec_id"].to_numpy()[:limit], u[:limit]
 
 
-def test_imi_shortcut_equals_full_product_enumeration():
+def test_imi_shortcut_equals_full_product_enumeration(spark):
     """The top-probe × top-probe combination shortcut must pick the
     SAME probe cells as brute-force enumeration of all m1·m2 product
     cells ordered by (combined score, cell id) — on every fixture
-    vector. This is the exactness claim in _make_imi_assigner's
-    docstring, checked against the definitionally-correct form."""
+    vector. This is the exactness claim in V.imi_nearest's docstring,
+    checked through the IMI keys' assigner against the
+    definitionally-correct form."""
     from kafka_parquet_writer_spark.operators.dedup import (
         ANN_DEDUP_PROBE,
         ANN_IMI_SIDE,
+        _assign_imi_cells,
         _imi_banks,
-        _make_imi_assigner,
     )
 
     vec_ids, u = _unit_fixture_vectors(SF_ORACLE)
     c1l, c2l = _imi_banks(ANN_IMI_SIDE, ANN_IMI_SIDE)
     c1, c2 = np.asarray(c1l), np.asarray(c2l)
 
-    # production closure
-    pdf = pd.DataFrame({"vec_id": vec_ids, "u": list(u)})
-    out = pd.concat(
-        list(_make_imi_assigner(ANN_IMI_SIDE, ANN_IMI_SIDE)([pdf])),
-        ignore_index=True,
-    )
-    got = {
-        vid: list(g["cell"])
-        for vid, g in out.groupby("vec_id", sort=False)
-    }
+    # production assigner, one Arrow batch so row order is kept
+    df = spark.createDataFrame(
+        [(int(v), [float(x) for x in r]) for v, r in zip(vec_ids, u)],
+        "vec_id long, u array<double>",
+    ).coalesce(1)
+    got: dict = {}
+    for r in _assign_imi_cells(df, ANN_IMI_SIDE, ANN_IMI_SIDE).collect():
+        got.setdefault(r["vec_id"], []).append(r["cell"])
 
     # brute force: all m1*m2 cells, sorted by (s1+s2, cell)
     s1 = -(u[:, :32] @ c1.T)
@@ -299,7 +298,7 @@ def test_quantile_sketch_single_shuffle_plan(spark, sf_dir):
 
 def test_imi_single_shuffle_plan(spark, sf_dir):
     """The IMI key keeps the flat path's shape: assignment is a
-    narrow mapInPandas over the scan; the only exchanges are the
+    narrow mapInArrow over the scan; the only exchanges are the
     per-cell verify grouping and the final distinct."""
     from kafka_parquet_writer_spark.plans import (
         count_exchanges,
@@ -310,7 +309,7 @@ def test_imi_single_shuffle_plan(spark, sf_dir):
     df = E.queries()["dedup_embedding_ann_imi"](spark, sf_dir)
     plan = formatted_plan(df)
     assert count_exchanges(df) <= 2
-    assert "MapInPandas" in plan and "FlatMapGroupsInPandas" in plan
+    assert "MapInArrow" in plan and "FlatMapGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

@@ -49,10 +49,7 @@ def test_trainer_splits_hot_cells(spark):
     emb = _clustered_frame(spark)
 
     def pops(bank):
-        probes = emb.mapInPandas(
-            D._make_assigner(bank, probe=1),
-            "vec_id long, u array<double>, cell int",
-        )
+        probes = D._assign_cells(emb, bank, probe=1)
         return {
             r["cell"]: r["count"]
             for r in probes.groupBy("cell").count().collect()
@@ -178,7 +175,7 @@ def test_verifier_threshold_is_closure_carried():
     assert len(D._make_verifier(0.75)(pdf)) == 1
     assert len(D._make_verifier(0.95)(pdf)) == 0
     # default must equal the module constant's behavior
-    assert len(D._verify_cell_blas(pdf)) == (
+    assert len(D._make_verifier()(pdf)) == (
         1 if 0.8 >= D.COSINE_DUP_THRESHOLD else 0
     )
 

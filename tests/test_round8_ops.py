@@ -79,7 +79,7 @@ def test_trainer_reduce_is_arrival_order_invariant():
         assert np.array_equal(base, got)
 
 
-def test_zero_norm_embedding_raises_loudly():
+def test_zero_norm_embedding_raises_loudly(spark):
     """r7 ADVICE: the raw-input normalize paths must fail loudly on a
     zero-norm vector, not emit NaN rows whose argsort/argmax semantics
     silently diverge from the Catalyst route (DuckDB sorts NaN greatest,
@@ -97,11 +97,15 @@ def test_zero_norm_embedding_raises_loudly():
     verify = D._make_verifier(normalize=True)
     with pytest.raises(ValueError, match="zero/NaN-norm"):
         verify(pdf)
-    assign = D._make_assigner(
-        D.DEDUP_CENTROIDS[:16], normalize=True, raw_u=True
+    raw = spark.createDataFrame(
+        [(1, [0.0] * 64), (2, [1.0] * 64)], "vec_id long, u array<float>"
     )
-    with pytest.raises(ValueError, match="zero/NaN-norm"):
-        list(assign([pdf]))
+    for probes in (
+        D._assign_cells(raw, D.DEDUP_CENTROIDS[:16], normalize=True),
+        D._assign_imi_cells(raw, 4, 4, normalize=True),
+    ):
+        with pytest.raises(Exception, match="zero/NaN-norm"):
+            probes.collect()
 
 
 def test_bench_scale_carry_forward_preserves_lane_receipts(tmp_path):

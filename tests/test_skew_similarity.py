@@ -80,29 +80,38 @@ def test_salted_join_rejects_right_and_full(spark):
 
 def test_ivf_corpus_cell_assignment_unique_and_valid(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    cells = emb.select(
-        "vec_id",
-        F.array_min(S._ivf_cell_structs(F.col("embedding")))["c"].alias("cell"),
-    )
-    rows = cells.collect()
+    rows = S.ivf_cells(emb, S.IVF_CENTROIDS).collect()
     assert len(rows) == emb.count()  # exactly one cell per vector
     assert all(0 <= r["cell"] < S.IVF_CELLS for r in rows)
 
 
 def test_ivf_probes_are_nearest_cells(spark):
-    emb = load_table(spark, SF_SMOKE, "embeddings").limit(5)
-    probed = emb.select(
-        "vec_id",
-        F.slice(
-            F.array_sort(S._ivf_cell_structs(F.col("embedding"))), 1, S.IVF_PROBE
-        ).alias("p"),
-    ).collect()
-    for r in probed:
-        assert len(r["p"]) == S.IVF_PROBE
-        scores = [e["s"] for e in r["p"]]
-        assert scores == sorted(scores)
+    """Each probe row set is the IVF_PROBE lowest-l2 centroids in
+    (score, cell) order, and the first probe is the corpus cell."""
+    import numpy as np
+
+    emb = (
+        load_table(spark, SF_SMOKE, "embeddings")
+        .filter(F.col("vec_id") < 5)
+        .coalesce(1)
+    )
+    probed: dict = {}
+    vecs = {}
+    for r in S.ivf_cells(emb, S.IVF_CENTROIDS, S.IVF_PROBE).collect():
+        probed.setdefault(r["vec_id"], []).append(r["cell"])
+        vecs[r["vec_id"]] = np.asarray(r["embedding"], dtype=np.float64)
+    corpus = {
+        r["vec_id"]: r["cell"]
+        for r in S.ivf_cells(emb, S.IVF_CENTROIDS).collect()
+    }
+    cents = np.asarray(S.IVF_CENTROIDS)
+    assert len(probed) == 5
+    for vid, cells in probed.items():
+        assert len(cells) == S.IVF_PROBE
+        d2 = ((cents - vecs[vid]) ** 2).sum(axis=1)
+        assert cells == sorted(range(S.IVF_CELLS), key=lambda j: d2[j])[: S.IVF_PROBE]
         # first probe is the corpus assignment cell
-        assert r["p"][0]["c"] is not None
+        assert cells[0] == corpus[vid]
 
 
 def test_ivf_results_subset_of_brute_force(spark):
@@ -130,7 +139,7 @@ def test_ivf_kmeans_production_path(spark):
     resulting top-k is structurally valid (≤ k per query, no self-pairs,
     deterministic across runs with a fixed seed)."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    cents = S.kmeans_centroids(emb, n_cells=4, seed=7)
+    cents = S.pq_codebooks_kmeans(emb, n_books=1, n_codes=4, seed=7)[0]
     assert len(cents) == 4
     assert all(len(c) == S.EMBED_DIM for c in cents)
 
@@ -144,5 +153,5 @@ def test_ivf_kmeans_production_path(spark):
         assert len(neigh) <= 3
 
     # determinism: same seed → same centroids → same result set
-    cents2 = S.kmeans_centroids(emb, n_cells=4, seed=7)
+    cents2 = S.pq_codebooks_kmeans(emb, n_books=1, n_codes=4, seed=7)[0]
     assert cents == cents2

@@ -2,8 +2,8 @@
 
 A green oracle check is evidence only about the code that produced it,
 and an operator's behavior depends on more than its decorated body:
-shared helpers, module constants and composed sub-keys all count (the
-``_make_imi_assigner`` rewrite once changed two keys whose bodies were
+shared helpers, module constants and composed sub-keys all count (a
+rewrite of the IMI assigner once changed two keys whose bodies were
 untouched). So the evidence is keyed by the *content* of the key's
 whole call closure.
 
@@ -225,7 +225,7 @@ def closure_of(fn, _stack: frozenset = frozenset()) -> dict[str, set[tuple[int, 
 
     def visit_node(idx: _ModuleIndex, node: ast.AST) -> None:
         names, attrs, qkeys = _referenced(node)
-        # function-LOCAL imports (``from ..dedup import _make_imi_assigner``
+        # function-LOCAL imports (``from ..dedup import _assign_imi_cells``
         # inside the body — the similarity_ann_imi pattern that a
         # module-level-only index missed on the first run of this tool)
         local_objs: dict[str, tuple[str, str]] = {}
