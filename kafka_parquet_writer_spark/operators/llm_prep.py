@@ -86,20 +86,35 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/texthash.py word_shingles_expr — slice+zip_with, no
     explode until after the distinct).
     """
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", TH.word_shingles_expr("text", 3).alias("sh")
-    )
-    bench_sh = (
+    docs = load_table(spark, sf_dir, "documents")
+    return decon_flag(decon_matches(docs, bench_shingles(docs)))
+
+
+def bench_shingles(docs: DataFrame) -> DataFrame:
+    """The benchmark side: the distinct word 3-grams of the held-out
+    documents (doc_id % DECON_BENCH_MOD == 0)."""
+    return (
         docs.filter(F.col("doc_id") % DECON_BENCH_MOD == 0)
-        .select(F.explode("sh").alias("shingle"))
+        .select(F.explode(TH.word_shingles_expr("text", 3)).alias("shingle"))
         .distinct()
     )
+
+
+def decon_matches(docs: DataFrame, bench: DataFrame) -> DataFrame:
+    """One (doc_id) row per training-document shingle found in the
+    broadcast ``bench`` set: a per-row map and a map-side join, so it
+    runs unchanged over a stream of documents."""
     corpus = docs.filter(F.col("doc_id") % DECON_BENCH_MOD != 0).select(
-        "doc_id", F.explode("sh").alias("shingle")
+        "doc_id", F.explode(TH.word_shingles_expr("text", 3)).alias("shingle")
     )
+    return corpus.join(F.broadcast(bench), "shingle").select("doc_id")
+
+
+def decon_flag(matches: DataFrame) -> DataFrame:
+    """(doc_id, n_shared) for the documents with at least
+    DECON_MIN_SHARED matched shingles."""
     return (
-        corpus.join(F.broadcast(bench_sh), "shingle")
-        .groupBy("doc_id")
+        matches.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= DECON_MIN_SHARED)
     )

@@ -302,11 +302,11 @@ def _query_router_oracle() -> str:
     """
 
 
-def _part_qt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fixture query workload (query_id, term): each part name's
-    distinct lower-cased tokens — queries that arrive from outside the
-    corpus, a router's position."""
-    return load_table(spark, sf_dir, "part").select(
+def _part_qt(part: DataFrame) -> DataFrame:
+    """The fixture query workload (query_id, term) over a ``part``
+    frame: each part name's distinct lower-cased tokens — queries that
+    arrive from outside the corpus, a router's position."""
+    return part.select(
         F.col("p_partkey").cast("long").alias("query_id"),
         F.explode(F.array_distinct(TH.words_expr("p_name"))).alias("term"),
     )
@@ -343,23 +343,39 @@ def rag_query_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     the QUERY workload, not the corpus. At 100 TB of documents the
     router's cost is unchanged: it scales with queries × terms.
     """
-    man = rag_shard_manifest(spark, sf_dir)
-    rt = _part_qt(spark, sf_dir).withColumn(
+    qt = _part_qt(load_table(spark, sf_dir, "part"))
+    return router_rollup(route_terms(qt, rag_shard_manifest(spark, sf_dir)))
+
+
+def route_terms(qt: DataFrame, manifest: DataFrame) -> DataFrame:
+    """(query_id, term) rows routed against the shard ``manifest``:
+    (query_id, shard_id, probed, budget) per term — a per-row hash and
+    a broadcast left join, so it runs unchanged over a query stream."""
+    rt = qt.withColumn(
         "shard_id",
         (TH.portable_tid(F.col("term")) % RAG_INDEX_SHARDS).cast("long"),
     )
-    j = rt.join(F.broadcast(man), "shard_id", "left")
+    j = rt.join(F.broadcast(manifest), "shard_id", "left")
     probed = (
         F.col("min_token").isNotNull()
         & (F.col("term") >= F.col("min_token"))
         & (F.col("term") <= F.col("max_token"))
     ).cast("int")
-    ps = j.groupBy("query_id", "shard_id").agg(
+    return j.select(
+        "query_id",
+        "shard_id",
+        probed.alias("probed"),
+        (probed * F.coalesce(F.col("max_df"), F.lit(0))).alias("budget"),
+    )
+
+
+def router_rollup(routed: DataFrame) -> DataFrame:
+    """route_terms rows → the per-query fan-out: terms, shards probed
+    and skipped, postings budget."""
+    ps = routed.groupBy("query_id", "shard_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_terms_in_shard"),
-        F.max(probed).cast("long").alias("any_probed"),
-        F.sum(probed * F.coalesce(F.col("max_df"), F.lit(0)))
-        .cast("long")
-        .alias("budget"),
+        F.max("probed").cast("long").alias("any_probed"),
+        F.sum("budget").cast("long").alias("budget"),
     )
     return ps.groupBy("query_id").agg(
         F.sum("n_terms_in_shard").cast("long").alias("n_terms"),
@@ -790,7 +806,9 @@ def _wand_plan(
     workload = "default" if qt is None else "injected"
     source = "corpus" if imp is None else "index"
     ckey = ("wand", sf_dir, scorer, workload, source)
-    qt = cache_frame(ckey, _part_qt(spark, sf_dir) if qt is None else qt)
+    if qt is None:
+        qt = _part_qt(load_table(spark, sf_dir, "part"))
+    qt = cache_frame(ckey, qt)
     if imp is None:
         # exact impacts over the query vocabulary, CACHED: imp feeds
         # four consumers (UB stats, θ seed, candidate semi-join, final
@@ -1100,7 +1118,9 @@ def retrieve(
     if workload == "derived":
         derived = _derived_multi_qt(spark, sf_dir)
     if pruning == "static":
-        qt = _part_qt(spark, sf_dir) if derived is None else derived
+        qt = derived
+        if derived is None:
+            qt = _part_qt(load_table(spark, sf_dir, "part"))
         if source == "index":
             il = spark.table(_index_table(spark, sf_dir, pre + "impact_l"))
         else:

@@ -226,23 +226,35 @@ def ivf_topk(
     """IVF assignment/probe/re-rank with caller-supplied centroids —
     the engine under `similarity_ivf` (seeded centroids, oracle-
     checked) and the k-means production path (`pq_codebooks_kmeans`
-    with one book)."""
+    with one book). The few probe rows are broadcast to the corpus."""
     emb = emb.select("vec_id", "embedding")
-    corpus = ivf_cells(emb, centroids).select(
+    probes = ivf_cells(emb.filter(F.col("vec_id") < n_queries), centroids, probe)
+    return ivf_rank(ivf_scored(F.broadcast(probes), ivf_cells(emb, centroids)), topk)
+
+
+def ivf_scored(probes: DataFrame, corpus: DataFrame) -> DataFrame:
+    """(q_id, n_id, cos) for every corpus vector in a probed cell.
+    ``probes`` and ``corpus`` are `ivf_cells` rows (vec_id, embedding,
+    cell); the caller broadcasts whichever side is small. Each corpus
+    vector lives in exactly one cell and a query's probe rows carry
+    distinct cells, so (q_id, n_id) pairs are unique."""
+    q = probes.select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"), "cell"
+    )
+    c = corpus.select(
         F.col("vec_id").alias("n_id"), F.col("embedding").alias("cv"), "cell"
     )
-    probes = ivf_cells(
-        emb.filter(F.col("vec_id") < n_queries), centroids, probe
-    ).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"), "cell")
     cos = pround(V.cosine_expr(F.col("qv"), F.col("cv")), 6)
-    # each corpus vector lives in exactly one cell and a query's probe
-    # rows carry distinct cells, so (q_id, n_id) pairs are unique
-    scored = (
-        F.broadcast(probes)
-        .join(corpus, "cell")
+    return (
+        q.join(c, "cell")
         .filter(F.col("n_id") != F.col("q_id"))
         .select("q_id", "n_id", cos.alias("cos"))
     )
+
+
+def ivf_rank(scored: DataFrame, topk: int = IVF_TOPK) -> DataFrame:
+    """The per-query top ``topk`` of `ivf_scored` rows by (cos desc,
+    n_id)."""
     w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
@@ -588,9 +600,7 @@ def similarity_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist against the vector store. Production swaps in k-means
     centroids/codebooks (`pq_codebooks_kmeans`) — same plan.
     """
-    emb = repartition_for_compute(
-        load_table(spark, sf_dir, "embeddings"), F.col("vec_id")
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
     return ivf_pq_topk(emb, IVF_CENTROIDS, PQ_CODEBOOKS)
 
 
@@ -651,18 +661,27 @@ def ivf_pq_topk(
 ) -> DataFrame:
     """The IVF-PQ engine with caller-supplied centroids/codebooks —
     shared by the declared seeded-constant key (oracle-checked) and
-    the k-means production path (`pq_codebooks_kmeans`)."""
+    the k-means production path (`pq_codebooks_kmeans`). The few probe
+    rows are broadcast to the coded corpus."""
     emb = emb.select("vec_id", "embedding")
-    corpus = pq_index(emb, centroids, codebooks)
-    probes = ivf_cells(
-        emb.filter(F.col("vec_id") < n_queries), centroids, probe
-    ).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"), "cell")
-    cands = (
-        F.broadcast(probes)
-        .join(corpus, "cell")
-        .filter(F.col("n_id") != F.col("q_id"))
-    )
+    probes = ivf_cells(emb.filter(F.col("vec_id") < n_queries), centroids, probe)
+    # only the corpus coding is CPU-heavy enough to spread explicitly
+    corpus = repartition_for_compute(emb, F.col("vec_id"))
+    cands = ivf_pq_cands(F.broadcast(probes), pq_index(corpus, centroids, codebooks))
     return adc_rerank(cands, emb, codebooks, rerank, topk)
+
+
+def ivf_pq_cands(probes: DataFrame, index: DataFrame) -> DataFrame:
+    """(q_id, n_id, c0..c{M-1}) for every indexed vector in a probed
+    cell: `ivf_cells` probe rows equi-joined on cell with `pq_index`
+    rows. Only ids and codes travel; the caller broadcasts whichever
+    side is small."""
+    q = probes.select(F.col("vec_id").alias("q_id"), "cell")
+    return (
+        q.join(index, "cell")
+        .filter(F.col("n_id") != F.col("q_id"))
+        .drop("cell")
+    )
 
 
 def adc_rerank(
@@ -672,21 +691,26 @@ def adc_rerank(
     rerank: int = IVFPQ_RERANK,
     topk: int = IVFPQ_TOPK,
 ) -> DataFrame:
-    """The IVF-PQ tail over candidate rows (q_id, qv, n_id, c0..):
+    """The IVF-PQ tail over `ivf_pq_cands` rows (q_id, n_id, c0..):
+    attach each query's vector ``qv`` from the ``emb`` store by q_id,
     ADC-score each candidate (`V.adc`: the query's per-subspace
     distance to the codeword its code names), keep a shortlist of
     `rerank` per query by (adc6, n_id), and exact-cosine re-rank only
     the shortlist against the `emb` store into the top `topk`."""
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
     code_cols = tuple(f"c{m}" for m in range(len(books)))
+    qv = emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"))
+    # adc6 is pround(adc, 6) computed in the kernel: the same IEEE
+    # floor(x·1e6 + 0.5) / 1e6
     adc = V.map_vectors(
-        cands.select("q_id", "qv", "n_id", *code_cols),
+        cands.join(qv, "q_id"),
         "qv",
-        lambda x, *cs: V.adc(x, books, np.stack(cs, axis=1)),
-        "adc double",
+        lambda x, *cs: np.floor(V.adc(x, books, np.stack(cs, axis=1)) * 1e6 + 0.5)
+        / 1e6,
+        "adc6 double",
         args=code_cols,
         keep=["q_id", "qv", "n_id"],
-    ).select("q_id", "qv", "n_id", pround(F.col("adc"), 6).alias("adc6"))
+    )
     ws = W.partitionBy("q_id").orderBy(F.col("adc6"), F.col("n_id"))
     short = (
         adc.withColumn("srnk", F.row_number().over(ws))

@@ -887,12 +887,10 @@ def test_stream_ann_route_pq_serves_from_bucketed_table(spark, sf_dir):
     candidate plan joins kpws_rag_idx.ann_pq_* — receipted from the
     finished query's plan since the streaming plan is not inspectable
     pre-run."""
-    from kafka_parquet_writer_spark.operators.streaming_queries import (
-        LAST_ANN_PQ_TRACE,
-    )
+    from kafka_parquet_writer_spark.operators import streaming_queries as SQ
 
     E.queries()["stream_ann_route_pq"](spark, sf_dir).collect()
-    plan = LAST_ANN_PQ_TRACE["plan"]
+    plan = SQ._plan_receipt(SQ.last_query)["plan"]
     assert "ann_pq_" in plan
     assert "BroadcastHashJoin" in plan
 

@@ -147,44 +147,6 @@ def test_support_accumulator_all_filtered_is_typed_empty(spark, tmp_path):
 # ----------------------------------------------------- new r13 operators
 
 
-def test_stream_query_router_incremental_equals_batch(spark):
-    """The router moved to serving time: queries arrive in p_partkey-
-    ranged micro-batches and are routed per batch against the static
-    broadcast manifest. Each query_id lives in exactly one micro-batch,
-    so the per-query rollup over the union of batches must equal the
-    batch router row-for-row."""
-    from kafka_parquet_writer_spark.registry import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    batch = {
-        tuple(r) for r in QUERIES["rag_query_router"](spark, sf).collect()
-    }
-    stream = {
-        tuple(r) for r in QUERIES["stream_query_router"](spark, sf).collect()
-    }
-    assert stream == batch
-    assert len(batch) > 0
-
-
-def test_stream_query_router_zero_state_broadcast_manifest(spark):
-    """The judge-named gate: the in-stream stage must be a stateless
-    stream-static BROADCAST join — zero streaming state (empty
-    stateOperators in the finished query's progress; no StateStore
-    node in the executed micro-batch plan) and never a shuffle join
-    sized by the query workload."""
-    from kafka_parquet_writer_spark.operators.streaming_queries import (
-        LAST_ROUTER_TRACE,
-        stream_query_router,
-    )
-
-    stream_query_router(spark, "/root/testdata/sf0.001").collect()
-    assert LAST_ROUTER_TRACE["state_operators"] == []
-    plan = LAST_ROUTER_TRACE["plan"]
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "StateStore" not in plan
-
-
 def _exhaustive_topk(p):
     """Inline exhaustive tf-idf top-k from a _wand_plan's imp/qt (the
     untruncated answer WAND must reproduce exactly)."""
@@ -406,27 +368,3 @@ def test_wand_bm25_safe_and_prunes_on_skewed_df(spark, tmp_path):
     assert wand == ex_topk and len(wand) > 0
     assert p["essential"].count() < p["qt"].count()
     assert p["cand"].count() < ex_sc.count()
-
-
-def test_stream_ann_route_incremental_equals_batch_zero_state(spark):
-    """ANN serving at request time: vec_id-ranged query micro-batches
-    assigned + probed against the static cell-assigned corpus must
-    reproduce similarity_ivf row-for-row, with zero streaming state
-    (stateless per-row assignment + stream-static join)."""
-    from kafka_parquet_writer_spark.operators.streaming_queries import (
-        LAST_ANN_ROUTE_TRACE,
-    )
-    from kafka_parquet_writer_spark.registry import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    batch = {
-        tuple(r) for r in QUERIES["similarity_ivf"](spark, sf).collect()
-    }
-    stream = {
-        tuple(r) for r in QUERIES["stream_ann_route"](spark, sf).collect()
-    }
-    assert stream == batch and len(batch) > 0
-    assert LAST_ANN_ROUTE_TRACE["state_operators"] == []
-    plan = LAST_ANN_ROUTE_TRACE["plan"]
-    assert "BroadcastHashJoin" in plan
-    assert "StateStore" not in plan

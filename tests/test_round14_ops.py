@@ -155,35 +155,6 @@ def test_index_table_is_bucketed_on_token(spark):
     assert spec == (["token"], RAG_INDEX_SHARDS)
 
 
-# ---------------------------------------------- PQ-compressed serving
-
-
-def test_stream_ann_route_pq_incremental_equals_batch_zero_state(spark):
-    """PQ ANN serving at request time: vec_id-ranged query
-    micro-batches, per-row ADC lookup tables against the static
-    PQ-compressed corpus, batch-side shortlist + exact re-rank — must
-    reproduce similarity_ivf_pq row-for-row with zero streaming state
-    (stateless LUT expressions + stream-static broadcast join)."""
-    from kafka_parquet_writer_spark.operators.streaming_queries import (
-        LAST_ANN_PQ_TRACE,
-    )
-    from kafka_parquet_writer_spark.registry import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    batch = {
-        tuple(r) for r in QUERIES["similarity_ivf_pq"](spark, sf).collect()
-    }
-    stream = {
-        tuple(r)
-        for r in QUERIES["stream_ann_route_pq"](spark, sf).collect()
-    }
-    assert stream == batch and len(batch) > 0
-    assert LAST_ANN_PQ_TRACE["state_operators"] == []
-    plan = LAST_ANN_PQ_TRACE["plan"]
-    assert "BroadcastHashJoin" in plan
-    assert "StateStore" not in plan
-
-
 # ------------------------------------------ incremental manifest (CDC)
 
 

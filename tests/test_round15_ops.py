@@ -125,15 +125,14 @@ def test_stream_index_delta_zero_state_all_batches(spark):
     state at rest in versioned parquet) and consumes every staged
     micro-batch; its final artifact equals the batch build key."""
     import __spark_entry__ as E
-    from kafka_parquet_writer_spark.operators.streaming_queries import (
-        DEDUP_STREAM_BATCHES,
-        LAST_STREAM_INDEX_TRACE,
-    )
+    from kafka_parquet_writer_spark.operators import streaming_queries as SQ
 
     out = E.queries()["stream_index_delta"](spark, SF)
     rows = {tuple(r) for r in out.collect()}
-    assert LAST_STREAM_INDEX_TRACE["state_operators"] == []
-    assert LAST_STREAM_INDEX_TRACE["n_batches"] == DEDUP_STREAM_BATCHES
+    q = SQ.last_query
+    assert SQ._plan_receipt(q)["state_operators"] == []
+    n_batches = sum(p["numInputRows"] > 0 for p in q.recentProgress)
+    assert n_batches == SQ.DEDUP_STREAM_BATCHES
     batch = {
         tuple(r)
         for r in E.queries()["rag_index_build"](spark, SF).collect()
@@ -200,28 +199,3 @@ def test_blocked_delta_equals_build_table(spark):
     inc = inc.select("token", "doc_id", "impact", "pos", "blk", "bmax")
     assert inc.exceptAll(full).count() == 0
     assert full.exceptAll(inc).count() == 0
-
-
-# --------------------------------------- streaming vector-index delta
-
-
-def test_stream_ann_index_delta_zero_state_append_only(spark):
-    """The streaming vector-index maintainer: zero Spark streaming
-    state, every staged micro-batch consumed, final artifact equals
-    the batch build key (codes from the Arrow-vectorized path must
-    reproduce the expression path exactly)."""
-    import __spark_entry__ as E
-    from kafka_parquet_writer_spark.operators.streaming_queries import (
-        ANN_STREAM_BATCHES,
-        LAST_STREAM_ANN_IDX_TRACE,
-    )
-
-    out = E.queries()["stream_ann_index_delta"](spark, SF)
-    rows = {tuple(r) for r in out.collect()}
-    assert LAST_STREAM_ANN_IDX_TRACE["state_operators"] == []
-    assert LAST_STREAM_ANN_IDX_TRACE["n_batches"] == ANN_STREAM_BATCHES
-    batch = {
-        tuple(r)
-        for r in E.queries()["ann_index_build"](spark, SF).collect()
-    }
-    assert rows == batch and len(batch) > 0

@@ -107,16 +107,16 @@ def test_stream_index_delta_generational_appends(spark):
     equality gate lives in test_round15_ops; this pins the LSM
     layout)."""
     import __spark_entry__ as E
-    from kafka_parquet_writer_spark.operators.streaming_queries import (
-        DEDUP_STREAM_BATCHES,
-        LAST_STREAM_INDEX_TRACE,
-    )
+    from kafka_parquet_writer_spark.operators import streaming_queries as SQ
 
     out = E.queries()["stream_index_delta"](spark, SF)
     n = out.count()
     assert n > 0
-    assert LAST_STREAM_INDEX_TRACE["n_generations"] == DEDUP_STREAM_BATCHES
-    assert LAST_STREAM_INDEX_TRACE["state_operators"] == []
+    # apply_batch appends one generation per call: one per batch
+    q = SQ.last_query
+    n_batches = sum(p["numInputRows"] > 0 for p in q.recentProgress)
+    assert n_batches == SQ.DEDUP_STREAM_BATCHES
+    assert SQ._plan_receipt(q)["state_operators"] == []
 
 
 # --------------------------------- theta sketch blob restructure

@@ -8,6 +8,9 @@ from pyspark.sql import functions as F
 
 from kafka_parquet_writer_spark.catalog import load_table
 from kafka_parquet_writer_spark.operators.streaming_queries import (
+    ANN_STREAM_BATCHES,
+    DEDUP_STREAM_BATCHES,
+    QUERY_STREAM_BATCHES,
     _events_stream,
     _run_to_memory,
 )
@@ -24,7 +27,7 @@ def test_tumbling_matches_batch(spark, sf_dir):
     out = _run_to_memory(
         tumbling_agg(stream, "ts", "5 minutes", ["event_type"], [F.count("*").alias("n")]),
         "complete",
-    )[0]
+    )
     batch = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.window("ts", "5 minutes"), "event_type")
@@ -41,7 +44,7 @@ def test_sliding_window_multiplicity(spark, sf_dir):
     out = _run_to_memory(
         sliding_agg(stream, "ts", "10 minutes", "5 minutes", [], [F.count("*").alias("n")]),
         "complete",
-    )[0]
+    )
     rows = load_table(spark, sf_dir, "events").count()
     assert out.agg(F.sum("n")).first()[0] == rows * 2
 
@@ -53,7 +56,7 @@ def test_sessionize_matches_lag_formulation(spark, sf_dir):
     out = _run_to_memory(
         sessionize(stream, "ts", "30 minutes", ["user_id"], [F.count("*").alias("n")]),
         "complete",
-    )[0]
+    )
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts")
     gap_us = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
@@ -77,7 +80,7 @@ def test_streaming_dedup_within_watermark(spark, sf_dir):
     out = _run_to_memory(
         dedup_within_watermark(stream, ["user_id", "event_type"], "ts", "1 hour"),
         "append",
-    )[0]
+    )
     distinct = (
         load_table(spark, sf_dir, "events")
         .select("user_id", "event_type")
@@ -143,31 +146,6 @@ def test_stream_dedup_minhash_kept_set_properties(spark):
     assert len(kept) == len(set(kept))  # no doc emitted twice (idempotence)
 
 
-def test_stream_decontaminate_equals_batch(spark):
-    """The streaming scrub over ordered micro-batches must produce
-    exactly the one-shot batch result — the equivalence that makes
-    continuous decontamination trustworthy (same contract the driver's
-    oracle checks, pinned here at smoke scale with direct comparison)."""
-    from kafka_parquet_writer_spark.operators.llm_prep import (
-        decontaminate_ngram,
-    )
-    from kafka_parquet_writer_spark.operators.streaming_queries import (
-        stream_decontaminate,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    batch = sorted(
-        (r["doc_id"], r["n_shared"])
-        for r in decontaminate_ngram(spark, sf).collect()
-    )
-    streamed = sorted(
-        (r["doc_id"], r["n_shared"])
-        for r in stream_decontaminate(spark, sf).collect()
-    )
-    assert streamed == batch
-    assert batch, "fixture must produce a non-empty contaminated set"
-
-
 def test_staged_dir_stages_directory_tables(spark, tmp_path):
     """A multi-file table arrives as a DIRECTORY; the file-stream
     source does not recurse, so _staged_dir must stage the part files
@@ -196,7 +174,7 @@ def test_staged_dir_stages_directory_tables(spark, tmp_path):
         _run_to_memory,
     )
 
-    out, _ = _run_to_memory(n, "complete")
+    out = _run_to_memory(n, "complete")
     assert out.collect()[0][0] == 100
 
 
@@ -242,6 +220,55 @@ def test_memory_sink_runs_leave_no_checkpoint_dir(spark, sf_dir, key, private_tm
             .count()
         )
         assert counts[0] == expected
+
+
+#: (stream twin, its batch key, staged micro-batches, whether its head
+#: joins a broadcast static side)
+STREAM_TWINS = [
+    ("stream_decontaminate", "decontaminate_ngram", DEDUP_STREAM_BATCHES, True),
+    ("stream_query_router", "rag_query_router", QUERY_STREAM_BATCHES, True),
+    ("stream_ann_route", "similarity_ivf", ANN_STREAM_BATCHES, True),
+    ("stream_ann_route_pq", "similarity_ivf_pq", ANN_STREAM_BATCHES, True),
+    ("stream_ann_index_delta", "ann_index_build", ANN_STREAM_BATCHES, False),
+]
+
+
+@pytest.mark.parametrize(
+    "twin,key,batches,joins", STREAM_TWINS, ids=[t[0] for t in STREAM_TWINS]
+)
+def test_stream_twin_equals_batch_zero_state(
+    spark, sf_dir, twin, key, batches, joins, private_tmp
+):
+    """A stream twin runs its batch key's head per micro-batch into a
+    memory sink and the same tail batch-side, so it reproduces the
+    batch key row for row, twice in a row. The finished query consumed
+    every staged micro-batch with zero streaming state (empty
+    stateOperators, no StateStore node in the executed micro-batch
+    plan), met its static side, if any, through a broadcast hash join
+    and never a sort-merge join, and the second run leaves no new
+    kpws_* entry in the temp dir."""
+    import os
+
+    from kafka_parquet_writer_spark.operators import streaming_queries as SQ
+    from kafka_parquet_writer_spark.registry import QUERIES, load_all_operators
+
+    def kpws():
+        return {n for n in os.listdir(tempfile.gettempdir()) if n.startswith("kpws_")}
+
+    load_all_operators()
+    batch = sorted(tuple(r) for r in QUERIES[key](spark, sf_dir).collect())
+    first = sorted(tuple(r) for r in QUERIES[twin](spark, sf_dir).collect())
+    staged = kpws()
+    second = sorted(tuple(r) for r in QUERIES[twin](spark, sf_dir).collect())
+    assert kpws() - staged == set()
+    assert first == second == batch and len(batch) > 0
+    q = SQ.last_query
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == batches
+    receipt = SQ._plan_receipt(q)
+    assert receipt["state_operators"] == []
+    assert "StateStore" not in receipt["plan"]
+    assert "SortMergeJoin" not in receipt["plan"]
+    assert ("BroadcastHashJoin" in receipt["plan"]) == joins
 
 
 def test_run_stream_restores_confs_and_checkpoint_when_a_batch_raises(
@@ -320,10 +347,12 @@ def test_ranged_stream_stages_once_in_range_order(spark, tmp_path):
 
 
 def test_stage_dirs_are_removed_at_process_exit(sf_dir, tmp_path):
-    """``_staged_dir`` and ``_ranged_stream`` keep their stage dirs for
-    the whole process and remove them when it exits: a child process
-    with a private TMPDIR runs ``stream_dedup`` and stages a ranged
-    split, and leaves no ``kpws_*src_`` dir behind."""
+    """``_staged_dir`` and ``_ranged_stream`` keep their stage dirs,
+    and ``stream_late_data_drop`` its output dir, for the whole process
+    and remove them when it exits: a child process with a private
+    TMPDIR runs ``stream_dedup``, stages a ranged split and runs
+    ``stream_late_data_drop``, and leaves no ``kpws_*src_`` or
+    ``kpws_late_out_`` dir behind."""
     import os
     import subprocess
     import sys
@@ -340,9 +369,11 @@ def test_stage_dirs_are_removed_at_process_exit(sf_dir, tmp_path):
         spark = get_spark("stage-leak", cpus=1, shuffle_partitions=1)
         assert QUERIES["stream_dedup"](spark, sys.argv[1]).count() > 0
         SQ._ranged_stream(spark, sys.argv[1], "probe", spark.range(10), "id", 2)
+        assert QUERIES["stream_late_data_drop"](spark, sys.argv[1]).count() > 0
         staged = [n for n in os.listdir(sys.argv[2]) if n.startswith("kpws_") and "src_" in n]
+        late = [n for n in os.listdir(sys.argv[2]) if n.startswith("kpws_late_out_")]
         spark.stop()
-        print("STAGED", len(staged))
+        print("STAGED", len(staged), "LATE", len(late))
         """
     )
     tmp = tmp_path / "tmp"
@@ -355,6 +386,10 @@ def test_stage_dirs_are_removed_at_process_exit(sf_dir, tmp_path):
         timeout=300,
         env=env,
     )
-    assert "STAGED 2" in out.stdout, out.stderr[-3000:]
-    left = [n for n in os.listdir(tmp) if n.startswith("kpws_") and "src_" in n]
+    assert "STAGED 2 LATE 1" in out.stdout, out.stderr[-3000:]
+    left = [
+        n
+        for n in os.listdir(tmp)
+        if n.startswith("kpws_") and ("src_" in n or "late_out_" in n)
+    ]
     assert left == []
