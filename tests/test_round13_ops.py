@@ -147,6 +147,42 @@ def test_support_accumulator_all_filtered_is_typed_empty(spark, tmp_path):
 # ----------------------------------------------------- new r13 operators
 
 
+def test_stream_query_router_incremental_equals_batch(spark):
+    """The router moved to serving time: queries arrive in p_partkey-
+    ranged micro-batches and are routed per batch against the static
+    broadcast manifest. Each query_id lives in exactly one micro-batch,
+    so the per-query rollup over the union of batches must equal the
+    batch router row-for-row."""
+    from kafka_parquet_writer_spark.registry import QUERIES, load_all_operators
+
+    load_all_operators()
+    sf = "/root/testdata/sf0.001"
+    batch = {
+        tuple(r) for r in QUERIES["rag_query_router"](spark, sf).collect()
+    }
+    stream = {
+        tuple(r) for r in QUERIES["stream_query_router"](spark, sf).collect()
+    }
+    assert stream == batch
+    assert len(batch) > 0
+
+
+def test_stream_query_router_zero_state_broadcast_manifest(spark):
+    """The in-stream stage must be a stateless stream-static BROADCAST
+    join — zero streaming state (empty stateOperators in the finished
+    query's progress; no StateStore node in the executed micro-batch
+    plan) and never a shuffle join sized by the query workload."""
+    from kafka_parquet_writer_spark.operators import streaming_queries as SQ
+
+    SQ.stream_query_router(spark, "/root/testdata/sf0.001").collect()
+    receipt = SQ._plan_receipt(SQ.last_query)
+    assert receipt["state_operators"] == []
+    plan = receipt["plan"]
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+    assert "StateStore" not in plan
+
+
 def _exhaustive_topk(p):
     """Inline exhaustive tf-idf top-k from a _wand_plan's imp/qt (the
     untruncated answer WAND must reproduce exactly)."""
