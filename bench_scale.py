@@ -561,7 +561,7 @@ def bpe_drift_lane() -> None:
 
     from pyspark.sql import functions as F
 
-    from kafka_parquet_writer_spark import get_spark
+    from kafka_parquet_writer_spark import artifacts, get_spark
     from kafka_parquet_writer_spark.catalog import load_table
     from kafka_parquet_writer_spark.functions import texthash as TH
     from kafka_parquet_writer_spark.operators import streaming_queries as SQ
@@ -665,8 +665,9 @@ def bpe_drift_lane() -> None:
         finally:
             # drop the cached stage split (keyed by sf_dir) AND the
             # blow-up; both are per-k temp dirs
-            staged = SQ._ranged_stages.pop(
-                ("documents", d, SQ.DEDUP_STREAM_BATCHES), None
+            staged = artifacts._state.pop(
+                ("scratch", "ranged", "documents", d, SQ.DEDUP_STREAM_BATCHES),
+                None,
             )
             if staged:
                 shutil.rmtree(staged[0], ignore_errors=True)
@@ -1403,7 +1404,7 @@ def bpe_drift_rocksdb_lane() -> None:
     into BENCH_SCALE.json as "bpe_drift_rocksdb_point"."""
     import shutil
 
-    from kafka_parquet_writer_spark import get_spark
+    from kafka_parquet_writer_spark import artifacts, get_spark
     from kafka_parquet_writer_spark.operators import streaming_queries as SQ
 
     spark = get_spark("bpe_drift_rocksdb_lane")
@@ -1437,8 +1438,8 @@ def bpe_drift_rocksdb_lane() -> None:
             "equals_default_provider": rocks_rows == default_rows,
         }
     finally:
-        staged = SQ._ranged_stages.pop(
-            ("documents", d, SQ.DEDUP_STREAM_BATCHES), None
+        staged = artifacts._state.pop(
+            ("scratch", "ranged", "documents", d, SQ.DEDUP_STREAM_BATCHES), None
         )
         if staged:
             shutil.rmtree(staged[0], ignore_errors=True)

@@ -65,12 +65,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_exact_df(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Library form: dropDuplicates on a key subset (nondeterministic
-    tie pick — fine when any representative will do)."""
-    return df.dropDuplicates(keys)
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
@@ -138,6 +132,37 @@ def _tid_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         F.col("doc_id").alias("doc"), F.explode(tids).alias("tid")
     )
+
+
+def _ranked_tids(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The set-similarity base of dedup_ngram_jaccard and
+    dedup_containment: (docsets, ranked). docsets is (doc, ss, n), the
+    verifier's token set and its size from one groupBy(doc); ranked is
+    (doc, tid, n, r), each doc's tokens ranked rarest-first under one
+    total global (df, tid) order, the order both prefix filters cut.
+    The tid sets and docsets are cached under ("ranked_tids", sf_dir).
+
+    tids, not shingle strings: 8-byte join keys and long-array docsets
+    instead of ~20-char strings. tids live in [0, 2^31): a collision
+    conflates two shingles IDENTICALLY on both engines (st is DISTINCT
+    (doc, tid) on both sides), so engine-equality always holds; only
+    the hashed-shingle set similarity itself drifts from the
+    string-level value, with per-doc probability ~m²/2^32."""
+    key = ("ranked_tids", sf_dir)
+    st = cache_frame(key, _tid_sets(spark, sf_dir))
+    sets = st.groupBy("doc").agg(
+        F.collect_set("tid").alias("ss"), F.count(F.lit(1)).alias("n")
+    )
+    docsets = cache_frame(key, sets, fresh=False)
+    dfreq = st.groupBy("tid").agg(F.count(F.lit(1)).alias("df"))
+    w = W.partitionBy("doc").orderBy("df", "tid")
+    ranked = (
+        st.join(dfreq, "tid")
+        .join(docsets.select("doc", "n"), "doc")
+        .withColumn("r", F.row_number().over(w))
+        .select("doc", "tid", "n", "r")
+    )
+    return docsets, ranked
 
 
 def minhash_signatures(
@@ -454,41 +479,19 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering alone is weak). Candidates are exact-verified with one
     array_intersect pass over 8-byte token hashes (per-row JVM op).
     """
-    # work on hashed token ids, not shingle strings: 8-byte join keys
-    # and long-array docsets instead of ~20-char strings. tids live in
-    # [0, 2^31): a collision conflates two shingles IDENTICALLY on
-    # both engines (st is DISTINCT (doc, tid) on both sides), so
-    # engine-equality always holds; only the hashed-shingle Jaccard
-    # itself drifts from the string-level value, with per-doc
-    # probability ~m²/2^32 — the standard tradeoff
-    st = _tid_sets(spark, sf_dir).cache()
     t = JACCARD_THRESHOLD
-    dfreq = st.groupBy("tid").agg(F.count(F.lit(1)).alias("df"))
-    # one groupBy(doc) yields both the ranking's size column and the
-    # verifier's token sets
-    docsets = st.groupBy("doc").agg(
-        F.collect_set("tid").alias("ss"), F.count(F.lit(1)).alias("n")
-    ).cache()
-    sizes = docsets.select("doc", "n")
-    # rank each doc's tokens rarest-first under a total global order
-    w = W.partitionBy("doc").orderBy("df", "tid")
-    ranked = (
-        st.join(dfreq, "tid")
-        .join(sizes, "doc")
-        .withColumn("r", F.row_number().over(w))
-    )
+    docsets, ranked = _ranked_tids(spark, sf_dir)
     # explicit repartition on the join key + cache: the self-join reads
     # the cached table twice with matching partitioning (no further
     # shuffle), and AQE cannot coalesce this byte-small but
     # OUTPUT-explosive join down to 2 partitions (measured 17s → 7s)
     from kafka_parquet_writer_spark.session import repartition_for_compute
 
-    prefix = repartition_for_compute(
-        ranked.filter(
-            F.col("r") <= F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1
-        ).select("doc", "tid", "n", "r"),
-        F.col("tid"),
-    ).cache()
+    head = F.col("r") <= F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1
+    prefix = cache_frame(
+        ("dedup_ngram_jaccard", sf_dir),
+        repartition_for_compute(ranked.filter(head), F.col("tid")),
+    )
     a, b = prefix.alias("a"), prefix.alias("b")
     # overlap needed for jac ≥ t: α = ⌈t/(1+t)·(n1+n2)⌉
     alpha = F.ceil(F.lit(t / (1.0 + t)) * (F.col("a.n") + F.col("b.n")))
@@ -1895,20 +1898,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_parquet_writer_spark.session import repartition_for_compute
 
     t = CONTAIN_T
-    st = _tid_sets(spark, sf_dir).cache()
-    docsets = st.groupBy("doc").agg(
-        F.collect_set("tid").alias("ss"), F.count(F.lit(1)).alias("n")
-    ).cache()
-    sizes = docsets.select("doc", "n")
-    dfreq = st.groupBy("tid").agg(F.count(F.lit(1)).alias("df"))
-    w = W.partitionBy("doc").orderBy("df", "tid")
-    base = repartition_for_compute(
-        st.join(dfreq, "tid")
-        .join(sizes, "doc")
-        .withColumn("r", F.row_number().over(w))
-        .select("doc", "tid", "n", "r"),
-        F.col("tid"),
-    ).cache()
+    docsets, ranked = _ranked_tids(spark, sf_dir)
+    base = cache_frame(
+        ("dedup_containment", sf_dir),
+        repartition_for_compute(ranked, F.col("tid")),
+    )
     a = base.filter(
         (F.col("n") >= CONTAIN_MIN_SHINGLES)
         & (F.col("r") <= F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1)

@@ -18,11 +18,10 @@ JSON) — matching sources/readers.py's contract.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_parquet_writer_spark.artifacts import scratch
 from kafka_parquet_writer_spark.catalog import load_table
 from kafka_parquet_writer_spark.functions.portable import cents, sql_cents
 from kafka_parquet_writer_spark.registry import query
@@ -46,7 +45,7 @@ def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
         "event_type",
         cents(F.col("value")).alias("vc"),
     )
-    d = tempfile.mkdtemp(prefix=f"kpws_fmt_{fmt}_")
+    d = scratch(f"kpws_fmt_{fmt}_")
     # header on BOTH sides (csv only; orc/json ignore it) — an
     # asymmetric header option silently eats one data row per file
     ev.write.mode("overwrite").format(fmt).option("header", "true").save(d)
@@ -134,7 +133,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", cents(F.col("value")).alias("vc"), "event_type"
     )
-    d = tempfile.mkdtemp(prefix="kpws_evo_")
+    d = scratch("kpws_evo_")
     ev.filter(F.col("event_id") % EVO_MOD == 0).drop("event_type").write.parquet(
         f"{d}/g=0"
     )
@@ -193,9 +192,9 @@ def maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", cents(F.col("value")).alias("vc")
     )
-    frag = tempfile.mkdtemp(prefix="kpws_frag_")
+    frag = scratch("kpws_frag_")
     ev.repartition(64).write.mode("overwrite").parquet(frag)
-    dst = tempfile.mkdtemp(prefix="kpws_compacted_")
+    dst = scratch("kpws_compacted_")
     compact_parquet_dir(spark, frag, dst, target_file_bytes=32 << 20)
     n_before = len(_glob.glob(f"{frag}/part-*.parquet"))
     n_after = len(_glob.glob(f"{dst}/part-*.parquet"))
@@ -253,7 +252,7 @@ def source_json_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id") % DLQ_CORRUPT_MOD == 0,
         F.concat(F.lit('{"broken '), F.col("event_id").cast("string")),
     ).otherwise(F.to_json(F.struct("event_id", "user_id")))
-    d = tempfile.mkdtemp(prefix="kpws_dlq_")
+    d = scratch("kpws_dlq_")
     ev.select(line.alias("value")).write.mode("overwrite").text(d)
     back = read_json(spark, d, schema="event_id long, user_id long").cache()
     good = valid_records(back).agg(

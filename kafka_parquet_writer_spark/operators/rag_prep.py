@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kafka_parquet_writer_spark.artifacts import cache_frame, ensure_artifact
+from kafka_parquet_writer_spark.artifacts import cache_frame, ensure_artifact, memo
 from kafka_parquet_writer_spark.catalog import load_table
 from kafka_parquet_writer_spark.functions import texthash as TH
 from kafka_parquet_writer_spark.registry import query
@@ -950,17 +950,6 @@ def _essential(qs: DataFrame) -> DataFrame:
 #: memory, far under the broadcast cap.
 WAND_CAND_BCAST_MAX_ROWS = 4_000_000
 
-#: measured candidate-pair counts, keyed by WAND plan identity + cand
-#: variant (the wand cache key). The guard pays its count
-#: job ONCE per plan identity per session; later invocations reuse
-#: the measurement and keep the zero-extra-job r15 plan shape
-#: (measured: the per-invocation count cost 0.5–0.7 s of pure job
-#: round-trip on every WAND key at sf0.1 — from_index keys 0.60×).
-#: Staleness under in-session fixture mutation affects ONLY the join
-#: strategy choice, never results — the same path-immutability
-#: assumption the wand cache key itself makes.
-_WAND_CAND_COUNT: dict[tuple, int] = {}
-
 
 def _wand_topk(p: dict) -> DataFrame:
     """Shared final stage of the MaxScore/WAND keys — scorer-agnostic
@@ -1006,19 +995,18 @@ def _wand_topk(p: dict) -> DataFrame:
     # MEASURED size clears WAND_CAND_BCAST_MAX_ROWS (guide §3.1 —
     # size estimates after this much pruning are fiction; count the
     # materialized frame instead). The count job runs ONCE per plan
-    # identity per session (_WAND_CAND_COUNT): on that first
+    # identity until artifacts.clear (a per-call count cost 0.5–0.7 s
+    # of job round-trip per WAND key at sf0.1): on that first
     # invocation cand is cached (under the plan's own cache key) so the
     # count's theta-seed/essential execution is handed to the main job
     # rather than recomputed; afterwards the remembered measurement
     # drives the branch with zero extra jobs and the plan is exactly
     # the r15 lazy-broadcast shape. Above the ceiling: plain shuffled
     # left-semi — correct at any size, just not fixture-optimal.
-    memo_key = (p["ckey"], p.get("cand_tag", "maxscore"))
-    n_cand = _WAND_CAND_COUNT.get(memo_key)
-    if n_cand is None:
-        cand = cache_frame(p["ckey"], cand, fresh=False)
-        n_cand = cand.count()
-        _WAND_CAND_COUNT[memo_key] = n_cand
+    n_cand = memo(
+        ("wand_count", p["ckey"], p.get("cand_tag", "maxscore")),
+        lambda: cache_frame(p["ckey"], cand, fresh=False).count(),
+    )
     if n_cand <= WAND_CAND_BCAST_MAX_ROWS:
         cand = F.broadcast(cand)
     full = matched.join(cand, ["query_id", "doc_id"], "left_semi")

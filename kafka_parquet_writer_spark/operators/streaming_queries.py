@@ -27,18 +27,17 @@ batch answer.
 
 from __future__ import annotations
 
-import atexit
 import glob
 import itertools
 import os
 import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from kafka_parquet_writer_spark.artifacts import memo, scratch
 from kafka_parquet_writer_spark.catalog import (
     ensure_nanos_readable,
     load_table,
@@ -50,7 +49,6 @@ from kafka_parquet_writer_spark.functions.portable import cents, pround, sql_cen
 from kafka_parquet_writer_spark.registry import query
 
 _counter = itertools.count()
-_stage_cache: dict[str, str] = {}
 
 
 def _staged_dir(path: str) -> str:
@@ -60,10 +58,10 @@ def _staged_dir(path: str) -> str:
     arrives as a DIRECTORY: the file-stream source does not recurse
     into subdirectories, so symlinking the directory itself would
     silently stream ZERO rows — stage each part file instead. The dir
-    lives as long as the process."""
-    if path not in _stage_cache:
-        d = tempfile.mkdtemp(prefix="kpws_src_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    is staged once and lives as long as the process."""
+
+    def stage() -> str:
+        d = scratch("kpws_src_")
         if os.path.isdir(path):
             parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
             if not parts:
@@ -72,8 +70,9 @@ def _staged_dir(path: str) -> str:
                 os.symlink(p, os.path.join(d, f"part-{i:05d}.parquet"))
         else:
             os.symlink(path, os.path.join(d, os.path.basename(path)))
-        _stage_cache[path] = d
-    return _stage_cache[path]
+        return d
+
+    return memo(("scratch", "staged", path), stage)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -83,10 +82,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_nanos(
         spark.readStream.schema(schema).parquet(_staged_dir(path))
     )
-
-
-#: staged range splits: (name, sf_dir, n) → (stage dir, lo, span)
-_ranged_stages: dict[tuple[str, str, int], tuple[str, int, int]] = {}
 
 
 def _write_file(df: DataFrame, dst: str) -> None:
@@ -115,12 +110,11 @@ def _ranged_stream(
     must identify ``df``'s rows within ``sf_dir``. The stream reads one
     file per trigger with the staged file's memoized schema, so a warm
     call runs no Spark job. The stage lives as long as the process."""
-    key = (name, sf_dir, n)
-    if key not in _ranged_stages:
+
+    def split() -> tuple[str, int, int]:
         lo, hi = df.agg(F.min(col), F.max(col)).first()
         span = (hi - lo + n) // n
-        stage = tempfile.mkdtemp(prefix=f"kpws_{name}_src_")
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
+        stage = scratch(f"kpws_{name}_src_")
         c = F.col(col)
         for i in range(n):
             dst = os.path.join(stage, f"{i:03d}.parquet")
@@ -128,8 +122,9 @@ def _ranged_stream(
             _write_file(rows, dst)
             t = 1_600_000_000 + i * 10
             os.utime(dst, (t, t))
-        _ranged_stages[key] = (stage, lo, span)
-    stage, lo, span = _ranged_stages[key]
+        return stage, lo, span
+
+    stage, lo, span = memo(("scratch", "ranged", name, sf_dir, n), split)
     schema = table_schema(spark, os.path.join(stage, "000.parquet"))
     stream = (
         spark.readStream.schema(schema)
@@ -212,7 +207,7 @@ def _run_stream(
     prev = {k: spark.conf.get(k, None) for k in confs}
     own_ckpt = ckpt is None
     if own_ckpt:
-        ckpt = tempfile.mkdtemp(prefix="kpws_ckpt_")
+        ckpt = scratch("kpws_ckpt_")
     q = None
     try:
         for k, v in confs.items():
@@ -245,9 +240,14 @@ def _run_stream(
 def _run_to_memory(
     stream_df: DataFrame, mode: str, provider: str | None = None
 ) -> DataFrame:
-    """_run_stream into a memory sink: the sink table."""
+    """_run_stream into a memory sink: the sink table. Its view is
+    dropped once the frame is resolved; the frame keeps the sink's rows,
+    the session catalog does not."""
     q = _run_stream(stream_df, "memory", mode=mode, provider=provider)
-    return stream_df.sparkSession.table(q.name)
+    spark = stream_df.sparkSession
+    out = spark.table(q.name)
+    spark.catalog.dropTempView(q.name)
+    return out
 
 
 def _plan_receipt(q: StreamingQuery) -> dict:
@@ -676,7 +676,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson applied.
     """
     stream, _, _ = _documents_stream(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="kpws_dedup_run_")
+    work = scratch("kpws_dedup_run_")
     state_base = os.path.join(work, "state")
     out_base = os.path.join(work, "kept")
 
@@ -912,7 +912,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         CDC_STREAM_BATCHES,
     )
-    state_base = tempfile.mkdtemp(prefix="kpws_cdc_state_")
+    state_base = scratch("kpws_cdc_state_")
     holder: dict[str, str | None] = {"state": None}
 
     from pyspark.sql.window import Window as W
@@ -1082,12 +1082,11 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     split = F.lit(LATE_SPLIT_TS).cast("timestamp")
-    src = tempfile.mkdtemp(prefix="kpws_late_src_")
-    ckpt = tempfile.mkdtemp(prefix="kpws_late_ckpt_")
+    src = scratch("kpws_late_src_")
+    ckpt = scratch("kpws_late_ckpt_")
     # the returned frame reads out_dir lazily: it lives as long as the
     # process
-    out_dir = tempfile.mkdtemp(prefix="kpws_late_out_")
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    out_dir = scratch("kpws_late_out_")
     agg = (
         spark.readStream.schema(ev.schema)
         .parquet(src)
@@ -1650,7 +1649,7 @@ def _run_support_filtered(
     an empty TYPED result instead of a schemaless-directory read
     error.
     """
-    acc = tempfile.mkdtemp(prefix="kpws_drift_acc_")
+    acc = scratch("kpws_drift_acc_")
     _run_stream(
         pairs, lambda bdf, bid: _fold_support_batch(bdf, bid, acc, min_support)
     )
@@ -2301,7 +2300,7 @@ def stream_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     SC, L = RAG_IDF_SCALE, RAG_IMPACT_L
     stream, _, _ = _documents_stream(spark, sf_dir)
-    state_base = tempfile.mkdtemp(prefix="kpws_stridx_")
+    state_base = scratch("kpws_stridx_")
     holder: dict = {"gens": [], "tf_dirs": []}
 
     def apply_batch(bdf: DataFrame, bid: int) -> None:

@@ -17,11 +17,10 @@ same scan it always did).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_parquet_writer_spark.artifacts import scratch
 from kafka_parquet_writer_spark.catalog import load_table
 from kafka_parquet_writer_spark.functions.portable import cents, sql_cents
 from kafka_parquet_writer_spark.registry import query
@@ -85,7 +84,7 @@ def table_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     demo rewrites the table; test_tablefmt pins the pruning counts.)
     """
     base = _base(spark, sf_dir)
-    t = TxTable(tempfile.mkdtemp(prefix="kpws_tq_merge_"))
+    t = TxTable(scratch("kpws_tq_merge_"))
     t.create(base)
     t.merge(spark, _delta(base), keys=["o_orderkey"])
     return t.read(spark)
@@ -115,7 +114,7 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     VACUUM is the explicit trade of old-version readability for space.
     """
     base = _base(spark, sf_dir)
-    t = TxTable(tempfile.mkdtemp(prefix="kpws_tq_tt_"))
+    t = TxTable(scratch("kpws_tq_tt_"))
     t.create(base)
     t.merge(spark, _bump(base), keys=["o_orderkey"])
     v0 = t.read(spark, version=0).select(
@@ -146,7 +145,7 @@ def zorder_slice_stats(
     land ``ev`` fragmented into ``n_frag`` unclustered files, OPTIMIZE
     ZORDER on (user_id, vc) into ``n_files``, and report the file-
     skipping stats for the fixed 2-D audit slice."""
-    t = TxTable(tempfile.mkdtemp(prefix="kpws_zorder_"))
+    t = TxTable(scratch("kpws_zorder_"))
     t.create(ev.repartition(n_frag), stats_cols=["user_id", "vc"])
     t.compact(
         spark, cluster_by=["user_id", "vc"], n_files=n_files, zorder=True
@@ -249,7 +248,7 @@ def table_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     base = _base(spark, sf_dir)
-    t = TxTable(tempfile.mkdtemp(prefix="kpws_tq_vac_"))
+    t = TxTable(scratch("kpws_tq_vac_"))
     t.create(base)
     t.merge(spark, _bump(base), keys=["o_orderkey"])
     removed = t.vacuum(retain_versions=1)

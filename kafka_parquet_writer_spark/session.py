@@ -46,11 +46,12 @@ Three defaults cut the fixed cost of every micro-batch:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from kafka_parquet_writer_spark.artifacts import scratch_root
 
 #: the directory holding this package, for the Python workers' path
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -121,16 +122,13 @@ def get_spark(
         .config("spark.python.daemon.module", "kafka_parquet_writer_spark.daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
-        # managed tables (bucketing demos/tests) land in /tmp, not cwd;
-        # per-process dir so orphaned locations from a previous run
-        # (in-memory catalog, files outlive the session) can't collide
+        # managed tables (bucketing demos/tests) land in the per-process
+        # scratch root, not cwd: removed at exit, and apart from other
+        # processes' (in-memory catalog, files outlive the session)
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(
-                "SPARK_GRAFT_WAREHOUSE",
-                os.path.join(
-                    tempfile.gettempdir(), f"kpws_warehouse_{os.getpid()}"
-                ),
+                "SPARK_GRAFT_WAREHOUSE", os.path.join(scratch_root(), "warehouse")
             ),
         )
         # the events fixture carries TIMESTAMP(NANOS) which Spark's reader

@@ -16,10 +16,11 @@ regardless of input size.
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
 
 from pyspark.sql import DataFrame
 
+from kafka_parquet_writer_spark.artifacts import scratch
 from kafka_parquet_writer_spark.streaming.maintenance import dir_parquet_bytes
 
 #: reference maxFileSize default (KafkaProtoParquetWriter.java:465)
@@ -34,14 +35,13 @@ def measure_row_bytes(
 
     Uses ``limit`` (first rows, no shuffle) — biased if early rows are
     atypical, which is the accepted tradeoff for not scanning the
-    input twice."""
-    d = tempfile.mkdtemp(prefix="kpws_rowprobe_")
+    input twice. The probe dir is removed once measured."""
+    d = scratch("kpws_rowprobe_")
     sample = df.limit(sample_rows)
     sample.write.mode("overwrite").option("compression", compression).parquet(d)
-    n = sample.count()
-    if n == 0:
-        return 1.0
-    return max(1.0, dir_parquet_bytes(d) / n)
+    n, size = sample.count(), dir_parquet_bytes(d)
+    shutil.rmtree(d)
+    return max(1.0, size / n) if n else 1.0
 
 
 def calibrate_file_sizing(
@@ -69,7 +69,7 @@ def calibrate_file_sizing(
         return max(1.0, measure_row_bytes(df, sample_rows, compression)), 0.0
     points = []
     for rows_per_file in (n, max(2, n // 4)):
-        d = tempfile.mkdtemp(prefix="kpws_sizeprobe_")
+        d = scratch("kpws_sizeprobe_")
         (
             sample.write.mode("overwrite")
             .option("compression", compression)
@@ -82,6 +82,7 @@ def calibrate_file_sizing(
             if not os.path.basename(p).startswith(("_", "."))
         ]
         points.append((n / len(files), dir_parquet_bytes(d) / len(files)))
+        shutil.rmtree(d)
     sample.unpersist()
     (r1, s1), (r2, s2) = points
     if r1 == r2:

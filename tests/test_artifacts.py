@@ -55,3 +55,56 @@ def test_artifact_builds_once_per_source_content(
     t3 = accessor(spark, d, name)
     assert t3 != t1
     assert spark.catalog.tableExists(t3)
+
+
+def _build_state_users(spark):
+    """Build one key of each memo/registry user: a WAND key (candidate
+    count memo and frames), a ``_ranged_stream`` user (staged split)
+    and a ``cache_frame`` user (the set-similarity base)."""
+    from kafka_parquet_writer_spark.operators import streaming_queries as SQ
+    from kafka_parquet_writer_spark.registry import QUERIES, load_all_operators
+
+    load_all_operators()
+    QUERIES["rag_topk_retrieval_wand"](spark, SF)
+    SQ._documents_stream(spark, SF)
+    QUERIES["dedup_ngram_jaccard"](spark, SF)
+
+
+def test_registry_holds_one_entry_per_key(spark):
+    """Running the same keys again registers nothing new: every entry
+    is replaced or reused under its namespaced key."""
+    from kafka_parquet_writer_spark import artifacts
+
+    _build_state_users(spark)
+    first = set(artifacts._state)
+    _build_state_users(spark)
+    assert set(artifacts._state) == first
+    assert {k[0] for k in first} >= {"wand_count", "frames", "scratch"}
+    assert ("scratch", "ranged", "documents", SF, 4) in first
+
+
+def test_wand_count_runs_once_between_clears(spark):
+    """A WAND plan identity pays its candidate count job once; a warm
+    build runs no Spark job, and ``clear`` forgets the count with the
+    cache, so the next build measures again. Staged sources survive
+    ``clear``: a warm ``_ranged_stream`` still runs no job."""
+    from kafka_parquet_writer_spark import artifacts
+    from kafka_parquet_writer_spark.operators import streaming_queries as SQ
+    from kafka_parquet_writer_spark.registry import QUERIES, load_all_operators
+
+    load_all_operators()
+
+    def build():
+        return QUERIES["rag_topk_retrieval_wand"](spark, SF)
+
+    artifacts.clear(spark)
+    _, cold = _jobs_during(spark, build)
+    _, warm = _jobs_during(spark, build)
+    assert cold >= 1 and warm == 0
+    SQ._documents_stream(spark, SF)
+    artifacts.clear(spark)
+    _, staged = _jobs_during(spark, lambda: SQ._documents_stream(spark, SF))
+    assert staged == 0
+    _, again = _jobs_during(spark, build)
+    assert again == cold
+    artifacts.clear(spark)

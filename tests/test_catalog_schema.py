@@ -8,7 +8,6 @@ import itertools
 import os
 import subprocess
 import sys
-import tempfile
 import textwrap
 
 import pyarrow as pa
@@ -38,8 +37,8 @@ def _write_file(path, **cols):
     pq.write_table(pa.table(cols), path)
 
 
-def test_warm_load_table_launches_no_spark_job(spark, sf_dir):
-    d = tempfile.mkdtemp(prefix="schema_memo_")
+def test_warm_load_table_launches_no_spark_job(spark, sf_dir, tmp_path):
+    d = str(tmp_path)
     _write_file(table_path(d, "orders"), o_orderkey=pa.array([1, 2, 3]))
     _, cold = _jobs_during(spark, lambda: load_table(spark, d, "orders"))
     df, warm = _jobs_during(spark, lambda: load_table(spark, d, "orders"))
@@ -68,8 +67,8 @@ def test_reading_40_explicit_paths_launches_no_listing_job(spark, tmp_path):
     assert df.count() == 40
 
 
-def test_rewrite_at_same_path_reads_new_schema_file_form(spark):
-    d = tempfile.mkdtemp(prefix="schema_memo_")
+def test_rewrite_at_same_path_reads_new_schema_file_form(spark, tmp_path):
+    d = str(tmp_path)
     _write_file(table_path(d, "region"), r_regionkey=pa.array([0, 1]))
     assert load_table(spark, d, "region").columns == ["r_regionkey"]
     _write_file(
@@ -82,8 +81,8 @@ def test_rewrite_at_same_path_reads_new_schema_file_form(spark):
     assert sorted(r.r_name for r in df.collect()) == ["a", "b", "c"]
 
 
-def test_rewrite_at_same_path_reads_new_schema_directory_form(spark):
-    d = tempfile.mkdtemp(prefix="schema_memo_")
+def test_rewrite_at_same_path_reads_new_schema_directory_form(spark, tmp_path):
+    d = str(tmp_path)
     path = table_path(d, "nation")
     spark.range(4).withColumnRenamed("id", "n_nationkey").write.parquet(path)
     assert load_table(spark, d, "nation").columns == ["n_nationkey"]
@@ -98,8 +97,8 @@ def test_rewrite_at_same_path_reads_new_schema_directory_form(spark):
     assert df.count() == 5
 
 
-def test_binary_as_string_conf_is_part_of_the_key(spark):
-    path = os.path.join(tempfile.mkdtemp(prefix="schema_memo_"), "b.parquet")
+def test_binary_as_string_conf_is_part_of_the_key(spark, tmp_path):
+    path = str(tmp_path / "b.parquet")
     _write_file(path, payload=pa.array([b"x", b"y"], type=pa.binary()))
     conf = "spark.sql.parquet.binaryAsString"
     prev = spark.conf.get(conf)
@@ -114,9 +113,9 @@ def test_binary_as_string_conf_is_part_of_the_key(spark):
         spark.conf.set(conf, prev)
 
 
-def test_memo_is_bounded_by_its_cap(spark, monkeypatch):
+def test_memo_is_bounded_by_its_cap(spark, monkeypatch, tmp_path):
     monkeypatch.setattr(catalog, "_SCHEMA_MEMO_CAP", 3)
-    d = tempfile.mkdtemp(prefix="schema_memo_")
+    d = str(tmp_path)
     for i in range(6):
         path = os.path.join(d, f"t{i}.parquet")
         _write_file(path, **{f"c{i}": pa.array([i])})

@@ -3,7 +3,6 @@ version-swapped parquet table; the published snapshot is always
 complete and reflects latest-per-key."""
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -23,8 +22,8 @@ def _write_batch(spark, src_dir, rows, name):
     ).parquet(src_dir)
 
 
-def test_streaming_upsert_latest_per_key(spark):
-    base = tempfile.mkdtemp(prefix="kpws_fes_")
+def test_streaming_upsert_latest_per_key(spark, tmp_path):
+    base = str(tmp_path)
     src = os.path.join(base, "src")
     table = os.path.join(base, "table")
     ckpt = os.path.join(base, "ckpt")
@@ -58,11 +57,11 @@ def test_streaming_upsert_latest_per_key(spark):
     assert cur is not None and os.path.isdir(cur)
 
 
-def test_time_travel_and_retention(spark):
+def test_time_travel_and_retention(spark, tmp_path):
     """Versioned-table surface: each wave publishes a snapshot;
     read_version time-travels, prune_versions enforces retention but
     never deletes the published current pointer's target."""
-    base = tempfile.mkdtemp(prefix="kpws_fes_tt_")
+    base = str(tmp_path)
     src = os.path.join(base, "src")
     table = os.path.join(base, "table")
 
@@ -100,13 +99,13 @@ def test_time_travel_and_retention(spark):
         pass
 
 
-def test_replay_after_published_swap_is_noop(spark):
+def test_replay_after_published_swap_is_noop(spark, tmp_path):
     """Crash window regression: if the stream dies AFTER the symlink
     swap but BEFORE the checkpoint commit, the batch replays with
     `current` already pointing at v{batch_id}. The replay must no-op
     (not read-and-overwrite the same directory, which wedges the
     stream)."""
-    base = tempfile.mkdtemp(prefix="kpws_fes_replay_")
+    base = str(tmp_path)
     src = os.path.join(base, "src")
     table = os.path.join(base, "table")
     ckpt = os.path.join(base, "ckpt")

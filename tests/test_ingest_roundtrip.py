@@ -7,7 +7,6 @@ directory-layout assertions (`:194-227`), and rotation bounds
 
 import glob
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -31,19 +30,22 @@ from kafka_parquet_writer_spark.streaming.ingest import (
 )
 
 
-def _staged_events_dir(spark, sf_dir):
+def _staged_events_dir(spark, sf_dir, tmp):
     src = table_path(sf_dir, "events")
-    d = tempfile.mkdtemp(prefix="ingest_src_")
+    d = os.path.join(tmp, "src")
+    os.mkdir(d)
     os.symlink(src, os.path.join(d, "events.parquet"))
     schema = spark.read.parquet(src).schema
     return d, schema
 
 
-def _cfg(spark, sf_dir, **over):
-    src_dir, schema = _staged_events_dir(spark, sf_dir)
+def _cfg(spark, sf_dir, tmp, **over):
+    """An ingest config over a staged copy of the events table, with
+    its source, output and checkpoint dirs under ``tmp``."""
+    src_dir, schema = _staged_events_dir(spark, sf_dir, tmp)
     base = dict(
-        target_dir=tempfile.mkdtemp(prefix="ingest_out_"),
-        checkpoint_dir=tempfile.mkdtemp(prefix="ingest_ckpt_"),
+        target_dir=os.path.join(tmp, "out"),
+        checkpoint_dir=os.path.join(tmp, "ckpt"),
         source_format="file",
         source_path=src_dir,
         source_schema=schema,
@@ -54,10 +56,10 @@ def _cfg(spark, sf_dir, **over):
     return IngestConfig(**base)
 
 
-def test_roundtrip_multiset_equality(spark, sf_dir):
+def test_roundtrip_multiset_equality(spark, sf_dir, tmp_path):
     """Everything sent comes back, order-insensitive — the reference's
     core invariant (containsInAnyOrder, :136)."""
-    cfg = _cfg(spark, sf_dir)
+    cfg = _cfg(spark, sf_dir, str(tmp_path))
     ingest_once(spark, cfg)
     src = load_table(spark, sf_dir, "events")
     out = spark.read.parquet(cfg.target_dir)
@@ -69,13 +71,14 @@ def test_roundtrip_multiset_equality(spark, sf_dir):
     assert out.select(*cols).exceptAll(src.select(*cols)).count() == 0
 
 
-def test_partitioned_directory_layout(spark, sf_dir):
+def test_partitioned_directory_layout(spark, sf_dir, tmp_path):
     """Date-partitioned layout from event time (reference #6, :362-380,
     Hive-style here); every row lands in exactly one partition whose
     value matches its own timestamp (totality)."""
     cfg = _cfg(
         spark,
         sf_dir,
+        str(tmp_path),
         directory_datetime_pattern="yyyy/MM/dd",
         partition_time_column="ts_event",
     )
@@ -225,13 +228,13 @@ def test_drain_writes_files_per_dir_into_every_date_dir(spark, tmp_path, files_p
     assert spark.read.parquet(cfg.target_dir).count() == 1240
 
 
-def test_metrics_file_size_histogram(spark, sf_dir):
+def test_metrics_file_size_histogram(spark, sf_dir, tmp_path):
     """Reference metric parity (KafkaProtoParquetWriter.java:110-121):
     the flushed-file-size histogram must see every committed data file
     and its true byte size."""
     from kafka_parquet_writer_spark.streaming.ingest import IngestMetrics
 
-    cfg = _cfg(spark, sf_dir)
+    cfg = _cfg(spark, sf_dir, str(tmp_path))
     m = IngestMetrics(spark, target_dir=cfg.target_dir)
     try:
         ingest_once(spark, cfg)
@@ -250,14 +253,14 @@ def test_metrics_file_size_histogram(spark, sf_dir):
         m.remove(spark)
 
 
-def test_metrics_read_the_commit_log_not_the_table(spark, sf_dir, monkeypatch):
+def test_metrics_read_the_commit_log_not_the_table(spark, sf_dir, monkeypatch, tmp_path):
     """The file-size histogram counts only files the sink committed,
     and a batch never lists the table or stats a data file: with 1000
     uncommitted files pre-seeded in the target, none is counted or
     touched (the per-batch cost must not grow with the table)."""
     from kafka_parquet_writer_spark.streaming.ingest import IngestMetrics
 
-    cfg = _cfg(spark, sf_dir)
+    cfg = _cfg(spark, sf_dir, str(tmp_path))
     seeded = set()
     for i in range(1000):
         d = os.path.join(cfg.target_dir, f"seed={i % 10}")
@@ -342,10 +345,10 @@ def test_metrics_follow_log_compaction(tmp_path):
     assert late.file_size_histogram()["count"] == 6
 
 
-def test_rotation_max_records_per_file(spark, sf_dir):
+def test_rotation_max_records_per_file(spark, sf_dir, tmp_path):
     """Size-rotation analogue (reference #4, :282-310): no output file
     exceeds the per-file record cap."""
-    cfg = _cfg(spark, sf_dir, max_records_per_file=200, num_shards=2)
+    cfg = _cfg(spark, sf_dir, str(tmp_path), max_records_per_file=200, num_shards=2)
     ingest_once(spark, cfg)
     files = glob.glob(os.path.join(cfg.target_dir, "*.parquet"))
     assert len(files) >= 5  # 1000 rows / 200 cap / 2 shards ⇒ ≥5 files
@@ -432,10 +435,10 @@ def test_wire_format_parser_units():
         parse_wire_format(b"\x0a\xff")  # length-delimited, truncated body
 
 
-def test_pipeline_is_inert_until_started(spark, sf_dir):
+def test_pipeline_is_inert_until_started(spark, sf_dir, tmp_path):
     """Mirrors the reference's inert construction (§3.1: no I/O or
     threads before start(), :131-166)."""
-    cfg = _cfg(spark, sf_dir)
+    cfg = _cfg(spark, sf_dir, str(tmp_path))
     df = build_pipeline(spark, cfg)
     assert df.isStreaming
     assert not glob.glob(os.path.join(cfg.target_dir, "*"))

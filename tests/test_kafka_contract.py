@@ -33,10 +33,10 @@ KAFKA_SOURCE_COLUMNS = {
 }
 
 
-def _kafka_cfg(**kw) -> IngestConfig:
+def _kafka_cfg(tmp, **kw) -> IngestConfig:
     base = dict(
-        target_dir="/tmp/kpws_kafka_out",
-        checkpoint_dir="/tmp/kpws_kafka_ckpt",
+        target_dir=str(tmp / "out"),
+        checkpoint_dir=str(tmp / "ckpt"),
         source_format="kafka",
         kafka_bootstrap_servers="broker-1:9092,broker-2:9092",
         topic_name="proto-events",
@@ -46,18 +46,18 @@ def _kafka_cfg(**kw) -> IngestConfig:
     return IngestConfig(**base)
 
 
-def test_kafka_config_validates():
-    _kafka_cfg().validate()
+def test_kafka_config_validates(tmp_path):
+    _kafka_cfg(tmp_path).validate()
 
 
-def test_kafka_config_requires_broker_and_topic():
+def test_kafka_config_requires_broker_and_topic(tmp_path):
     with pytest.raises(ValueError):
-        _kafka_cfg(kafka_bootstrap_servers=None).validate()
+        _kafka_cfg(tmp_path, kafka_bootstrap_servers=None).validate()
     with pytest.raises(ValueError):
-        _kafka_cfg(topic_name=None).validate()
+        _kafka_cfg(tmp_path, topic_name=None).validate()
 
 
-def test_kafka_read_stream_reaches_source_resolution(spark):
+def test_kafka_read_stream_reaches_source_resolution(spark, tmp_path):
     """`_read_source` must wire subscribe/bootstrap/startingOffsets/
     maxOffsetsPerTrigger into a `readStream.format("kafka").load()`.
 
@@ -67,7 +67,7 @@ def test_kafka_read_stream_reaches_source_resolution(spark):
     passed our code untouched and resolution was actually attempted
     (a typo'd option name or format string would surface here).
     """
-    cfg = _kafka_cfg(max_offsets_per_trigger=12345)
+    cfg = _kafka_cfg(tmp_path, max_offsets_per_trigger=12345)
     try:
         df = _read_source(spark, cfg)
     except Exception as e:  # noqa: BLE001 — jar absent in this env
@@ -82,7 +82,7 @@ def test_kafka_read_stream_reaches_source_resolution(spark):
     assert dict(df.dtypes)["value"] == "binary"
 
 
-def test_kafka_pipeline_composes_decoder(spark):
+def test_kafka_pipeline_composes_decoder(spark, tmp_path):
     """build_pipeline applies the decode step to the Kafka frame; the
     full chain (source → decode) is what start_ingest launches."""
     decoded = []
@@ -91,7 +91,7 @@ def test_kafka_pipeline_composes_decoder(spark):
         decoded.append(df)
         return df
 
-    cfg = _kafka_cfg(decoder=decoder)
+    cfg = _kafka_cfg(tmp_path, decoder=decoder)
     try:
         build_pipeline(spark, cfg)
     except Exception as e:  # noqa: BLE001

@@ -3,7 +3,6 @@ preserved (multiset), Hive partitioning preserved when requested."""
 
 import glob
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -29,9 +28,9 @@ def test_plan_output_files():
     assert plan_output_files(10**12, 1 << 30) == 932
 
 
-def test_compact_merges_small_files(spark):
-    src = tempfile.mkdtemp(prefix="kpws_cmp_src_")
-    dst = os.path.join(tempfile.mkdtemp(prefix="kpws_cmp_dst_"), "out")
+def test_compact_merges_small_files(spark, tmp_path):
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst" / "out")
     df = spark.range(10_000).withColumn("v", F.col("id") % 97)
     df.repartition(40).write.mode("overwrite").parquet(src)  # 40 small files
     assert len(_parquet_files(src)) == 40
@@ -46,9 +45,9 @@ def test_compact_merges_small_files(spark):
     assert a == b
 
 
-def test_compact_preserves_hive_partitions(spark):
-    src = tempfile.mkdtemp(prefix="kpws_cmp_psrc_")
-    dst = os.path.join(tempfile.mkdtemp(prefix="kpws_cmp_pdst_"), "out")
+def test_compact_preserves_hive_partitions(spark, tmp_path):
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst" / "out")
     df = spark.range(1_000).withColumn("day", (F.col("id") % 3).cast("string"))
     df.repartition(10).write.mode("overwrite").partitionBy("day").parquet(src)
     assert len(_parquet_files(src)) > 10
@@ -67,12 +66,12 @@ def test_compact_preserves_hive_partitions(spark):
     assert a == b
 
 
-def test_upsert_replaces_by_key(spark):
+def test_upsert_replaces_by_key(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from kafka_parquet_writer_spark.streaming.maintenance import upsert_parquet
 
-    base = tempfile.mkdtemp(prefix="kpws_ups_")
+    base = str(tmp_path)
     old_dir = os.path.join(base, "old")
     new_dir = os.path.join(base, "new")
     old = spark.createDataFrame(
@@ -87,10 +86,10 @@ def test_upsert_replaces_by_key(spark):
     assert got == [(1, "a", 10), (2, "B", 99), (3, "c", 30), (4, "d", 40)]
 
 
-def test_upsert_no_existing_dedups_updates(spark):
+def test_upsert_no_existing_dedups_updates(spark, tmp_path):
     from kafka_parquet_writer_spark.streaming.maintenance import upsert_parquet
 
-    base = tempfile.mkdtemp(prefix="kpws_ups2_")
+    base = str(tmp_path)
     new_dir = os.path.join(base, "new")
     updates = spark.createDataFrame(
         [(1, "x", 5), (1, "y", 9), (2, "z", 7)], "k int, v string, ts int"

@@ -10,7 +10,6 @@ prunes fact partitions at runtime).
 """
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,8 +20,8 @@ from kafka_parquet_writer_spark.plans import formatted_plan
 
 
 @pytest.fixture(scope="module")
-def partitioned_events(spark):
-    d = os.path.join(tempfile.mkdtemp(prefix="kpws_part_"), "events")
+def partitioned_events(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("part") / "events")
     ev = load_table(spark, SF_SMOKE, "events").withColumn(
         "day", F.date_format("ts", "yyyy-MM-dd")
     )

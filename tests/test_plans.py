@@ -3,6 +3,7 @@ want at 100 TB — filters pushed to the scan, projections pruned,
 dimensions broadcast, top-k never a global sort."""
 
 import __spark_entry__ as E
+from kafka_parquet_writer_spark import artifacts
 from kafka_parquet_writer_spark.plans import (
     count_exchanges,
     formatted_plan,
@@ -60,7 +61,7 @@ def test_minhash_profiles_single_shuffle(spark, sf_dir):
 
     # cached subplans from other tests legitimately change the plan
     # (InMemoryTableScan boundaries); assert the clean-cache shape
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     prof = _doc_profiles(_shingle_pairs(spark, sf_dir), MINHASH_COEFFS)
     assert count_exchanges(prof) == 1
 
@@ -585,6 +586,7 @@ def test_rag_topk_retrieval_single_corpus_scan(spark, sf_dir):
     the two part scans are the broadcast query side."""
     import re
 
+    artifacts.clear(spark)
     df = E.queries()["rag_topk_retrieval"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "SortMergeJoin" not in plan
@@ -624,7 +626,7 @@ def test_rag_topk_retrieval_wand_single_scan_no_smj(spark, sf_dir):
     cartesian."""
     import re
 
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["rag_topk_retrieval_wand"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "SortMergeJoin" not in plan
@@ -637,7 +639,7 @@ def test_rag_topk_retrieval_wand_single_scan_no_smj(spark, sf_dir):
     # the theta seed pass keeps the static key's WindowGroupLimit
     # partial top-L (the quadratic guard survives inside WAND)
     assert "WindowGroupLimit" in plan
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
 
 
 def test_rag_topk_retrieval_bm25_keeps_ir_shape(spark, sf_dir):
@@ -664,7 +666,7 @@ def test_rag_topk_retrieval_wand_bm25_single_scan(spark, sf_dir):
     no cartesian, theta seed's WindowGroupLimit intact."""
     import re
 
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["rag_topk_retrieval_wand_bm25"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "SortMergeJoin" not in plan
@@ -673,7 +675,7 @@ def test_rag_topk_retrieval_wand_bm25_single_scan(spark, sf_dir):
     assert "WindowGroupLimit" in plan
     assert plan.count("documents.parquet") == 1
     assert plan.count("part.parquet") == 1
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
 
 
 def test_rag_topk_from_index_never_scans_corpus(spark, sf_dir):
@@ -682,7 +684,7 @@ def test_rag_topk_from_index_never_scans_corpus(spark, sf_dir):
     workload — the raw corpus appears nowhere at query time. Build
     cost is paid building the impact_l artifact before this plan exists;
     query-time cost is queries × terms × L, corpus-independent."""
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["rag_topk_from_index"](spark, sf_dir)
     plan = formatted_plan(df)
     assert plan.count("documents.parquet") == 0
@@ -714,7 +716,7 @@ def test_rag_wand_multi_two_scans_no_smj(spark, sf_dir):
     derivation scan — doc_id % predicate pushed down — and the
     match-filtered postings scan), part untouched, every join
     broadcast, never sort-merge, θ seed's WindowGroupLimit intact."""
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["rag_topk_retrieval_wand_multi"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "SortMergeJoin" not in plan
@@ -725,7 +727,7 @@ def test_rag_wand_multi_two_scans_no_smj(spark, sf_dir):
     assert plan.count("part.parquet") == 0
     # the sampling predicate reaches the derivation scan
     assert has_pushed_filters(df, "doc_id")
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
 
 
 def test_rag_bmw_same_shape_no_extra_block_exchange(spark, sf_dir):
@@ -734,17 +736,30 @@ def test_rag_bmw_same_shape_no_extra_block_exchange(spark, sf_dir):
     impact lists (HashPartitioning(token) satisfies the (token, blk)
     clustering), so the plan's exchange count stays within one of the
     plain multi-term WAND key's."""
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df_ms = E.queries()["rag_topk_retrieval_wand_multi"](spark, sf_dir)
     n_ms = count_exchanges(df_ms)
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["rag_topk_retrieval_bmw"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert plan.count("documents.parquet") == 2
     assert count_exchanges(df) <= n_ms + 1
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
+
+
+def test_rag_wand_plan_independent_of_session_history(spark, sf_dir):
+    """artifacts.clear resets what a WAND key remembers along with the
+    cache: built, cleared and built again, the plan is the same. (The
+    candidate-count memo outliving a bare clearCache made the second
+    build plan 18 exchanges where the first planned 21.)"""
+    artifacts.clear(spark)
+    first = count_exchanges(E.queries()["rag_topk_retrieval_wand_multi"](spark, sf_dir))
+    artifacts.clear(spark)
+    second = count_exchanges(E.queries()["rag_topk_retrieval_wand_multi"](spark, sf_dir))
+    artifacts.clear(spark)
+    assert first == second
 
 
 def test_rag_manifest_delta_scans_delta_only(spark, sf_dir):
@@ -756,7 +771,7 @@ def test_rag_manifest_delta_scans_delta_only(spark, sf_dir):
     state is what keeps its state side exchange-free — total
     exchanges stay <= 3 (delta aggregate, delta's merge re-shuffle,
     shard rollup)."""
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["rag_manifest_delta"](spark, sf_dir)
     plan = formatted_plan(df)
     assert plan.count("documents.parquet") == 1
@@ -772,7 +787,7 @@ def test_rag_index_delta_scans_delta_only(spark, sf_dir):
     the delta 3x, caught by this gate's first run) plus the two
     token-bucketed state tables; the affected-list rebuild keeps the
     WindowGroupLimit top-L partial; no sort-merge join anywhere."""
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["rag_index_delta"](spark, sf_dir)
     plan = formatted_plan(df)
     assert plan.count("documents.parquet") == 1
@@ -782,7 +797,7 @@ def test_rag_index_delta_scans_delta_only(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "WindowGroupLimit" in plan
     assert count_exchanges(df) <= 4
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
 
 
 def test_rag_wand_from_index_never_scans_corpus(spark, sf_dir):
@@ -790,7 +805,7 @@ def test_rag_wand_from_index_never_scans_corpus(spark, sf_dir):
     θ seed from the impact-L table, candidates + exact scoring from
     the full postings table, UB stats as a bucketed aggregate — zero
     documents scans in the query-time plan."""
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["rag_wand_from_index"](spark, sf_dir)
     plan = formatted_plan(df)
     assert plan.count("documents.parquet") == 0
@@ -798,7 +813,7 @@ def test_rag_wand_from_index_never_scans_corpus(spark, sf_dir):
     assert "kpws_rag_idx.impact_l_" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
 
 
 def test_rag_bm25_from_index_never_scans_corpus(spark, sf_dir):
@@ -807,7 +822,7 @@ def test_rag_bm25_from_index_never_scans_corpus(spark, sf_dir):
     stored impacts at build time, so the query-time plan reads ONLY
     the BM25 postings + impact-L tables plus the query workload — the
     raw corpus (and its dl/avgdl inputs) appears nowhere."""
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["rag_bm25_from_index"](spark, sf_dir)
     plan = formatted_plan(df)
     assert plan.count("documents.parquet") == 0
@@ -816,7 +831,7 @@ def test_rag_bm25_from_index_never_scans_corpus(spark, sf_dir):
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
 
 
 def test_rag_bmw_from_index_single_workload_scan(spark, sf_dir):
@@ -825,7 +840,7 @@ def test_rag_bmw_from_index_single_workload_scan(spark, sf_dir):
     plan adds zero window passes over postings — the only documents
     scan is the derived-workload generator (query side, sampled,
     doc_id % predicate pushed), never the corpus side."""
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["rag_bmw_from_index"](spark, sf_dir)
     plan = formatted_plan(df)
     assert plan.count("documents.parquet") == 1
@@ -835,7 +850,7 @@ def test_rag_bmw_from_index_single_workload_scan(spark, sf_dir):
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert has_pushed_filters(df, "doc_id")
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
 
 
 def test_rag_bm25_index_delta_scans_delta_only(spark, sf_dir):
@@ -843,7 +858,7 @@ def test_rag_bm25_index_delta_scans_delta_only(spark, sf_dir):
     branch the avgdl decision takes: ONE documents scan (the delta)
     plus the (tf, dl) state table; the re-rank keeps WindowGroupLimit
     partial; no sort-merge join."""
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["rag_bm25_index_delta"](spark, sf_dir)
     plan = formatted_plan(df)
     assert plan.count("documents.parquet") == 1
@@ -851,7 +866,7 @@ def test_rag_bm25_index_delta_scans_delta_only(spark, sf_dir):
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "WindowGroupLimit" in plan
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
 
 
 def test_ann_index_build_per_row_no_exchange(spark, sf_dir):
@@ -899,7 +914,7 @@ def test_rag_postings_delta_scans_delta_only(spark, sf_dir):
     """Full-postings maintenance reads the delta and the state tables
     only — one documents scan, both bucketed tables, no rank pass
     (nothing truncates), no sort-merge join."""
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["rag_postings_delta"](spark, sf_dir)
     plan = formatted_plan(df)
     assert plan.count("documents.parquet") == 1
@@ -908,14 +923,14 @@ def test_rag_postings_delta_scans_delta_only(spark, sf_dir):
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "WindowGroupLimit" not in plan
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
 
 
 def test_rag_blocked_delta_scans_delta_only(spark, sf_dir):
     """Blocked-postings maintenance reads the delta and the state
     tables only; re-blocking rides one token partitioning (rank +
     per-(token, blk) max) restricted to affected postings."""
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["rag_blocked_delta"](spark, sf_dir)
     plan = formatted_plan(df)
     assert plan.count("documents.parquet") == 1
@@ -923,7 +938,7 @@ def test_rag_blocked_delta_scans_delta_only(spark, sf_dir):
     assert "kpws_rag_idx.base_blocked_" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
 
 
 def test_wire_decoder_ships_only_the_value_column(spark):

@@ -9,9 +9,6 @@ The descriptor-set builder itself (no protoc needed) is validated
 unconditionally with the in-repo wire-format parser.
 """
 
-import os
-import tempfile
-
 import pytest
 
 from kafka_parquet_writer_spark.sources.decoders import (
@@ -50,11 +47,11 @@ def test_descriptor_set_structure_parses():
     assert [f[5][0] for f in got_fields] == [9, 3, 5, 5]
 
 
-def test_from_protobuf_roundtrip_when_jar_present(spark):
+def test_from_protobuf_roundtrip_when_jar_present(spark, tmp_path):
     """End-to-end tier-1 decode of reference-shaped messages. Skips
     (does not silently pass) when the spark-protobuf jar is absent."""
     desc = build_file_descriptor_set("TestMessage", REF_FIELDS)
-    path = os.path.join(tempfile.mkdtemp(prefix="kpws_desc_"), "desc.bin")
+    path = str(tmp_path / "desc.bin")
     with open(path, "wb") as f:
         f.write(desc)
     msgs = [
@@ -122,13 +119,13 @@ def test_descriptor_set_nested_and_repeated_structure():
     ]
 
 
-def test_from_protobuf_nested_repeated_when_jar_present(spark):
+def test_from_protobuf_nested_repeated_when_jar_present(spark, tmp_path):
     """Tier-1 end-to-end decode of a two-level message with a repeated
     field. Skips (does not silently pass) when the jar is absent."""
     desc = build_file_descriptor_set(
         "Outer", NESTED_FIELDS, nested={"Meta": META_FIELDS}
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="kpws_desc_"), "desc.bin")
+    path = str(tmp_path / "desc.bin")
     with open(path, "wb") as f:
         f.write(desc)
     msgs = [

@@ -2,7 +2,6 @@
 corrupt-record DLQ path (malformed input is data, never a crash)."""
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,15 +29,15 @@ def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_csv_round_trip(spark, orders_df):
-    d = os.path.join(tempfile.mkdtemp(prefix="kpws_csv_"), "orders")
+def test_csv_round_trip(spark, orders_df, tmp_path):
+    d = str(tmp_path / "orders")
     orders_df.write.mode("overwrite").option("header", "true").csv(d)
     back = valid_records(read_csv(spark, d, schema=SCHEMA))
     assert _sorted_rows(back) == _sorted_rows(orders_df)
 
 
-def test_json_round_trip(spark, orders_df):
-    d = os.path.join(tempfile.mkdtemp(prefix="kpws_json_"), "orders")
+def test_json_round_trip(spark, orders_df, tmp_path):
+    d = str(tmp_path / "orders")
     orders_df.write.mode("overwrite").json(d)
     back = valid_records(read_json(spark, d, schema=SCHEMA))
     assert _sorted_rows(back) == _sorted_rows(orders_df)
@@ -51,8 +50,8 @@ def test_schema_required_without_optin(spark):
         read_json(spark, "/tmp/nowhere")
 
 
-def test_malformed_json_goes_to_dlq_not_crash(spark):
-    d = tempfile.mkdtemp(prefix="kpws_badjson_")
+def test_malformed_json_goes_to_dlq_not_crash(spark, tmp_path):
+    d = str(tmp_path)
     with open(os.path.join(d, "data.json"), "w") as f:
         f.write('{"o_orderkey": 1, "o_custkey": 2, "o_totalprice": 3.5, "o_orderstatus": "O"}\n')
         f.write("THIS IS NOT JSON\n")

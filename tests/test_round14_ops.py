@@ -71,7 +71,7 @@ def test_bmw_candidates_subset_of_maxscore(spark, wand_multi_plan):
     assert bmw.count() > 0
 
 
-def test_bmw_blockmax_prunes_on_skewed_lists(spark):
+def test_bmw_blockmax_prunes_on_skewed_lists(spark, tmp_path):
     """On a corpus with one DEEP list whose impacts DECAY along it,
     block-max must generate strictly fewer candidates than whole-list
     MaxScore. Synthetic: 'hot' in all 400 docs with tf = 500 − doc
@@ -100,9 +100,7 @@ def test_bmw_blockmax_prunes_on_skewed_lists(spark):
         "query_id long, term string",
     )
 
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="kpws_bmw_skew_")
+    d = str(tmp_path)
     docs.write.mode("overwrite").parquet(f"{d}/documents.parquet")
     # _wand_plan only touches the documents table once qt is injected
     p = R._wand_plan(spark, d, qt=qt)
@@ -182,7 +180,7 @@ def test_manifest_delta_equals_batch_manifest(spark):
     assert batch.count() > 0
 
 
-def test_index_delta_passthrough_and_rebuild(spark):
+def test_index_delta_passthrough_and_rebuild(spark, tmp_path):
     """The fixture's 31-token vocabulary makes EVERY token affected
     (the adversarial extreme — the oracle proves semantics there but
     never exercises the passthrough). Synthetic corpus where token
@@ -190,8 +188,7 @@ def test_index_delta_passthrough_and_rebuild(spark):
     the base index BYTE-IDENTICALLY, affected lists must re-rank with
     the delta's df shift, and the union must equal the from-scratch
     full-corpus index."""
-    import tempfile
-
+    
     from pyspark.sql import functions as F
 
     from kafka_parquet_writer_spark.operators import rag_prep as R
@@ -207,7 +204,7 @@ def test_index_delta_passthrough_and_rebuild(spark):
     for d in range(0, 40, R.RAG_CDC_MOD):
         rows.append((d, "move move move"))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    d = tempfile.mkdtemp(prefix="kpws_idxdelta_")
+    d = str(tmp_path)
     docs.write.mode("overwrite").parquet(f"{d}/documents.parquet")
 
     inc = R.rag_index_delta(spark, d)

@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as E
+from kafka_parquet_writer_spark import artifacts
 from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
@@ -290,7 +291,7 @@ def test_quantile_sketch_single_shuffle_plan(spark, sf_dir):
         formatted_plan,
     )
 
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["agg_quantile_sketch"](spark, sf_dir)
     assert count_exchanges(df) == 1
     assert "MapInPandas" in formatted_plan(df)
@@ -305,7 +306,7 @@ def test_imi_single_shuffle_plan(spark, sf_dir):
         formatted_plan,
     )
 
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["dedup_embedding_ann_imi"](spark, sf_dir)
     plan = formatted_plan(df)
     assert count_exchanges(df) <= 2
@@ -354,13 +355,12 @@ def test_dsir_selects_raw_docs_only_in_rank_order(spark):
     assert keys == sorted(keys)
 
 
-def test_vacuum_removes_old_version_readability(spark):
+def test_vacuum_removes_old_version_readability(spark, tmp_path):
     """After vacuum(retain=1), time travel to v0 must FAIL (the
     retention contract: old snapshots become unreadable) while the
     live read still works — the half of the contract the value
     oracle's booleans cannot express."""
-    import tempfile
-
+    
     import pytest as _pytest
 
     from kafka_parquet_writer_spark.operators.table_queries import (
@@ -370,7 +370,7 @@ def test_vacuum_removes_old_version_readability(spark):
     from kafka_parquet_writer_spark.tablefmt import TxTable
 
     base = _base(spark, SF_SMOKE)
-    t = TxTable(tempfile.mkdtemp(prefix="kpws_vac_test_"))
+    t = TxTable(str(tmp_path))
     t.create(base)
     t.merge(spark, _bump(base), keys=["o_orderkey"])
     assert len(t.vacuum(retain_versions=1)) > 0
@@ -491,7 +491,7 @@ def test_asof_tolerance_single_shuffle_no_nlj(spark, sf_dir):
         formatted_plan,
     )
 
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     df = E.queries()["join_asof_tolerance"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
@@ -506,7 +506,7 @@ def test_ppl_buckets_sample_is_mapside(spark, sf_dir):
     global row_number window over every doc score."""
     from kafka_parquet_writer_spark.plans import formatted_plan
 
-    spark.catalog.clearCache()
+    artifacts.clear(spark)
     plan = formatted_plan(E.queries()["text_ppl_buckets"](spark, sf_dir))
     assert "MapInPandas" in plan
 

@@ -7,13 +7,12 @@ unionByName(allowMissingColumns) semantics at merge time.
 """
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 
-def test_merge_schema_reads_additive_columns(spark):
-    base = tempfile.mkdtemp(prefix="kpws_evo_")
+def test_merge_schema_reads_additive_columns(spark, tmp_path):
+    base = str(tmp_path)
     v1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
     v2 = spark.createDataFrame(
         [(3, "c", 30), (4, "d", 40)], "k int, v string, n int"
@@ -27,10 +26,10 @@ def test_merge_schema_reads_additive_columns(spark):
     assert rows[3] == ("c", 30)
 
 
-def test_default_read_is_first_file_schema(spark):
+def test_default_read_is_first_file_schema(spark, tmp_path):
     """Without mergeSchema Spark uses one file's footer — documents why
     the engine's readers keep schemas explicit (sources/readers.py)."""
-    base = tempfile.mkdtemp(prefix="kpws_evo2_")
+    base = str(tmp_path)
     spark.createDataFrame([(1, "a")], "k int, v string").write.parquet(
         os.path.join(base, "p=1")
     )

@@ -1,11 +1,12 @@
 """Streaming window/state operators (SURVEY.md §2C) verified against
 batch equivalents computed by Spark itself."""
 
-import tempfile
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_parquet_writer_spark import artifacts
 from kafka_parquet_writer_spark.catalog import load_table
 from kafka_parquet_writer_spark.operators.streaming_queries import (
     ANN_STREAM_BATCHES,
@@ -178,19 +179,19 @@ def test_staged_dir_stages_directory_tables(spark, tmp_path):
     assert out.collect()[0][0] == 100
 
 
+def _scratch_entries():
+    """The entries of this process's scratch root (its own dirs only:
+    the root is per process)."""
+    root = artifacts.scratch_root()
+    return set(os.listdir(root)) if os.path.isdir(root) else set()
+
+
 def _ckpt_dirs():
-    import os
-
-    tmp = tempfile.gettempdir()
-    return {n for n in os.listdir(tmp) if n.startswith("kpws_") and "ckpt" in n}
+    return {n for n in _scratch_entries() if "ckpt" in n}
 
 
-@pytest.fixture
-def private_tmp(tmp_path, monkeypatch):
-    """Point this process's mkdtemp at a private dir, so checkpoint
-    dirs of other processes sharing the system temp dir are not
-    counted."""
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+def _memory_views(spark):
+    return [t.name for t in spark.catalog.listTables() if t.name.startswith("kpws_stream_")]
 
 
 @pytest.mark.parametrize(
@@ -201,16 +202,18 @@ def private_tmp(tmp_path, monkeypatch):
         "stream_late_data_drop",  # caller-owned checkpoint across two runs
     ],
 )
-def test_memory_sink_runs_leave_no_checkpoint_dir(spark, sf_dir, key, private_tmp):
+def test_memory_sink_runs_leave_no_checkpoint_dir(spark, sf_dir, key):
     """Every stream run removes its checkpoint once the availableNow
     query has terminated, and a caller that passes its own checkpoint
-    removes it too; the result stays readable."""
+    removes it too; the result stays readable, and a memory sink's view
+    is gone from the session catalog."""
     from kafka_parquet_writer_spark.registry import QUERIES, load_all_operators
 
     load_all_operators()
     before = _ckpt_dirs()
     counts = [QUERIES[key](spark, sf_dir).count() for _ in range(2)]
     assert _ckpt_dirs() - before == set()
+    assert _memory_views(spark) == []
     assert counts[0] == counts[1] > 0
     if key == "stream_dedup":
         expected = (
@@ -237,7 +240,7 @@ STREAM_TWINS = [
     "twin,key,batches,joins", STREAM_TWINS, ids=[t[0] for t in STREAM_TWINS]
 )
 def test_stream_twin_equals_batch_zero_state(
-    spark, sf_dir, twin, key, batches, joins, private_tmp
+    spark, sf_dir, twin, key, batches, joins
 ):
     """A stream twin runs its batch key's head per micro-batch into a
     memory sink and the same tail batch-side, so it reproduces the
@@ -245,22 +248,18 @@ def test_stream_twin_equals_batch_zero_state(
     every staged micro-batch with zero streaming state (empty
     stateOperators, no StateStore node in the executed micro-batch
     plan), met its static side, if any, through a broadcast hash join
-    and never a sort-merge join, and the second run leaves no new
-    kpws_* entry in the temp dir."""
-    import os
-
+    and never a sort-merge join, the second run leaves no new entry in
+    the scratch root, and no memory-sink view stays in the catalog."""
     from kafka_parquet_writer_spark.operators import streaming_queries as SQ
     from kafka_parquet_writer_spark.registry import QUERIES, load_all_operators
-
-    def kpws():
-        return {n for n in os.listdir(tempfile.gettempdir()) if n.startswith("kpws_")}
 
     load_all_operators()
     batch = sorted(tuple(r) for r in QUERIES[key](spark, sf_dir).collect())
     first = sorted(tuple(r) for r in QUERIES[twin](spark, sf_dir).collect())
-    staged = kpws()
+    staged = _scratch_entries()
     second = sorted(tuple(r) for r in QUERIES[twin](spark, sf_dir).collect())
-    assert kpws() - staged == set()
+    assert _scratch_entries() - staged == set()
+    assert _memory_views(spark) == []
     assert first == second == batch and len(batch) > 0
     q = SQ.last_query
     assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == batches
@@ -272,7 +271,7 @@ def test_stream_twin_equals_batch_zero_state(
 
 
 def test_run_stream_restores_confs_and_checkpoint_when_a_batch_raises(
-    spark, tmp_path, private_tmp
+    spark, tmp_path
 ):
     """A foreachBatch function that raises fails the query; the runner
     still restores the shuffle-partition conf, leaves the state-store
@@ -310,7 +309,6 @@ def test_ranged_stream_stages_once_in_range_order(spark, tmp_path):
     no Spark job. The staged files hold consecutive ranges of the
     column, with mtimes increasing in range order."""
     import glob
-    import os
     import shutil
 
     from kafka_parquet_writer_spark.operators import streaming_queries as SQ
@@ -330,7 +328,7 @@ def test_ranged_stream_stages_once_in_range_order(spark, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert sc.statusTracker().getJobIdsForGroup("ranged_warm") == []
         assert (lo2, span2) == (lo, span) and stream.isStreaming
-        stage = SQ._ranged_stages[("docs", sf, 4)][0]
+        stage = artifacts._state[("scratch", "ranged", "docs", sf, 4)][0]
         files = sorted(glob.glob(os.path.join(stage, "*.parquet")))
         assert len(files) == 4
         mtimes = [os.stat(f).st_mtime_ns for f in files]
@@ -341,19 +339,19 @@ def test_ranged_stream_stages_once_in_range_order(spark, tmp_path):
             ).first()
             assert (lo_i, hi_i) == (i * span, (i + 1) * span - 1)
     finally:
-        staged = SQ._ranged_stages.pop(("docs", sf, 4), None)
+        staged = artifacts._state.pop(("scratch", "ranged", "docs", sf, 4), None)
         if staged:
             shutil.rmtree(staged[0], ignore_errors=True)
 
 
 def test_stage_dirs_are_removed_at_process_exit(sf_dir, tmp_path):
-    """``_staged_dir`` and ``_ranged_stream`` keep their stage dirs,
-    and ``stream_late_data_drop`` its output dir, for the whole process
-    and remove them when it exits: a child process with a private
-    TMPDIR runs ``stream_dedup``, stages a ranged split and runs
-    ``stream_late_data_drop``, and leaves no ``kpws_*src_`` or
-    ``kpws_late_out_`` dir behind."""
-    import os
+    """Every dir the package makes lives under one per-process scratch
+    root that goes when the process exits: a child process with a
+    private TMPDIR runs one key of each dir-making family (the stream
+    folds, a caller-owned checkpoint, a staged ranged split, a format
+    round trip, a transaction-log table, the row-size probe, an
+    artifact build and the default warehouse) and leaves no ``kpws_*``
+    entry behind."""
     import subprocess
     import sys
     import textwrap
@@ -363,33 +361,67 @@ def test_stage_dirs_are_removed_at_process_exit(sf_dir, tmp_path):
         f"""
         import os, sys
         sys.path.insert(0, {repo!r})
-        from kafka_parquet_writer_spark import QUERIES, get_spark
+        from kafka_parquet_writer_spark import QUERIES, artifacts, get_spark
         from kafka_parquet_writer_spark.operators import streaming_queries as SQ
+        from kafka_parquet_writer_spark.registry import load_all_operators
+        from kafka_parquet_writer_spark.sources.writers import measure_row_bytes
 
+        load_all_operators()
+        sf, tmp = sys.argv[1], sys.argv[2]
         spark = get_spark("stage-leak", cpus=1, shuffle_partitions=1)
-        assert QUERIES["stream_dedup"](spark, sys.argv[1]).count() > 0
-        SQ._ranged_stream(spark, sys.argv[1], "probe", spark.range(10), "id", 2)
-        assert QUERIES["stream_late_data_drop"](spark, sys.argv[1]).count() > 0
-        staged = [n for n in os.listdir(sys.argv[2]) if n.startswith("kpws_") and "src_" in n]
-        late = [n for n in os.listdir(sys.argv[2]) if n.startswith("kpws_late_out_")]
+        for key in (
+            "stream_dedup",
+            "stream_cdc_apply",
+            "stream_late_data_drop",
+            "stream_dedup_minhash",
+            "source_csv_roundtrip",
+            "table_merge_upsert",
+        ):
+            assert QUERIES[key](spark, sf).count() > 0, key
+        SQ._ranged_stream(spark, sf, "probe", spark.range(10), "id", 2)
+        assert measure_row_bytes(spark.range(10)) >= 1.0
+        tbl = artifacts.ensure_artifact(
+            spark, "probe", sf, lambda: spark.range(10),
+            bucket_by=None, sort_by=None, n_buckets=1,
+        )
+        assert spark.table(tbl).count() == 10
+        spark.sql("CREATE TABLE probe_managed USING parquet AS SELECT 1 AS x")
+        top = [n for n in os.listdir(tmp) if n.startswith("kpws_")]
+        inside = os.listdir(artifacts.scratch_root())
         spark.stop()
-        print("STAGED", len(staged), "LATE", len(late))
+        print("TOP", len(top), "INSIDE", " ".join(sorted(inside)))
         """
     )
     tmp = tmp_path / "tmp"
     tmp.mkdir()
     env = dict(os.environ, TMPDIR=str(tmp), SPARK_GRAFT_DRIVER_MEM="1g")
+    env.pop("SPARK_GRAFT_WAREHOUSE", None)
     out = subprocess.run(
         [sys.executable, "-c", script, sf_dir, str(tmp)],
         capture_output=True,
         text=True,
-        timeout=300,
+        timeout=600,
         env=env,
     )
-    assert "STAGED 2 LATE 1" in out.stdout, out.stderr[-3000:]
-    left = [
-        n
-        for n in os.listdir(tmp)
-        if n.startswith("kpws_") and ("src_" in n or "late_out_" in n)
-    ]
-    assert left == []
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("TOP ")]
+    assert lines, out.stderr[-3000:]
+    # while running: one scratch root, holding every family's dirs
+    line = lines[0]
+    top, inside = line.split(" INSIDE ")
+    assert top == "TOP 1", line
+    for prefix in (
+        "kpws_src_",
+        "kpws_events_src_",
+        "kpws_documents_src_",
+        "kpws_probe_src_",
+        "kpws_cdc_state_",
+        "kpws_dedup_run_",
+        "kpws_late_out_",
+        "kpws_fmt_csv_",
+        "kpws_tq_merge_",
+        "rag_idx",
+        "warehouse",
+    ):
+        assert f" {prefix}" in f" {inside}", (prefix, line)
+    assert "ckpt" not in inside and "rowprobe" not in inside, line
+    assert [n for n in os.listdir(tmp) if n.startswith("kpws_")] == []

@@ -4,7 +4,6 @@ reference's (0.9, 1.01) band — sampling estimate vs post-write check)."""
 
 import glob
 import os
-import tempfile
 
 from tests.conftest import SF_SMOKE
 from kafka_parquet_writer_spark.catalog import load_table
@@ -29,13 +28,13 @@ def test_measure_row_bytes_positive(spark):
     assert 1.0 <= rb <= 10_000.0
 
 
-def test_sized_write_hits_target_band(spark):
+def test_sized_write_hits_target_band(spark, tmp_path):
     ev = load_table(spark, SF_SMOKE, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
     # single partition so maxRecordsPerFile is the only splitter
     ev = ev.coalesce(1)
-    d = os.path.join(tempfile.mkdtemp(prefix="kpws_sized_"), "out")
+    d = str(tmp_path / "out")
     rb = measure_row_bytes(ev)
     target = max(1, int(rb * ev.count() / 4))  # aim for ~4 files
     write_parquet_sized(ev, d, target_file_bytes=target, row_bytes=rb)
@@ -47,7 +46,7 @@ def test_sized_write_hits_target_band(spark):
         assert 0.4 * target <= s <= 2.5 * target, sizes
 
 
-def test_calibrated_sizing_hits_reference_accuracy_band(spark):
+def test_calibrated_sizing_hits_reference_accuracy_band(spark, tmp_path):
     """Byte-accuracy parity with the reference's own rotation test
     (KafkaProtoParquetWriterTest.java:181-187): every complete
     (non-tail) file within (0.9, 1.01)× of the byte target, using the
@@ -58,7 +57,7 @@ def test_calibrated_sizing_hits_reference_accuracy_band(spark):
     slope, intercept = calibrate_file_sizing(ev, sample_rows=n)
     assert slope >= 1.0 and intercept >= 0.0
     target = int(slope * n / 4 + intercept)  # aim for ~4 files
-    d = os.path.join(tempfile.mkdtemp(prefix="kpws_calib_"), "out")
+    d = str(tmp_path / "out")
     write_parquet_sized(
         ev, d, target_file_bytes=target,
         row_bytes=slope, file_overhead_bytes=intercept,
@@ -69,9 +68,9 @@ def test_calibrated_sizing_hits_reference_accuracy_band(spark):
         assert 0.9 * target <= s <= 1.01 * target, sizes
 
 
-def test_sized_write_round_trip(spark):
+def test_sized_write_round_trip(spark, tmp_path):
     ev = load_table(spark, SF_SMOKE, "events").select("event_id", "value")
-    d = os.path.join(tempfile.mkdtemp(prefix="kpws_sized_rt_"), "out")
+    d = str(tmp_path / "out")
     write_parquet_sized(ev, d, target_file_bytes=1 << 20)
     back = spark.read.parquet(d)
     assert sorted(r["event_id"] for r in back.collect()) == sorted(
